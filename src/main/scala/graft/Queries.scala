@@ -1854,10 +1854,17 @@ object Queries {
     // former separate docs.count() was a second full scan
     val hist = docs.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true)
-    val total = hist.agg(sum("cnt")).head().getLong(0)
-    val cum = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
+    // sum over an empty table is null: no documents, total 0
+    val totalRow = hist.agg(sum("cnt")).head()
+    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
     val targets = Seq(25, 50, 75, 95, 99).map(p => (p, (p * total + 99) / 100))
     val tdf = s.createDataFrame(targets).toDF("pct", "rank")
+    // every rank is 0 and no value exists (the oracle's scalar subquery
+    // yields NULL)
+    if (total == 0L)
+      return tdf.withColumn("value", lit(null).cast(docs.schema("n_chars").dataType))
+        .orderBy("pct")
+    val cum = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
     cum.join(broadcast(tdf), col("cum") >= col("rank"))
       .groupBy("pct", "rank").agg(min("n_chars").as("value"))
       .orderBy("pct")

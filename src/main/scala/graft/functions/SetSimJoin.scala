@@ -56,8 +56,19 @@ object SetSimJoin {
   private def buildDict(toks: DataFrame): DataFrame =
     toks.groupBy("tok").agg(count(lit(1)).as("df")).localCheckpoint(true)
 
+  /** Ranks are ints on the prefix path (join key and sorted rank arrays). */
+  private val MaxRank: Long = Int.MaxValue
+
+  /** Fails loudly, before any rank is cast, when a vocabulary of `size`
+    * tokens has more tokens than `rankLimit` distinct int ranks. */
+  private def requireRankable(size: Long, rankLimit: Long): Unit =
+    require(size <= rankLimit,
+      s"SetSimJoin: a vocabulary of $size tokens exceeds the int rank limit of $rankLimit")
+
   /** Rarest-first int rank per token, distributed (no SinglePartition):
-    * the (df asc, tok asc) total order of the WWW'07 family. */
+    * the (df asc, tok asc) total order of the WWW'07 family. The routed
+    * entry points bound the vocabulary by [[MaxRank]] first, so the cast
+    * cannot wrap. */
   private def rankedDict(dict: DataFrame): DataFrame =
     GlobalRank.byLongStringKey(dict, "df", "tok", "rank64")
       .select(col("tok"), col("rank64").cast("int").as("rank"))
@@ -211,11 +222,18 @@ object SetSimJoin {
     * larger to prefix filtering — both exact, same output; one shared
     * dictionary pass makes the routing decision. */
   def jaccardSelfJoin(docs: DataFrame, idCol: String, wordsCol: String,
-                      tNum: Long, tDen: Long): DataFrame = {
+                      tNum: Long, tDen: Long): DataFrame =
+    jaccardSelfJoin(docs, idCol, wordsCol, tNum, tDen, MaxRank)
+
+  /** [[jaccardSelfJoin]] with the vocabulary bound lowered (tests). */
+  private[graft] def jaccardSelfJoin(docs: DataFrame, idCol: String, wordsCol: String,
+                                     tNum: Long, tDen: Long, rankLimit: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
     val dict = buildDict(toks)
+    val size = dict.count()
+    requireRankable(size, rankLimit)
     val dense =
-      if (dict.count() <= MaxDenseBits) denseSets(toks, dict) else None
+      if (size <= MaxDenseBits) denseSets(toks, dict) else None
     dense match {
       case Some((sets, masks)) => denseJaccard(sets, masks, tNum, tDen)
       case None                => prefixJaccard(toks, dict, tNum, tDen)
@@ -262,8 +280,10 @@ object SetSimJoin {
                           tNum: Long, tDen: Long): DataFrame = {
     val toks = tokensOf(docs, idCol, wordsCol)
     val dict = buildDict(toks)
+    val size = dict.count()
+    requireRankable(size, MaxRank)
     val dense =
-      if (dict.count() <= MaxDenseBits) denseSets(toks, dict) else None
+      if (size <= MaxDenseBits) denseSets(toks, dict) else None
     dense match {
       case Some((sets, masks)) => denseContainment(sets, masks, tNum, tDen)
       case None                => prefixContainment(toks, dict, tNum, tDen)

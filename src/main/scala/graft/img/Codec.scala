@@ -1,6 +1,7 @@
 package graft.img
 
-import java.awt.image.BufferedImage
+import java.awt.{Point, Rectangle}
+import java.awt.image.{BufferedImage, DataBufferByte}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
@@ -12,6 +13,11 @@ final case class Raster(data: Array[Byte], w: Int, h: Int, channels: Int) {
   def pixelOffset(row: Int, col: Int): Int = (row * w + col) * channels
 }
 
+/** Tile codecs. [[decodeBGR]] decodes a whole png/jpg payload;
+  * [[decodeBGRWindow]] decodes only a pixel window of it (the scoring
+  * path's decode, see graft.pipeline.ScoreFragments) and leaves the rest
+  * of the raster 0; [[fuseBGRIWindow]] builds the BGR+Ir raster of the
+  * IRGB kernels. */
 object Codec {
 
   // ImageIO defaults to disk-backed stream caches (temp file per decode!)
@@ -31,16 +37,70 @@ object Codec {
       if (buf.length == w * h * 3) return Raster(buf, w, h, 3)
     }
     val out = new Array[Byte](w * h * 3)
-    val argb = img.getRGB(0, 0, w, h, null, 0, w)
-    var i = 0
-    while (i < w * h) {
-      val p = argb(i)
-      out(i * 3) = (p & 0xff).toByte            // B
-      out(i * 3 + 1) = ((p >> 8) & 0xff).toByte // G
-      out(i * 3 + 2) = ((p >> 16) & 0xff).toByte // R
-      i += 1
-    }
+    putBGR(img, out, w, 0, 0)
     Raster(out, w, h, 3)
+  }
+
+  /** Converts `img` through `getRGB` and writes it as BGR into the
+    * `w`-pixel-wide raster buffer `out`, top-left pixel at (x0, y0). */
+  private def putBGR(img: BufferedImage, out: Array[Byte], w: Int, x0: Int, y0: Int): Unit = {
+    val iw = img.getWidth; val ih = img.getHeight
+    val argb = img.getRGB(0, 0, iw, ih, null, 0, iw)
+    var r = 0
+    while (r < ih) {
+      var i = r * iw
+      var o = ((y0 + r) * w + x0) * 3
+      while (i < (r + 1) * iw) {
+        val p = argb(i)
+        out(o) = (p & 0xff).toByte            // B
+        out(o + 1) = ((p >> 8) & 0xff).toByte // G
+        out(o + 2) = ((p >> 16) & 0xff).toByte // R
+        i += 1; o += 3
+      }
+      r += 1
+    }
+  }
+
+  /** Decode only the window [x0..x1]×[y0..y1] (inclusive, clamped to the
+    * image) of a png/jpg payload whose header says `w`×`h`. Returns a
+    * full `w`×`h` BGR raster whose window pixels are bit-identical to
+    * [[decodeBGR]]; every pixel outside the window is 0. Returns null
+    * when the header size is not `w`×`h` — the caller then decodes in
+    * full and resizes.
+    *
+    * The cost falls with the window: with a source region the JPEG
+    * reader stops after the window's last row, and rows above the window
+    * cost less than rows inside it. When the reader's default pixel
+    * layout is TYPE_3BYTE_BGR (every RGB jpg/png) the window is decoded
+    * straight into the output raster; other layouts (grayscale, alpha)
+    * decode the window alone and convert it through `getRGB` as
+    * [[decodeBGR]] does. */
+  def decodeBGRWindow(bytes: Array[Byte], w: Int, h: Int,
+                      x0: Int, y0: Int, x1: Int, y1: Int): Raster = {
+    val in = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+    val readers = ImageIO.getImageReaders(in)
+    require(readers.hasNext, "undecodable image payload")
+    val reader = readers.next()
+    try {
+      reader.setInput(in, true, true)
+      if (reader.getWidth(0) != w || reader.getHeight(0) != h) return null
+      val wx0 = math.max(x0, 0); val wx1 = math.min(x1, w - 1)
+      val wy0 = math.max(y0, 0); val wy1 = math.min(y1, h - 1)
+      require(wx0 <= wx1 && wy0 <= wy1, s"empty decode window [$x0..$x1]x[$y0..$y1]")
+      val param = reader.getDefaultReadParam
+      param.setSourceRegion(new Rectangle(wx0, wy0, wx1 - wx0 + 1, wy1 - wy0 + 1))
+      val types = reader.getImageTypes(0)
+      if (types.hasNext && types.next().getBufferedImageType == BufferedImage.TYPE_3BYTE_BGR) {
+        val full = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+        param.setDestination(full)
+        param.setDestinationOffset(new Point(wx0, wy0))
+        reader.read(0, param)
+        return Raster(full.getRaster.getDataBuffer.asInstanceOf[DataBufferByte].getData, w, h, 3)
+      }
+      val out = new Array[Byte](w * h * 3)
+      putBGR(reader.read(0, param), out, w, wx0, wy0)
+      Raster(out, w, h, 3)
+    } finally { reader.dispose(); in.close() }
   }
 
   /** Fuse an RGB tile and a CIR tile into BGR+Ir, replicating the

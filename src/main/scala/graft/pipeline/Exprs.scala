@@ -115,13 +115,21 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
 
 /** Score all polygons of one tile-cell against the decoded tile:
   * returns array<struct(gid, npix, veg: array<long>)>. Decodes the tile
-  * once per row regardless of how many polygons cover it (the Spark
-  * analogue of the reference's LRU-amortized decode,
-  * image_loaders.py:215-227). Null/absent tile bytes -> the reference's
-  * zero-fill semantics via each kernel's onBlack value. Wrong-sized tiles
-  * are resized to tileSize (image_loaders.py:222-226). For IRGB kernels,
-  * `cirBytes` carries the same-cell CIR tile which is fused as the Ir
-  * plane with bicubic upscale (S3/J2, image_loaders.py:362-386). */
+  * at most once per row regardless of how many polygons cover it (the
+  * Spark analogue of the reference's LRU-amortized decode,
+  * image_loaders.py:215-227).
+  *
+  * What is decoded: only the union of the fragments' raster windows
+  * ([[PolyBlob.windowUnion]]) through [[Codec.decodeBGRWindow]] — the
+  * window pixels equal a full decode, everything outside it is 0 and is
+  * never read. A tile no fragment window meets is not decoded at all
+  * (and not counted in `tilesDecoded`). Null/absent tile bytes -> the
+  * reference's zero-fill semantics via each kernel's onBlack value.
+  * Wrong-sized tiles fall back to a full decode, an S10 warning and a
+  * resize to tileSize (image_loaders.py:222-226). For IRGB kernels,
+  * `cirBytes` carries the same-cell CIR tile, decoded in full and fused
+  * as the Ir plane with a bicubic upscale over the same window (S3/J2,
+  * image_loaders.py:362-386). */
 case class ScoreFragments(cell: Expression, bytes: Expression,
                           cirBytes: Expression, blobs: Expression,
                           tileSize: Int, kernelNames: Seq[String],
@@ -175,11 +183,15 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
     var i = 0
     while (i < blobArr.length) { pps(i) = PolyBlob.deserialize(blobArr(i)); i += 1 }
 
+    // decode only the union of the fragment windows — the only pixels
+    // scoreFragment reads — and nothing when no window meets the tile
+    val present = bytesV != null && bytesV.nonEmpty
     var raster: Raster = null
-    if (bytesV != null && bytesV.nonEmpty) {
+    if (present) PolyBlob.windowUnion(pps, e, n, ts, yDown).foreach { win =>
       metrics.foreach(_.tilesDecoded.add(1))
-      raster = Codec.decodeBGR(bytesV)
-      if (raster.w != ts || raster.h != ts) {
+      raster = Codec.decodeBGRWindow(bytesV, ts, ts, win.x0, win.y0, win.x1, win.y1)
+      if (raster == null) {
+        raster = Codec.decodeBGR(bytesV)
         // S10: per-tile resize warning, message shaped like the
         // reference's (image_loaders.py:222-224 — numpy shape order is
         // (rows, cols, channels), and the stray ')' is its own typo)
@@ -193,39 +205,17 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
         raster = Resize.bilinear(raster, ts, ts)
       }
       if (format == "IRGB") {
+        // the CIR tile is decoded in full: its bicubic upscale reads
+        // source pixels around the window
         val cir =
           if (cirV != null && cirV.nonEmpty) Codec.decodeBGR(cirV)
           else Raster(new Array[Byte](ts * ts * 3), ts, ts, 3) // zero Ir plane
-        // upscale Ir only inside the union of fragment raster windows —
-        // window pixels are bit-identical to a full-plane upscale and
-        // only they are ever read by scoreFragment
-        val tileX0 = e * ts; val tileY0 = n * ts
-        var ux0 = Int.MaxValue; var ux1 = Int.MinValue
-        var uy0 = Int.MaxValue; var uy1 = Int.MinValue
-        var k = 0
-        while (k < pps.length) {
-          val pp = pps(k)
-          val wx0 = math.max(pp.cropX0, tileX0)
-          val wx1 = math.min(pp.cropX1, tileX0 + ts - 1)
-          val wy0 = math.max(pp.cropY0, tileY0)
-          val wy1 = math.min(pp.cropY1, tileY0 + ts - 1)
-          if (wx0 <= wx1 && wy0 <= wy1) {
-            val cs = wx0 - tileX0; val ce = wx1 - tileX0
-            val rs = if (yDown) wy0 - tileY0 else ts - 1 - (wy1 - tileY0)
-            val re = if (yDown) wy1 - tileY0 else ts - 1 - (wy0 - tileY0)
-            if (cs < ux0) ux0 = cs
-            if (ce > ux1) ux1 = ce
-            if (rs < uy0) uy0 = rs
-            if (re > uy1) uy1 = re
-          }
-          k += 1
-        }
-        raster = Codec.fuseBGRIWindow(raster, cir, ux0, uy0, ux1, uy1)
+        raster = Codec.fuseBGRIWindow(raster, cir, win.x0, win.y0, win.x1, win.y1)
       }
     }
 
     metrics.foreach { m =>
-      if (raster == null) m.missingTileFragments.add(blobArr.length)
+      if (!present) m.missingTileFragments.add(blobArr.length)
       m.fragmentsScored.add(blobArr.length)
     }
     val out = new Array[Any](pps.length)

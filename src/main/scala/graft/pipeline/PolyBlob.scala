@@ -57,6 +57,38 @@ object PolyBlob {
     Prepared(gid, cx0, cx1, cy0, cy1, new MPoly(polys))
   }
 
+  /** A window of one tile's raster: columns x0..x1 and rows y0..y1,
+    * inclusive, counted from the raster's top-left pixel. */
+  final case class Window(x0: Int, y0: Int, x1: Int, y1: Int)
+
+  /** Bounding box of the raster windows of every fragment of tile
+    * (cellE, cellN) — the only pixels [[scoreFragment]] reads — or None
+    * when no fragment window meets the tile (e.g. the extra fragments of
+    * a hex-grid superset match, which score zero pixels). `yDown` as in
+    * [[scoreFragment]]. */
+  def windowUnion(pps: Array[Prepared], cellE: Int, cellN: Int, ts: Int,
+                  yDown: Boolean = false): Option[Window] = {
+    val tileX0 = cellE * ts; val tileY0 = cellN * ts
+    var ux0 = Int.MaxValue; var ux1 = Int.MinValue
+    var uy0 = Int.MaxValue; var uy1 = Int.MinValue
+    var k = 0
+    while (k < pps.length) {
+      val pp = pps(k)
+      val wx0 = math.max(pp.cropX0, tileX0)
+      val wx1 = math.min(pp.cropX1, tileX0 + ts - 1)
+      val wy0 = math.max(pp.cropY0, tileY0)
+      val wy1 = math.min(pp.cropY1, tileY0 + ts - 1)
+      if (wx0 <= wx1 && wy0 <= wy1) {
+        val rs = if (yDown) wy0 - tileY0 else ts - 1 - (wy1 - tileY0)
+        val re = if (yDown) wy1 - tileY0 else ts - 1 - (wy0 - tileY0)
+        ux0 = math.min(ux0, wx0 - tileX0); ux1 = math.max(ux1, wx1 - tileX0)
+        uy0 = math.min(uy0, rs); uy1 = math.max(uy1, re)
+      }
+      k += 1
+    }
+    if (ux0 > ux1) None else Some(Window(ux0, uy0, ux1, uy1))
+  }
+
   /** Score one (polygon, tile-cell) fragment: masked pixel count and
     * per-kernel vegetation counts. Exactly the per-cell restriction of the
     * reference's mosaic mask + index + count
@@ -64,7 +96,8 @@ object PolyBlob {
     *
     * @param raster decoded tile, or null for a missing tile (the reference
     *               zero-fills absent mosaic regions — kernels evaluate
-    *               their onBlack value)
+    *               their onBlack value); only the pixels inside the
+    *               fragment's window (see [[windowUnion]]) are read
     * @return (npix, vegCounts) — zeros when the fragment window is empty */
   /** @param yDown web-mercator orientation: cell y and pixel rows grow
     *              southward with an UNFLIPPED raster affine

@@ -1884,6 +1884,17 @@ class OperatorsSpec extends AnyFunSuite {
       (95, 190L, 190L), (99, 198L, 198L)))
   }
 
+  test("exact quantiles (q63) on an empty documents table: rank 0, null values") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-doc-empty").toString
+    (0L until 10L).map(i => (i, "x", i + 1)).toDF("doc_id", "text", "n_chars")
+      .limit(0).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q63_exact_quantiles")(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.isNullAt(2))).toSeq
+    // the oracle's ceil(p*0/100) = 0 and its scalar subquery finds no row
+    assert(got == Seq(25, 50, 75, 95, 99).map(p => (p, 0L, true)))
+  }
+
   test("int8 quantize (q65): affine code map, clamp, constant-vector edge") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
@@ -2674,6 +2685,20 @@ class OperatorsSpec extends AnyFunSuite {
         .select("tok", "rk").collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(got == want, s"buckets=$b")
     }
+  }
+
+  test("SetSimJoin fails loudly when the vocabulary exceeds the int rank limit") {
+    import spark.implicits._
+    val docs = (0 until 10)
+      .map(i => (i.toLong, (0 until 8).map(j => s"w${(i * 3 + j) % 100}")))
+      .toDF("doc_id", "words")
+    val vocab = docs.select(explode($"words")).distinct().count()
+    val err = intercept[IllegalArgumentException](
+      functions.SetSimJoin.jaccardSelfJoin(docs, "doc_id", "words", 9L, 10L, vocab - 1))
+    assert(err.getMessage.contains(
+      s"SetSimJoin: a vocabulary of $vocab tokens exceeds the int rank limit of ${vocab - 1}"))
+    // at the limit it runs
+    functions.SetSimJoin.jaccardSelfJoin(docs, "doc_id", "words", 9L, 10L, vocab).collect()
   }
 
   test("SetSimJoin sparse path: no SinglePartition in any executed or final plan") {

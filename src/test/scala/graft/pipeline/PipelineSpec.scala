@@ -156,6 +156,43 @@ class PipelineSpec extends AnyFunSuite {
     assert(hxShuffle == hx, "hex shuffle-join path diverged from broadcast path")
   }
 
+  test("hex-grid superset matches decode exactly the square grid's tiles") {
+    // a tile whose hex-matched polygons all miss it has an empty window
+    // union and is not decoded: both grids decode exactly the tiles some
+    // polygon window meets
+    val gardens = Synthetic.gardens(spark, 40, gridW, gridH)
+    val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
+    def decoded(grid: graft.index.GridSystem): (Long, Long) = {
+      val m = PipelineMetrics.create(spark)
+      VegPipeline.run(spark, gardens, tiles, VegPipeline.Config(tileSize = ts,
+        handleMissingTiles = false, grid = grid, metrics = Some(m))).collect()
+      (m.tilesDecoded.value, m.fragmentsScored.value)
+    }
+    val (sqTiles, sqFrags) = decoded(graft.index.GridSystem.Square)
+    val (hxTiles, hxFrags) = decoded(graft.index.GridSystem.Hex(1.7))
+    assert(hxFrags > sqFrags, "fixture should produce extra hex fragments")
+    assert(sqTiles > 0 && hxTiles == sqTiles)
+  }
+
+  test("windowUnion bounds every fragment window in both row orientations") {
+    val sq = graft.geom.MPoly.fromPolygonCoords(Seq(Seq(
+      Seq(0.0, 0.0), Seq(1.0, 0.0), Seq(1.0, 1.0), Seq(0.0, 1.0), Seq(0.0, 0.0))))
+    // tile (10, 20) at ts = 64 spans pixels x 640..703, y 1280..1343
+    def frag(x0: Int, x1: Int, y0: Int, y1: Int) =
+      PolyBlob.Prepared(0L, x0, x1, y0, y1, sq)
+    val pps = Array(
+      frag(600, 650, 1300, 1310), // clipped on the left
+      frag(690, 800, 1330, 1400), // clipped on the right and the top
+      frag(0, 10, 0, 10))         // misses the tile
+    // northing-up: tile row = 63 - (y - 1280)
+    assert(PolyBlob.windowUnion(pps, 10, 20, 64) ==
+      Some(PolyBlob.Window(0, 0, 63, 43)))
+    // y-down: tile row = y - 1280
+    assert(PolyBlob.windowUnion(pps, 10, 20, 64, yDown = true) ==
+      Some(PolyBlob.Window(0, 20, 63, 63)))
+    assert(PolyBlob.windowUnion(pps.takeRight(1), 10, 20, 64).isEmpty)
+  }
+
   test("covering-range pruning reaches the parquet scan and preserves results") {
     val dir = java.nio.file.Files.createTempDirectory("prune").toString + "/tiles"
     Synthetic.tiles(spark, gridW, gridH, ts).write.parquet(dir)
