@@ -1,55 +1,22 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
 
-import graft.data.Synthetic
-
-/** One-shot generator for the cached benchmark parquet tables (same paths
-  * Bench.benchData expects under data/gen). Run ahead of a bench so the
-  * timed region measures the engine, not the generator.
-  *
-  * args: gridW gridH tileSize nGardens
-  *
-  * The grid must stay inside the valid OSGB code range from the
-  * synthetic base (400,100): gridW <= 400 (eastings <= 799) and
-  * gridH <= 1200 (northings <= 1299) — tiles beyond it get NULL
-  * image_ids and would be dead weight a throughput denominator must not
-  * count (this is what round-3 fixed: the old 576x576 table had only
-  * 400x576 valid ids).
-  */
+/** Writes the benchmark's cached parquet tables (`Bench.benchData` for
+  * SPARK_GRAFT_SF_DIR, under data/gen) ahead of a bench run, so the timed
+  * region measures the engine, not the generator. */
 object GenData {
   def main(args: Array[String]): Unit = {
-    val gridW = if (args.length > 0) args(0).toInt else 400
-    val gridH = if (args.length > 1) args(1).toInt else 1200
-    val ts = if (args.length > 2) args(2).toInt else 256
-    val nGardens = if (args.length > 3) args(3).toLong else 80000L
-    require(gridW <= 400 && gridH <= 1200,
-      s"grid ${gridW}x$gridH exceeds the valid OSGB code range from base (400,100)")
     val spark = SparkSession.builder()
       .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
       .appName("graft-gendata")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val tilesPath = s"data/gen/tilesjpg_g${gridW}x${gridH}_ts$ts"
-    val gardensPath = s"data/gen/gardens_n${nGardens}_g${gridW}x$gridH"
-    if (!Files.exists(Paths.get(tilesPath))) {
-      // jpg tiles (reference format) with small row groups: with fat
-      // binary rows, default 128 MB row groups make every reading task
-      // buffer ~128 MB — 32 concurrent tasks then exceed the local heap
-      Synthetic.tilesJpg(spark, gridW, gridH, ts).repartition(768)
-        .write.mode("overwrite")
-        .option("parquet.block.size", (4 * 1024 * 1024).toString)
-        .parquet(tilesPath)
-      println(s"wrote $tilesPath")
-    }
-    if (!Files.exists(Paths.get(gardensPath))) {
-      Synthetic.gardens(spark, nGardens, gridW, gridH).repartition(8)
-        .write.mode("overwrite").parquet(gardensPath)
-      println(s"wrote $gardensPath")
-    }
-    spark.stop()
+    try {
+      val bd = Bench.benchData(spark, Bench.sfDir)
+      Seq(bd.tilesPath, bd.gardensPath, bd.tilesQuarterPath, bd.cirQuarterPath, bd.geojsonlPath)
+        .foreach(p => println(s"ready $p"))
+    } finally spark.stop()
   }
 }

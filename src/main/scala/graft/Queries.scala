@@ -3782,7 +3782,12 @@ object Queries {
     val n = 100L
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").cast("long").as("w"))
-    val total = docs.agg(sum("w")).head().getLong(0)
+    // an empty table sums to null, zero-length docs to 0: either way
+    // there is no weight line to cut, so no picks (as in the oracle)
+    val totalRow = docs.agg(sum("w")).head()
+    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
+    if (total == 0L)
+      return docs.select(lit(0L).as("k"), col("doc_id"), col("w")).limit(0)
     graft.functions.PrefixSum.runningTotal(docs, "doc_id", "w", "cum")
       .withColumn("cb", col("cum") - col("w"))
       .withColumn("m_lo", expr(s"(2L * ${n}L * cb + ${total}L - 1L) div ${total}L"))

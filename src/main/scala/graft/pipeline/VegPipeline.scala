@@ -24,9 +24,9 @@ import graft.kernel.Kernels
   *
   * Skew: dense cells cost per-tile work proportional to covering polygons;
   * no shuffle key carries image bytes, so AQE's skew-join handling plus the
-  * small fragment rows keep hot cells bounded. When the polygon side
-  * exceeds broadcast size, set broadcastPolys=false: the same plan runs as
-  * a shuffled join co-partitioned on cell (tiles shuffle once; pre-bucket
+  * small fragment rows keep hot cells bounded. When the polygon side's
+  * estimated size exceeds broadcastMaxBytes, the same plan runs as a
+  * shuffled join co-partitioned on cell (tiles shuffle once; pre-bucket
   * the tile table by cell to eliminate even that at scale).
   */
 object VegPipeline extends org.apache.spark.internal.Logging {
@@ -34,7 +34,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   final case class Config(
       tileSize: Int = 256,
       kernelNames: Seq[String] = Seq("greenleaf"),
-      broadcastPolys: Boolean = true,
       handleMissingTiles: Boolean = true,
       /** Some(zoom): the web-mercator loader path (slippy "z/x/y" tiles,
         * y-down raster, area in tile^2 units, image_loaders.py:32-158). */
@@ -44,14 +43,10 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         * auto-disabled and the same plan runs as the shuffled cell join
         * (the reference user never picks an execution strategy — the
         * cache self-sizes, analyse_polygons.py:203-206 — so the engine
-        * must not OOM the driver just because broadcastPolys defaulted
-        * to true on an oversized garden set). 2 GiB default: well under
-        * driver/executor headroom and Spark's 8 GiB broadcast hard cap. */
+        * must not OOM the driver on an oversized garden set). 2 GiB
+        * default: well under driver/executor headroom and Spark's 8 GiB
+        * broadcast hard cap. */
       broadcastMaxBytes: Long = 2L << 30,
-      /** >1 and !broadcastPolys: replicate the polygon side saltFactor
-        * times and spray tiles across salts, spreading skewed (dense
-        * urban) cells over partitions in the shuffle-join path. */
-      saltFactor: Int = 1,
       /** Push the polygon set's covering range into the tile scan as an
         * image_id predicate (the reference never reads a tile outside the
         * covering range, image_loaders.py:266-269). Canonical-id IN set
@@ -303,19 +298,17 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       "missing-tile zero-fill enumerates expected TILES, which only the " +
         "square grid keys; use handleMissingTiles=false with a hex grid")
 
-    val cellPolys = index.cellPolys
     // automatic path selection: the broadcast-lookup formulation only when
     // the estimated lookup size fits the configured ceiling; otherwise the
     // shuffled cell join, without the caller having to know (What a user
     // of the reference never configures, the engine must not OOM over).
-    val useBroadcast = cfg.broadcastPolys && {
+    val useBroadcast = {
       val est = index.broadcastEstimateBytes
       if (est > cfg.broadcastMaxBytes)
         logWarning(s"polygon index estimated at $est bytes exceeds " +
           s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
       est <= cfg.broadcastMaxBytes
     }
-    val useSalt = !useBroadcast && cfg.saltFactor > 1
 
     def prune(df: DataFrame): DataFrame = pruneTiles(df, index, cfg)
     val prunedTiles = prune(tiles)
@@ -334,7 +327,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     // Deliberately a SortMergeJoin: each side's payload crosses exactly
     // one Exchange (the floor for a non-co-located layout) and SMJ
     // spills gracefully. A shuffle_hash hint was MEASURED WORSE here
-    // (IrgbProbe irgb_quarter 2.49 -> 2.87 s min with a 34 s GC-bound
+    // (IRGB quarter-table job 2.49 -> 2.87 s min with a 34 s GC-bound
     // outlier): the build side pins a partition's whole CIR payload in
     // an in-memory HashedRelation, which is exactly the §3.1 OOM risk
     // for fat rows. The zero-Exchange answer is the bucketed layout
@@ -358,45 +351,30 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         cfg.grid)))
     val joinKey = if (hexGrid) "jcell" else "cell"
 
-    val scored =
+    val (matched, scoreCol) =
       if (useBroadcast) {
         // map-side-join formulation: the cell→blobs lookup is an
         // executor-shared Broadcast built ONCE per index lifetime
         // (index.broadcastLookup) — a BroadcastHashJoin would rebuild its
         // HashedRelation per query / per streaming micro-batch. Uncovered
         // cells yield an empty fragment array, i.e. inner-join semantics.
-        val scoreCol = ec(ScoreFragments(
+        (tilesKeyed, ec(ScoreFragments(
           ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")),
           ee(lit(null).cast("array<binary>")),
           cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
           metrics = cfg.metrics, lookup = Some(index.broadcastLookup),
-          joinCell = if (hexGrid) Some(ee(col("jcell"))) else None))
-        tilesKeyed
-          .select(explode(scoreCol).as("s"))
-          .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
+          joinCell = if (hexGrid) Some(ee(col("jcell"))) else None)))
       } else {
         val polysKeyed =
-          if (hexGrid) cellPolys.withColumnRenamed("cell", "jcell") else cellPolys
-        val polysSide =
-          if (useSalt)
-            polysKeyed.withColumn("salt",
-              explode(array((0 until cfg.saltFactor).map(lit(_)): _*)))
-          else polysKeyed
-        val scoreCol = ec(ScoreFragments(
+          if (hexGrid) index.cellPolys.withColumnRenamed("cell", "jcell") else index.cellPolys
+        (tilesKeyed.join(polysKeyed, Seq(joinKey)), ec(ScoreFragments(
           ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")), ee(col("blobs")),
           cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
-          metrics = cfg.metrics))
-        val joinedTiles =
-          if (useSalt)
-            // salt from the (short) image_id, not the ~100 KB image bytes —
-            // any well-spread per-tile value works, hashing bytes is waste
-            tilesKeyed.withColumn("salt", pmod(hash(col("image_id")), lit(cfg.saltFactor)))
-              .join(polysSide, Seq(joinKey, "salt"))
-          else tilesKeyed.join(polysSide, Seq(joinKey))
-        joinedTiles
-          .select(explode(scoreCol).as("s"))
-          .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
+          metrics = cfg.metrics)))
       }
+    val scored = matched
+      .select(explode(scoreCol).as("s"))
+      .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
 
     if (cfg.handleMissingTiles)
       scored.union(missingTileSums(prunedTiles, index, cfg))

@@ -27,7 +27,7 @@ final case class ParquetTileCatalog(path: String, cirPath: Option[String] = None
 
 /** Bucketed/sorted tile-table write path: at scale, the tile table is
   * written ONCE bucketed by its join cell, so every subsequent
-  * shuffle-join run (broadcastPolys=false — the polygon side too big to
+  * shuffle-join run (the polygon side over broadcastMaxBytes, too big to
   * broadcast) streams the 100 TB side with NO Exchange: the bucketed
   * scan already carries HashPartitioning(cell, nBuckets) and only the
   * small polygon side shuffles to match. The reference's analogue is

@@ -1895,6 +1895,41 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == Seq(25, 50, 75, 95, 99).map(p => (p, 0L, true)))
   }
 
+  test("pps sample (q105) on an empty or zero-weight documents table: no picks") {
+    import spark.implicits._
+    val docs = (0L until 10L).map(i => (i, "x", 0L)).toDF("doc_id", "text", "n_chars")
+    for ((tag, table) <- Seq("empty" -> docs.limit(0), "zero" -> docs)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-doc-$tag").toString
+      table.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val res = SparkEntry.queries("q105_pps_sample")(spark, dir)
+      // the oracle's cut condition needs 0 <= (2k+1)*0 < 200*cum: never
+      assert(res.columns.toSeq == Seq("k", "doc_id", "w"), tag)
+      assert(res.collect().isEmpty, tag)
+    }
+  }
+
+  test("Inspect: per-run timing, row count, job lines and the physical plan") {
+    val dir = "/root/testdata/sf0.001"
+    val rows = SparkEntry.queries("q01_summary_agg")(spark, dir).count()
+    val out = tools.Inspect.run(spark, "q01_summary_agg", dir, 1)
+    assert(out.contains("q01_summary_agg warm") && out.contains("q01_summary_agg rep 1"), out)
+    assert(out.contains(s"rows=$rows"), out)
+    assert(out.linesIterator.exists(_.matches("""\s+job\s+\d+\s+[0-9.]+ s .*""")), out)
+    assert(out.contains("== final plan ==") && out.contains("== Physical Plan =="), out)
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("query registry: bench lists and oracles name registered queries") {
+    val keys = Queries.all.keySet
+    assert(Bench.headline.distinct.size == Bench.headline.size)
+    assert(Bench.headline.filterNot(keys).isEmpty, "headline names without a query")
+    assert(Bench.sidecarQueries.filterNot(keys).isEmpty, "sidecar names without a query")
+    assert(Bench.headline.intersect(Bench.sidecarQueries).isEmpty)
+    assert(keys == Queries.oracles.keySet,
+      s"queries without an oracle: ${keys -- Queries.oracles.keySet}; " +
+        s"oracles without a query: ${Queries.oracles.keySet -- keys}")
+  }
+
   test("int8 quantize (q65): affine code map, clamp, constant-vector edge") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString

@@ -152,7 +152,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     // and a hex run over the shuffle-join path agrees too
     val hxShuffle = keyed(VegPipeline.run(spark, gardens, tiles,
-      cfg(graft.index.GridSystem.Hex(1.7)).copy(broadcastPolys = false)).collect())
+      cfg(graft.index.GridSystem.Hex(1.7)).copy(broadcastMaxBytes = 0)).collect())
     assert(hxShuffle == hx, "hex shuffle-join path diverged from broadcast path")
   }
 
@@ -268,14 +268,14 @@ class PipelineSpec extends AnyFunSuite {
       s"unexpected per-query broadcast exchange:\n$plan")
   }
 
-  test("shuffle-join path (broadcastPolys=false) produces identical results") {
+  test("shuffle-join path (broadcastMaxBytes=0) produces identical results") {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     val a = VegPipeline.run(spark, gardens, tiles,
-      VegPipeline.Config(tileSize = ts, broadcastPolys = true))
+      VegPipeline.Config(tileSize = ts))
       .select("id", "npix", "frac_greenleaf").collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     val b = VegPipeline.run(spark, gardens, tiles,
-      VegPipeline.Config(tileSize = ts, broadcastPolys = false))
+      VegPipeline.Config(tileSize = ts, broadcastMaxBytes = 0))
       .select("id", "npix", "frac_greenleaf").collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(a.sameElements(b))
   }
@@ -355,7 +355,7 @@ class PipelineSpec extends AnyFunSuite {
       val bucketed = graft.sources.TileBuckets.read(spark, table)
       val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
       val idx = VegPipeline.buildIndex(spark, gardens, ts)
-      val cfg = VegPipeline.Config(tileSize = ts, broadcastPolys = false,
+      val cfg = VegPipeline.Config(tileSize = ts, broadcastMaxBytes = 0,
         handleMissingTiles = false)
       val sums = VegPipeline.fragmentSums(spark, idx, bucketed, cfg)
 
@@ -382,7 +382,8 @@ class PipelineSpec extends AnyFunSuite {
         .select("id", "npix", "frac_greenleaf").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
       val viaBroadcast = VegPipeline.scoreAgainst(spark, idx,
-          Synthetic.tiles(spark, gridW, gridH, ts), cfg.copy(broadcastPolys = true))
+          Synthetic.tiles(spark, gridW, gridH, ts),
+          VegPipeline.Config(tileSize = ts, handleMissingTiles = false))
         .select("id", "npix", "frac_greenleaf").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
       assert(viaBuckets.toSeq == viaBroadcast.toSeq)
@@ -555,12 +556,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(withPix.nonEmpty && withPix.exists(r => r.getAs[Double]("frac_greenleaf") > 0.1))
   }
 
-  test("salted shuffle path and metrics accumulators") {
+  test("shuffle path and metrics accumulators") {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     val m = graft.pipeline.PipelineMetrics.create(spark)
-    val salted = VegPipeline.run(spark, gardens, tiles,
-      VegPipeline.Config(tileSize = ts, broadcastPolys = false, saltFactor = 4,
+    val shuffled = VegPipeline.run(spark, gardens, tiles,
+      VegPipeline.Config(tileSize = ts, broadcastMaxBytes = 0,
         handleMissingTiles = false, metrics = Some(m)))
       .select("id", "npix", "frac_greenleaf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
@@ -568,8 +569,8 @@ class PipelineSpec extends AnyFunSuite {
       VegPipeline.Config(tileSize = ts, handleMissingTiles = false))
       .select("id", "npix", "frac_greenleaf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    assert(salted.toSeq == plain.toSeq)
-    // metrics: every matched (tile, salt-bucket) decode counted; fragments > 0
+    assert(shuffled.toSeq == plain.toSeq)
+    // metrics: every matched tile decode counted; fragments > 0
     assert(m.tilesDecoded.value > 0)
     assert(m.fragmentsScored.value > 0)
     assert(m.missingTileFragments.value == 0)
