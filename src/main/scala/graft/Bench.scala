@@ -186,39 +186,8 @@ object Bench {
       tilesQPath, cirQPath, gridHq, geojsonlPath)
   }
 
-  /** Timed relational queries. */
-  private[graft] val headline = Seq(
-    "q01_summary_agg", "q02_groupby_multi", "q06_spatial_sort",
-    "q11_dedup_exact", "q14_langid", "q16_embedding_topk", "q17_ngram_jaccard",
-    "q41_asof_join", "q42_range_join", "q43_repetition", "q44_keywords",
-    "q45_decontaminate", "q46_hash_split", "q47_dedup_clusters",
-    "q48_redact_pii", "q49_stratified_sample", "q50_pack_sequences",
-    "q51_vocab_oov", "q52_zorder", "q53_decontaminate_bloom",
-    "q54_mixture_upsample", "q55_image_quality", "q57_chunk_overlap",
-    "q58_shuffle_order", "q60_dup_spans", "q61_heavy_hitters",
-    "q62_gapfill_resample", "q63_exact_quantiles", "q64_lm_score",
-    "q65_quantize_int8", "q66_kmeans_assign", "q67_augment_image",
-    "q68_source_profile", "q69_source_overlap", "q70_tile_pyramid",
-    "q71_snapshot_diff", "q72_sliding_window", "q74_cube_rollup",
-    "q75_lang_pivot", "q76_curriculum_ntile", "q77_funnel",
-    "q78_retention_cohort", "q79_label_centroid", "q80_event_transitions",
-    "q81_hll_distinct", "q82_rrf_fusion", "q83_activity_bitmap",
-    "q85_star_rollup", "q86_trend_slope", "q87_agg_merge",
-    "q88_cdc_compact", "q89_source_gini", "q90_budget_apportion",
-    "q91_mad_outliers", "q92_scd2_intervals", "q93_countmin_sketch",
-    "q94_inverted_index", "q95_bm25_topk", "q96_sessionize",
-    "q97_rank_auc", "q98_cohen_kappa", "q99_pagerank", "q100_calibration",
-    "q101_ivfpq_adc", "q102_semdedup", "q103_triangle_census",
-    "q104_feature_gram", "q105_pps_sample", "q107_ppjoin", "q108_mosaic_ccl",
-    "q110_pca_power", "q111_negative_sample", "q117_span_coalesce",
-    "q118_weighted_reservoir", "q119_containment_join", "q120_radius_join",
-    "q121_collocation_lift", "q122_sorted_neighborhood",
-    "q125_image_canonical", "q127_bpe_pair_stats")
-
-  /** Left out of `headline`: they read fixtures/sidecars Verify's setup
-    * builds, which need not exist at bench time. */
-  private[graft] val sidecarQueries = Seq(
-    "q106_snapshot_scan", "q112_unicode_dedup", "q113_caption_audit", "q126_compaction_plan")
+  /** Timed relational queries: the registry rows marked `benched`. */
+  private val headline = Queries.registry.filter(_.benched)
 
   /** The dataset Bench and GenData read when SPARK_GRAFT_SF_DIR is unset. */
   private[graft] val DefaultSfDir = "/root/testdata/sf0.1"
@@ -281,7 +250,7 @@ object Bench {
     TileConfs.foreach { case (k, v) => tileS.conf.set(k, v) }
 
     // warmup (JIT + codegen caches), then interleaved min-of-N rounds
-    headline.foreach(name => SparkEntry.queries(name)(spark, sfDir).count())
+    headline.foreach(q => q.build(spark, sfDir).count())
     val idx0 = buildIndex(tileS, gardensPath, ts)
     tuneSplits(tileS, tilesPath, cpus)
     runFlagship(tileS, idx0, tilesPath, ts) // warm (JIT + scan caches)
@@ -320,13 +289,13 @@ object Bench {
 
     val headlineReps =
       (1 to headlineRounds).map { _ =>
-        headline.map(name => time(SparkEntry.queries(name)(spark, sfDir).count())._1) ++
+        headline.map(q => time(q.build(spark, sfDir).count())._1) ++
           Seq({ tuneSplits(tileS, tilesPath, cpus)
                 time(runFlagship(tileS, idx0, tilesPath, ts))._1 },
             time(runIrgb())._1, time(runIrgbBucketed())._1)
       }
     val queryTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    (headline ++ Seq("q30_veg_flagship", "q34_irgb_fused", "q34_irgb_bucketed"))
+    (headline.map(_.name) ++ Seq("q30_veg_flagship", "q34_irgb_fused", "q34_irgb_bucketed"))
       .zipWithIndex.foreach { case (name, i) =>
         queryTimes(name) = headlineReps.map(_(i)).min
       }
@@ -449,8 +418,9 @@ object Bench {
       val effM832: Double = w8 / (4.0 * w32)
       val kEff28: Double = kernel28._1 / (4.0 * kernel28._2)
       val kEff832: Double = kernel832._1 / (4.0 * kernel832._2)
-      /** Instrument quality: how well the hypervisor delivered cores
-        * during this attempt — the engine's own numbers play no part.
+      /** Instrument quality, reported beside the efficiencies: how well
+        * the host delivered cores during the run — the engine's own
+        * numbers play no part.
         * A kernel efficiency ABOVE 1 is itself a corruption signal (a
         * stall hit the low-thread probe), so quality penalizes distance
         * from the physical ideal rather than rewarding magnitude. */
@@ -459,24 +429,13 @@ object Bench {
         (q(kEff28) + q(kEff832)) / 2.0
       }
     }
-    def attemptOnce(): Attempt = {
+    val a = {
       val rounds = (1 to 2).map(_ => (repsAt(2, 2), repsAt(8, 2), repsAt(32, 2)))
       val (k28, k832) = kernelPair()
       Attempt(rounds.flatMap(_._1._1), rounds.flatMap(_._2._1), rounds.flatMap(_._3._1),
         rounds.flatMap(_._1._2), rounds.flatMap(_._2._2), rounds.flatMap(_._3._2),
         k28, k832)
     }
-    // Retry-on-degraded-epoch: the hypervisor withholds cores in whole
-    // epochs (kernel ceiling swings 0.3-0.95 within minutes). An attempt
-    // whose ceilings show a degraded host is re-measured (up to
-    // maxAttempts); the KEPT attempt is the one with the best INSTRUMENT
-    // quality — selected by kernel ceiling alone, never by the engine's
-    // own efficiency, so the selection cannot flatter the engine.
-    val maxAttempts = sys.env.getOrElse("SPARK_GRAFT_SCALING_ATTEMPTS", "3").toInt
-    val attempts = scala.collection.mutable.ArrayBuffer(attemptOnce())
-    while (attempts.size < maxAttempts && attempts.last.quality < 0.85)
-      attempts += attemptOnce()
-    val a = attempts.maxBy(_.quality)
     val (reps2, reps8, reps32) = (a.reps2, a.reps8, a.reps32)
     val (t2, t8, t32) = (a.t2, a.t8, a.t32)
     val (kernel28, kernel832) = (a.kernel28, a.kernel832)
@@ -510,11 +469,10 @@ object Bench {
         f""""kernel_t8_48k":${kernel832._1}%.3f,"kernel_t32_48k":${kernel832._2}%.3f,""" +
         f""""kernel_efficiency_2_8":$kernelEff28%.3f,"kernel_efficiency_8_32":$kernelEff832%.3f,""" +
         f""""twosize":$twosize,""" +
-        f""""attempts":${attempts.size},""" +
-        f""""attempt_qualities":[${attempts.map(x => f"${x.quality}%.3f").mkString(",")}],""" +
-        f""""attempt_eff_2_8":[${attempts.map(x => f"${x.eff28}%.3f").mkString(",")}],""" +
-        f""""attempt_eff_8_32":[${attempts.map(x => f"${x.eff832}%.3f").mkString(",")}],""" +
-        f""""attempt_eff_marginal_8_32":[${attempts.map(x => f"${x.effM832}%.3f").mkString(",")}]}"""
+        // single-element attempt arrays keep the record's key set
+        f""""attempts":1,"attempt_qualities":[${a.quality}%.3f],""" +
+        f""""attempt_eff_2_8":[${a.eff28}%.3f],"attempt_eff_8_32":[${a.eff832}%.3f],""" +
+        f""""attempt_eff_marginal_8_32":[${a.effM832}%.3f]}"""
     val irgbRate = bd.nTilesQuarter / tIrgb
     val extras =
       f""""irgb":{"tiles":${bd.nTilesQuarter},"t_sec":$tIrgb%.3f,"tiles_per_sec":$irgbRate%.1f,"rgb_per_tile_ratio":${(tIrgb / bd.nTilesQuarter) / (tFlag / nTiles)}%.2f,""" +

@@ -50,7 +50,7 @@ object Checkpoint {
     val toRun = pending.take(maxGroups)
 
     val tilesWithBucket = tiles
-      .withColumn("cell0", VegPipeline.tileCell(col("image_id")))
+      .withColumn("cell0", VegPipeline.keyToCell(cfg.webMercatorZoom)(col("image_id")))
       .where(col("cell0").isNotNull)
       .withColumn("bucket", pmod(hash(col("cell0")), lit(buckets)))
 
@@ -73,24 +73,11 @@ object Checkpoint {
     * once-only missing-tile zero-fill pass against the full tile table
     * (`tiles` must be the same table the groups partitioned). */
   def fractions(spark: SparkSession, index: VegPipeline.PolyIndex, tiles: DataFrame,
-                cfg: VegPipeline.Config, outDir: String): DataFrame = {
-    val nK = cfg.kernelNames.length
-    val partials = spark.read.parquet(s"$outDir/group=*")
-    val withMissing =
-      if (cfg.handleMissingTiles)
-        // zero-fill against the SAME pruned tile set each group scored
-        // (fragmentSums prunes internally): a parseable-but-non-canonical
-        // id dropped by the covering-range predicate must count as a
-        // missing tile here, not vanish from both passes
-        partials.unionByName(
-          VegPipeline.missingTileSums(VegPipeline.pruneTiles(tiles, index, cfg), index, cfg)
-            .select(Seq(col("gid"), col("npix")) ++
-              (0 until nK).map(i => col("veg")(i).as(s"veg_$i")): _*))
-      else partials
-    val agg = withMissing.groupBy("gid").agg(
-      sum("npix").as("npix"),
-      (0 until nK).map(i => sum(col(s"veg_$i")).as(s"veg_$i")): _*)
-    VegPipeline.fractionsFromSums(index, agg, cfg)
-      .drop("uprn", "sort_key")
-  }
+                cfg: VegPipeline.Config, outDir: String): DataFrame =
+    // zero-fill against the SAME pruned tile set each group scored
+    // (fragmentSums prunes internally): a parseable-but-non-canonical id
+    // dropped by the covering-range predicate must count as a missing
+    // tile here, not vanish from both passes
+    VegPipeline.fractionsFromPartials(index, spark.read.parquet(s"$outDir/group=*"),
+      VegPipeline.presentCells(VegPipeline.pruneTiles(tiles, index, cfg), cfg), cfg)
 }

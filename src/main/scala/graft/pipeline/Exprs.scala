@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.geom.MPoly
-import graft.geo.{Osgb, TileCode}
+import graft.geo.{Osgb, TileCode, WebMercator}
 import graft.img.{Codec, Raster, Resize}
 import graft.index.ZIndex
 import graft.kernel.{IndexKernel, Kernels}
@@ -50,20 +50,31 @@ object Exprs {
   val EPSG27700 = "urn:ogc:def:crs:EPSG::27700"
 }
 
-/** Per-garden preparation: CRS transform to km-tile space, centroid
-  * (original CRS), surface area m2, covering cells, spatial sort key and
+/** Per-garden preparation: projection to tile-unit space, centroid
+  * (original CRS), surface area, covering cells, spatial sort key and
   * the serialized pixel-space polygon blob.
   * (reference: calculate_indices.py:110-137 + image_loaders.py:201-213,
-  * 257-294 prep portions) */
+  * 257-294 prep portions)
+  *
+  * Two tile namings share everything after the projection:
+  *  - OSGB (`webMercatorZoom` None): CRS84 or EPSG:27700 to km tiles
+  *    (y north), area in m², sort key (easting, northing) km;
+  *  - web mercator (Some(zoom), the WebMercatorMapLoader path,
+  *    image_loaders.py:32-158): CRS84 only, to slippy (tileX, tileY-down)
+  *    at `zoom`, area in tile² units (explicitly not metric,
+  *    README.md:172), sort key (tileY, tileX) as the reference stores
+  *    the transformed bounds. */
 case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
                          tileSize: Int,
                          /** Covering-cell grid for the polygon⋈tile join.
                            * Square = one cell per km tile (reference
-                           * semantics). A hex grid (H3-style) covers via
-                           * the hexes of the covered tiles' CENTERS — a
-                           * superset match whose extra fragments score
-                           * zero pixels, so sums are bit-identical. */
-                         grid: graft.index.GridSystem = graft.index.GridSystem.Square)
+                           * semantics). A hex grid (H3-style, OSGB only)
+                           * covers via the hexes of the covered tiles'
+                           * CENTERS — a superset match whose extra
+                           * fragments score zero pixels, so sums are
+                           * bit-identical. */
+                         grid: graft.index.GridSystem = graft.index.GridSystem.Square,
+                         webMercatorZoom: Option[Int] = None)
     extends Expression with CodegenFallback {
   override def children: Seq[Expression] = Seq(gid, geometry, crs)
   override def nullable: Boolean = false
@@ -82,28 +93,35 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
     val crsV = crs.eval(input).asInstanceOf[UTF8String].toString
     val raw = Exprs.coordsToMPoly(coords)
 
-    val gKm = crsV match {
-      case Exprs.CRS84 => raw.map((lon, lat) => Osgb.toFractionalKmTile(lon, lat))
-      case Exprs.EPSG27700 => raw.map((e, n) => (e / 1000.0, n / 1000.0))
-      case other => throw new IllegalArgumentException(s"""crs_name="$other" is unsupported""")
+    val g = (webMercatorZoom, crsV) match {
+      case (Some(z), Exprs.CRS84) => raw.map { (lon, lat) =>
+        val (ty, tx) = WebMercator.latLongToTileYX(z, lat, lon)
+        (tx, ty)
+      }
+      case (None, Exprs.CRS84) => raw.map((lon, lat) => Osgb.toFractionalKmTile(lon, lat))
+      case (None, Exprs.EPSG27700) => raw.map((e, n) => (e / 1000.0, n / 1000.0))
+      case _ => throw new IllegalArgumentException(s"""crs_name="$crsV" is unsupported""")
     }
+    val slippy = webMercatorZoom.nonEmpty
 
     val (cx, cy) = raw.centroid
-    val area = gKm.area * 1000.0 * 1000.0
-    val (mnx, mny, mxx, mxy) = gKm.bounds
+    val area = if (slippy) g.area else g.area * 1000.0 * 1000.0 // image_loaders.py:119
+    val (mnx, mny, mxx, mxy) = g.bounds
     val sqCells = ZIndex.coverBounds(mnx, mny, mxx, mxy)
     val cells =
       if (grid == graft.index.GridSystem.Square) sqCells
       else sqCells.map(c =>
         grid.cellOf(ZIndex.cellE(c) + 0.5, ZIndex.cellN(c) + 0.5)).distinct
-    val sortKey = mnx.toInt.toLong * 1000L + mny.toInt.toLong
+    val sortKey =
+      if (slippy) mny.toInt.toLong * 1000L + mnx.toInt.toLong
+      else mnx.toInt.toLong * 1000L + mny.toInt.toLong
 
     val ts = tileSize
     val cropX0 = math.floor(mnx * ts).toInt
     val cropY0 = math.floor(mny * ts).toInt
     val cropX1 = math.floor(mxx * ts).toInt
     val cropY1 = math.floor(mxy * ts).toInt
-    val gPix = gKm.affine(ts, 0, 0, ts, 0, 0)
+    val gPix = g.affine(ts, 0, 0, ts, 0, 0)
     val blob = PolyBlob.serialize(gidV, cropX0, cropX1, cropY0, cropY1, gPix)
 
     InternalRow(blob, new GenericArrayData(cells), cx, cy, area, sortKey)
@@ -232,57 +250,6 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(cell = newChildren(0), bytes = newChildren(1), cirBytes = newChildren(2),
       blobs = newChildren(3), joinCell = newChildren.lift(4))
-}
-
-/** Web-mercator garden preparation (the WebMercatorMapLoader path,
-  * image_loaders.py:32-158): CRS84 only; geometry goes to (tileX,
-  * tileY-down) slippy coordinates at `zoom`; area stays in tile² units
-  * (explicitly not metric, README.md:172); cells are (x, y) slippy keys. */
-case class PrepareGardenWebMerc(gid: Expression, geometry: Expression, crs: Expression,
-                                zoom: Int, tileSize: Int)
-    extends Expression with CodegenFallback {
-  override def children: Seq[Expression] = Seq(gid, geometry, crs)
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("blob", BinaryType, nullable = false),
-    StructField("cells", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("cx", DoubleType, nullable = false),
-    StructField("cy", DoubleType, nullable = false),
-    StructField("area_m2", DoubleType, nullable = false),
-    StructField("sort_key", LongType, nullable = false)
-  ))
-
-  override def eval(input: InternalRow): Any = {
-    val gidV = gid.eval(input).asInstanceOf[Long]
-    val coords = geometry.eval(input).asInstanceOf[ArrayData]
-    val crsV = crs.eval(input).asInstanceOf[UTF8String].toString
-    if (crsV != Exprs.CRS84)
-      throw new IllegalArgumentException(s"""crs_name="$crsV" is unsupported""")
-    val raw = Exprs.coordsToMPoly(coords)
-    // (lon, lat) -> (x = tileX, y = tileY downward)
-    val gTile = raw.map { (lon, lat) =>
-      val (ty, tx) = graft.geo.WebMercator.latLongToTileYX(zoom, lat, lon)
-      (tx, ty)
-    }
-    val (cx, cy) = raw.centroid
-    val area = gTile.area // tile^2 units (image_loaders.py:119)
-    val (mnx, mny, mxx, mxy) = gTile.bounds
-    val cells = graft.index.ZIndex.coverBounds(mnx, mny, mxx, mxy)
-    // reference sort key uses the transformed bounds as stored: (tileY, tileX)
-    val sortKey = mny.toInt.toLong * 1000L + mnx.toInt.toLong
-
-    val ts = tileSize
-    val cropX0 = math.floor(mnx * ts).toInt
-    val cropY0 = math.floor(mny * ts).toInt
-    val cropX1 = math.floor(mxx * ts).toInt
-    val cropY1 = math.floor(mxy * ts).toInt
-    val gPix = gTile.affine(ts, 0, 0, ts, 0, 0)
-    val blob = PolyBlob.serialize(gidV, cropX0, cropX1, cropY0, cropY1, gPix)
-    InternalRow(blob, new GenericArrayData(cells), cx, cy, area, sortKey)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(gid = newChildren(0), geometry = newChildren(1), crs = newChildren(2))
 }
 
 /** Slippy key "z/x/y" -> packed cell id (null when zoom mismatches). */

@@ -36,7 +36,7 @@ object MosaicCcl {
     * O(4·ts) ints per tile — the CCL working set, not pixels). */
   def fragments(tiles: DataFrame, kernelName: String): (DataFrame, DataFrame) = {
     import graft.pipeline.Exprs.{col => ec, expr => ee}
-    val cell = VegPipeline.tileCell(col("image_id"))
+    val cell = VegPipeline.keyToCell(None)(col("image_id"))
     val base = tiles
       .withColumn("cell", cell).where(col("cell").isNotNull)
       .withColumn("t",

@@ -93,7 +93,7 @@ object GeoJson {
 /** S7-S10 sinks with byte-for-byte reference formatting
   * (analyse_polygons.py:122-186). The exact-parity writers stream ordered
   * rows on the driver (the reference's outputs are single files by
-  * definition); `writeDistributed` offers the scale path via df.write. */
+  * definition). */
 object Reports {
 
   /** Rows must already carry id, cx, cy, area_m2, sort_key, gid and
@@ -156,11 +156,6 @@ object Reports {
     } finally { veg.close(); t2u.close() }
   }
 
-  /** Scale path: the same tables as parquet/csv partitioned output. */
-  def writeDistributed(perGarden: DataFrame, outDir: String): Unit =
-    perGarden.drop("blob", "cells").write.mode("overwrite")
-      .option("header", "true").csv(outDir)
-
   /** S11 debug PNG sink (reference: calculate_indices.py:21-43,145-167,
     * off by default): per selected garden, write the cropped garden
     * image, the tinted masked-garden, the binary mask and one painted
@@ -181,7 +176,7 @@ object Reports {
       .select("id", "blob", "cells").collect()
     val wantedCells = prepared.flatMap(_.getSeq[Long](2)).toSet
     val tileMap = tiles
-      .select(VegPipeline.tileCell(col("image_id")).as("cell"), col("bytes"))
+      .select(VegPipeline.keyToCell(None)(col("image_id")).as("cell"), col("bytes"))
       .where(col("cell").isin(wantedCells.toSeq: _*))
       .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bytes")).toMap
 

@@ -103,27 +103,42 @@ object VegPipeline extends org.apache.spark.internal.Logging {
                      grid: graft.index.GridSystem = graft.index.GridSystem.Square): DataFrame = {
     require(webMercatorZoom.isEmpty || grid == graft.index.GridSystem.Square,
       "non-square grids are only wired for the OSGB tile path")
-    val withGid = gardens.withColumn("gid", xxhash64(col("id")))
-    val prepExpr = webMercatorZoom match {
-      case Some(z) => PrepareGardenWebMerc(
-        ee(col("gid")), ee(col("geometry")), ee(col("crs")), z, tileSize)
-      case None => PrepareGarden(
-        ee(col("gid")), ee(col("geometry")), ee(col("crs")), tileSize, grid)
-    }
-    withGid
-      .withColumn("prep", ec(prepExpr))
+    gardens.withColumn("gid", xxhash64(col("id")))
+      .withColumn("prep", ec(PrepareGarden(
+        ee(col("gid")), ee(col("geometry")), ee(col("crs")), tileSize, grid, webMercatorZoom)))
       .select(col("gid"), col("id"), col("uprn"),
         col("prep.blob").as("blob"), col("prep.cells").as("cells"),
         col("prep.cx").as("cx"), col("prep.cy").as("cy"),
         col("prep.area_m2").as("area_m2"), col("prep.sort_key").as("sort_key"))
   }
 
-  def tileCell(imageId: Column): Column = ec(TileCodeToCell(ee(imageId)))
+  /** The tile naming, chosen in this one place: OSGB km tile codes by
+    * default, slippy "z/x/y" keys at a web-mercator zoom. `toCell` maps a
+    * key to its packed cell (null outside the grid); `toKey` is its exact
+    * inverse for well-formed keys. */
+  private final case class TileNaming(toCell: Column => Column, toKey: Column => Column)
+  private def naming(webMercatorZoom: Option[Int]): TileNaming = webMercatorZoom match {
+    case Some(z) => TileNaming(id => ec(SlippyKeyToCell(ee(id), z)),
+      cell => concat(lit(s"$z/"), shiftright(cell, 31).cast("long"),
+        lit("/"), cell.bitwiseAND(lit(0x7fffffffL)).cast("long")))
+    case None => TileNaming(id => ec(TileCodeToCell(ee(id))),
+      cell => ec(CellToTileCode(
+        ee(shiftright(cell, 31).cast("int")),
+        ee(cell.bitwiseAND(lit(0x7fffffffL)).cast("int")))))
+  }
+
+  /** Tile key (image_id) -> packed cell id, null for a key outside the
+    * grid — the key every tile-table writer and scorer derives cells by. */
+  def keyToCell(webMercatorZoom: Option[Int])(imageId: Column): Column =
+    naming(webMercatorZoom).toCell(imageId)
 
   /** The reusable cell→polygon "interval index" artifact: prepared garden
     * metadata (persisted) + per-cell packed polygon blobs. Build once,
-    * score any number of tile batches/streams against it. */
-  final case class PolyIndex(prepared: DataFrame, cellPolys: DataFrame, tileSize: Int) {
+    * score any number of tile batches/streams against it — under a
+    * config with the same tile size, tile naming and grid. */
+  final case class PolyIndex(prepared: DataFrame, cellPolys: DataFrame, tileSize: Int,
+                             webMercatorZoom: Option[Int] = None,
+                             grid: graft.index.GridSystem = graft.index.GridSystem.Square) {
     /** Memoized covering-range scan predicates (one per loader/config):
       * the index is immutable once built, so repeated scoring runs reuse
       * the computed id set instead of re-collecting it. */
@@ -181,7 +196,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       .select(explode(col("cells")).as("cell"), col("blob"))
       .groupBy("cell").agg(collect_list("blob").as("blobs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    PolyIndex(prepared, cellPolys, tileSize)
+    PolyIndex(prepared, cellPolys, tileSize, webMercatorZoom, grid)
   }
 
   /** Per-garden result: gid, id, uprn, cx, cy, area_m2, sort_key, npix,
@@ -196,9 +211,17 @@ object VegPipeline extends org.apache.spark.internal.Logging {
                    cfg: Config, cirTiles: Option[DataFrame] = None): DataFrame =
     fractionsFromSums(index, fragmentSums(spark, index, tiles, cfg, cirTiles), cfg)
 
-  private def keyToCell(cfg: Config)(c: Column): Column = cfg.webMercatorZoom match {
-    case Some(z) => ec(SlippyKeyToCell(ee(c), z))
-    case None => tileCell(c)
+  /** An index scored under a config keyed differently would look its
+    * cells up in the wrong key space and return wrong sums silently; and
+    * zero-fill enumerates square tiles, so it cannot run on a hex grid. */
+  private def requireIndexFits(index: PolyIndex, cfg: Config): Unit = {
+    require(index.tileSize == cfg.tileSize, "index/config tile size mismatch")
+    require(index.webMercatorZoom == cfg.webMercatorZoom,
+      s"index built for webMercatorZoom=${index.webMercatorZoom}, config has ${cfg.webMercatorZoom}")
+    require(index.grid == cfg.grid, s"index built for grid ${index.grid}, config has ${cfg.grid}")
+    require(cfg.grid == graft.index.GridSystem.Square || !cfg.handleMissingTiles,
+      "missing-tile zero-fill enumerates expected TILES, which only the " +
+        "square grid keys; use handleMissingTiles=false with a hex grid")
   }
 
   /** Canonical image_id of a packed cell — the exact inverse of
@@ -206,15 +229,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     * canonically-named tiles: it builds file paths FROM coordinates,
     * image_loaders.py:229-233, 266-269). */
   private def cellToImageId(cfg: Config, cell: Column = col("cell")): Column =
-    cfg.webMercatorZoom match {
-      case Some(z) =>
-        concat(lit(s"$z/"), shiftright(cell, 31).cast("long"),
-          lit("/"), (cell.bitwiseAND(lit(0x7fffffffL))).cast("long"))
-      case None =>
-        ec(CellToTileCode(
-          ee(shiftright(cell, 31).cast("int")),
-          ee(cell.bitwiseAND(lit(0x7fffffffL)).cast("int"))))
-    }
+    naming(cfg.webMercatorZoom).toKey(cell)
 
   /** Covering-range scan pruning: a parquet-pushable predicate on
     * image_id derived from the polygon set's covering cells. Exact IN
@@ -245,7 +260,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     * scored set agree. */
   def normalizeImageIds(tiles: DataFrame, cfg: Config): DataFrame =
     tiles.withColumn("image_id",
-      coalesce(cellToImageId(cfg, keyToCell(cfg)(col("image_id"))), col("image_id")))
+      coalesce(cellToImageId(cfg, keyToCell(cfg.webMercatorZoom)(col("image_id"))), col("image_id")))
 
   /** The tile frame with the covering-range scan predicate applied — the
     * exact pruning [[fragmentSums]] performs internally. Exposed so
@@ -286,7 +301,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
                 cfg: Config, cirTiles: Option[DataFrame] = None): DataFrame = {
     val nK = cfg.kernelNames.length
     require(nK > 0, "at least one index kernel required")
-    require(index.tileSize == cfg.tileSize, "index/config tile size mismatch")
+    requireIndexFits(index, cfg)
     // format-compat check (reference: analyse_polygons.py:208-213)
     val fmts = cfg.kernelNames.map(Kernels.all(_).inputFormat).distinct
     require(fmts.size == 1,
@@ -294,9 +309,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     require(fmts.head != "IRGB" || cirTiles.nonEmpty,
       "IRGB kernels need the CIR tile table for Ir fusion (S3)")
     val hexGrid = cfg.grid != graft.index.GridSystem.Square
-    require(!hexGrid || !cfg.handleMissingTiles,
-      "missing-tile zero-fill enumerates expected TILES, which only the " +
-        "square grid keys; use handleMissingTiles=false with a hex grid")
 
     // automatic path selection: the broadcast-lookup formulation only when
     // the estimated lookup size fits the configured ceiling; otherwise the
@@ -318,7 +330,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     // and reintroduce the Exchange the bucketing exists to remove
     def withCell(df: DataFrame): DataFrame =
       if (df.columns.contains("cell")) df
-      else df.withColumn("cell", keyToCell(cfg)(col("image_id")))
+      else df.withColumn("cell", keyToCell(cfg.webMercatorZoom)(col("image_id")))
     val rgbWithCell = withCell(prunedTiles)
       .select(col("cell"), col("image_id"), col("bytes"))
       .where(col("cell").isNotNull)
@@ -386,7 +398,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   def presentCells(tiles: DataFrame, cfg: Config): DataFrame = {
     val cellCol =
       if (tiles.columns.contains("cell")) col("cell")
-      else keyToCell(cfg)(col("image_id"))
+      else keyToCell(cfg.webMercatorZoom)(col("image_id"))
     tiles.select(cellCol.as("cell"))
       .where(col("cell").isNotNull)
       .distinct()
@@ -401,6 +413,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   /** As [[missingTileSums]] but from an already-computed present-cell
     * frame (the streaming path accumulates per-batch cell sets). */
   def missingSumsFromPresent(present: DataFrame, index: PolyIndex, cfg: Config): DataFrame = {
+    requireIndexFits(index, cfg)
     val missing = index.cellPolys.join(present, Seq("cell"), "left_anti")
     val missingScore = ec(ScoreFragments(
       ee(col("cell")), ee(lit(null).cast("binary")), ee(lit(null).cast("binary")), ee(col("blobs")),
@@ -409,6 +422,27 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     missing
       .select(explode(missingScore).as("s"))
       .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
+  }
+
+  /** Final per-garden fractions (without uprn and sort_key) from
+    * persisted raw-long partials (gid, npix, veg_0..) — Checkpoint groups
+    * or streaming batches. With handleMissingTiles, the zero-fill
+    * fragments of covered cells absent from `present` are added once
+    * here: per-part runs must not each zero-fill, since a cell missing
+    * from one part is usually present in another. */
+  def fractionsFromPartials(index: PolyIndex, partials: DataFrame, present: => DataFrame,
+                            cfg: Config): DataFrame = {
+    val nK = cfg.kernelNames.length
+    val withMissing =
+      if (cfg.handleMissingTiles)
+        partials.unionByName(missingSumsFromPresent(present, index, cfg)
+          .select(Seq(col("gid"), col("npix")) ++
+            (0 until nK).map(i => col("veg")(i).as(s"veg_$i")): _*))
+      else partials
+    val agg = withMissing.groupBy("gid").agg(
+      sum("npix").as("npix"),
+      (0 until nK).map(i => sum(col(s"veg_$i")).as(s"veg_$i")): _*)
+    fractionsFromSums(index, agg, cfg).drop("uprn", "sort_key")
   }
 
   /** Garden metadata ⋈ raw sums -> the per-garden result frame

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * mechanics of an Iceberg/Delta-style table format (the north rule's
   * "Iceberg table of image + caption pairs"), built from public
   * knowledge on plain parquet since table-format jars are not available
-  * in this sandbox (SURVEY §environment): a real catalog slots in behind
-  * [[TileCatalog]] unchanged, and this object supplies the same
+  * in this sandbox (SURVEY §environment): a real catalog can replace
+  * it behind [[SnapshotTileCatalog]], and this object supplies the same
   * semantics for the engine's own tables.
   *
   *  - **Immutable data files**: every commit ATTEMPT writes NEW files

@@ -1,29 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Catalog abstraction over the aerial tile table (the "Iceberg table of
-  * image + caption pairs" of the north rule). The engine only requires
-  * the input_hint schema
-  * (image_id, bytes, w, h, fmt, caption, phash); a real Iceberg/Delta
-  * catalog slots in behind this trait without touching the pipeline —
-  * partition pruning, snapshot isolation and bucketing-by-cell then come
-  * from the table format. */
-trait TileCatalog extends Serializable {
-  def tiles(spark: SparkSession): DataFrame
-  /** Companion CIR table for the IRGB fusion path (S3), if any. */
-  def cirTiles(spark: SparkSession): Option[DataFrame] = None
-}
-
-/** Plain parquet directory catalog (what this sandbox uses). At scale,
-  * write the table bucketed/sorted by tile cell so the shuffle-join
-  * fallback becomes co-located. */
-final case class ParquetTileCatalog(path: String, cirPath: Option[String] = None)
-    extends TileCatalog {
-  def tiles(spark: SparkSession): DataFrame = spark.read.parquet(path)
-  override def cirTiles(spark: SparkSession): Option[DataFrame] =
-    cirPath.map(spark.read.parquet)
-}
+import graft.pipeline.VegPipeline
 
 /** Bucketed/sorted tile-table write path: at scale, the tile table is
   * written ONCE bucketed by its join cell, so every subsequent
@@ -41,13 +21,7 @@ object TileBuckets {
     * outside the grid are dropped (they can never join). */
   def write(spark: SparkSession, tiles: DataFrame, tableName: String,
             nBuckets: Int, webMercatorZoom: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val cellCol = webMercatorZoom match {
-      case Some(z) => graft.pipeline.Exprs.col(
-        graft.pipeline.SlippyKeyToCell(graft.pipeline.Exprs.expr(col("image_id")), z))
-      case None => graft.pipeline.VegPipeline.tileCell(col("image_id"))
-    }
-    tiles.withColumn("cell", cellCol)
+    tiles.withColumn("cell", VegPipeline.keyToCell(webMercatorZoom)(col("image_id")))
       .where(col("cell").isNotNull)
       // pre-shuffle into the bucket partitioning (same murmur hash), so
       // each writer holds exactly one bucket -> nBuckets files instead of
@@ -78,30 +52,29 @@ object TileBuckets {
   * whole national table. */
 object TileLayout {
 
-  /** Write `tiles` (input_hint schema) z-order-clustered into nFiles
-    * range partitions, with explicit cell_e/cell_n columns for the
-    * reader's min/max pruning. 16-bit coordinates (the full OSGB grid is
-    * 700×1300 km-cells; web-mercator beyond zoom 16 needs a wider
+  /** `tiles` (input_hint schema) with its packed `cell`, the cell's
+    * (cell_e, cell_n) coordinates and their Morton `zkey`, range-
+    * partitioned into nFiles by zkey and sorted within each — the
+    * clustering both z-ordered writers share. Rows whose image_id maps
+    * outside the grid are dropped. 16-bit coordinates (the full OSGB grid
+    * is 700×1300 km-cells; web-mercator beyond zoom 16 needs a wider
     * spread). */
-  def writeZOrdered(tiles: DataFrame, path: String, nFiles: Int,
-                    webMercatorZoom: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, shiftright}
-    val cellCol = webMercatorZoom match {
-      case Some(z) => graft.pipeline.Exprs.col(
-        graft.pipeline.SlippyKeyToCell(graft.pipeline.Exprs.expr(col("image_id")), z))
-      case None => graft.pipeline.VegPipeline.tileCell(col("image_id"))
-    }
-    tiles.withColumn("cell", cellCol)
+  private[sources] def zOrderClustered(tiles: DataFrame, nFiles: Int,
+                                       webMercatorZoom: Option[Int]): DataFrame =
+    tiles.withColumn("cell", VegPipeline.keyToCell(webMercatorZoom)(col("image_id")))
       .where(col("cell").isNotNull)
       // CellIndex packing: cell = (e << 31) | n
-      .withColumn("cell_e", shiftright(col("cell"), 31).cast("int"))
-      .withColumn("cell_n", col("cell").bitwiseAND(lit(0x7fffffffL)).cast("int"))
-      .withColumn("zkey",
-        graft.index.ZOrder.key(col("cell_e").cast("long"), col("cell_n").cast("long")))
+      .withColumn("cell_e", shiftright(col("cell"), 31))
+      .withColumn("cell_n", col("cell").bitwiseAND(lit(0x7fffffffL)))
+      .withColumn("zkey", graft.index.ZOrder.key(col("cell_e"), col("cell_n")))
       .repartitionByRange(nFiles, col("zkey"))
       .sortWithinPartitions("zkey")
-      .write.mode("overwrite").parquet(path)
-  }
+
+  /** Write `tiles` z-order-clustered into nFiles range partitions, with
+    * explicit cell_e/cell_n columns for the reader's min/max pruning. */
+  def writeZOrdered(tiles: DataFrame, path: String, nFiles: Int,
+                    webMercatorZoom: Option[Int] = None): Unit =
+    zOrderClustered(tiles, nFiles, webMercatorZoom).write.mode("overwrite").parquet(path)
 }
 
 /** The 100 TB deployment shape: the tile table lives in a
@@ -115,22 +88,9 @@ object TileLayout {
   * WITHIN the surviving files. Two independent pruning levels, both
   * ahead of any decode work. */
 object SnapshotTiles {
-  import org.apache.spark.sql.functions._
 
   /** Stat columns every tile-table commit carries for manifest skipping. */
   val statCols: Seq[String] = Seq("cell_e", "cell_n")
-
-  private def withCellCols(tiles: DataFrame, webMercatorZoom: Option[Int]): DataFrame = {
-    val cellCol = webMercatorZoom match {
-      case Some(z) => graft.pipeline.Exprs.col(
-        graft.pipeline.SlippyKeyToCell(graft.pipeline.Exprs.expr(col("image_id")), z))
-      case None => graft.pipeline.VegPipeline.tileCell(col("image_id"))
-    }
-    tiles.withColumn("cell", cellCol)
-      .where(col("cell").isNotNull)
-      .withColumn("cell_e", shiftright(col("cell"), 31))
-      .withColumn("cell_n", col("cell").bitwiseAND(lit(0x7fffffffL)))
-  }
 
   /** Commit `tiles` (input_hint schema) as a new snapshot,
     * z-order-clustered into `nFiles` range partitions (the
@@ -138,20 +98,15 @@ object SnapshotTiles {
     * min/max stats cover a COMPACT 2-D region — that tightness is what
     * makes the manifest bbox prune selective. */
   def append(spark: SparkSession, root: String, tiles: DataFrame, nFiles: Int,
-             webMercatorZoom: Option[Int] = None): Long = {
-    val clustered = withCellCols(tiles, webMercatorZoom)
-      .withColumn("zkey", graft.index.ZOrder.key(col("cell_e"), col("cell_n")))
-      .repartitionByRange(nFiles, col("zkey"))
-      .sortWithinPartitions("zkey")
-      .drop("cell", "zkey")
-    SnapshotTable.append(spark, root, clustered, statCols)
-  }
+             webMercatorZoom: Option[Int] = None): Long =
+    SnapshotTable.append(spark, root,
+      TileLayout.zOrderClustered(tiles, nFiles, webMercatorZoom).drop("cell", "zkey"), statCols)
 
   /** The polygon index's covering-cell bounding box as manifest-prune
     * ranges — O(covering cells) aggregation, resolved once per run. An
     * empty index yields an impossible range, so the scan plans no real
     * work and the re-applied filter returns an empty frame. */
-  def coveringRanges(index: graft.pipeline.VegPipeline.PolyIndex): Seq[SnapshotTable.Range] = {
+  def coveringRanges(index: VegPipeline.PolyIndex): Seq[SnapshotTable.Range] = {
     val e = shiftright(col("cell"), 31)
     val n = col("cell").bitwiseAND(lit(0x7fffffffL))
     val r = index.cellPolys.agg(min(e), max(e), min(n), max(n)).head()
@@ -165,21 +120,20 @@ object SnapshotTiles {
   }
 }
 
-/** [[TileCatalog]] over a [[SnapshotTable]] tile table: snapshot-pinned
-  * reads (version = time travel) with manifest-level covering-box
-  * pruning. Compose with [[SnapshotTiles.coveringRanges]] once the
-  * polygon index is built. */
+/** The RGB (and optional CIR) tile tables over [[SnapshotTable]]s:
+  * snapshot-pinned reads (version = time travel) with manifest-level
+  * covering-box pruning. Compose with [[SnapshotTiles.coveringRanges]]
+  * once the polygon index is built. */
 final case class SnapshotTileCatalog(root: String,
                                      ranges: Seq[SnapshotTable.Range] = Nil,
                                      version: Option[Long] = None,
                                      cirRoot: Option[String] = None,
-                                     cirVersion: Option[Long] = None)
-    extends TileCatalog {
+                                     cirVersion: Option[Long] = None) {
   def tiles(spark: SparkSession): DataFrame =
     SnapshotTable.scan(spark, root, ranges, version)
   // The CIR side pins its OWN version: a pinned RGB read next to a
   // latest-snapshot CIR read would tear if a CIR commit lands mid-job.
-  override def cirTiles(spark: SparkSession): Option[DataFrame] =
+  def cirTiles(spark: SparkSession): Option[DataFrame] =
     cirRoot.map(SnapshotTable.scan(spark, _, ranges, cirVersion))
 }
 
@@ -201,15 +155,4 @@ object TileCache {
       build.write.mode("overwrite").parquet(dir.toString)
     spark.read.parquet(dir.toString)
   }
-}
-
-/** Deterministic synthetic catalog (tests/benchmarks). */
-final case class SyntheticTileCatalog(gridW: Int, gridH: Int, tileSize: Int,
-                                      withCir: Boolean = false, seed: Long = 42L)
-    extends TileCatalog {
-  def tiles(spark: SparkSession): DataFrame =
-    graft.data.Synthetic.tiles(spark, gridW, gridH, tileSize, seed)
-  override def cirTiles(spark: SparkSession): Option[DataFrame] =
-    if (withCir) Some(graft.data.Synthetic.tilesCir(spark, gridW, gridH, tileSize, seed))
-    else None
 }

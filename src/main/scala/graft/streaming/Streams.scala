@@ -22,7 +22,7 @@ object Streams extends Serializable {
   def startTileScoring(spark: SparkSession, tilesDir: String, tileSchemaSource: DataFrame,
                        gardens: DataFrame, cfg: VegPipeline.Config, outDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val index = VegPipeline.buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom)
+    val index = VegPipeline.buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom, cfg.grid)
     // per-batch pruning would re-derive the covering predicate each
     // micro-batch for no scan benefit (batches are already small)
     val batchCfg = cfg.copy(handleMissingTiles = false, pruneTileScan = false)
@@ -48,22 +48,9 @@ object Streams extends Serializable {
     * — same semantics as the batch path with handleMissingTiles=true. */
   def fractionsFromPartials(spark: SparkSession, outDir: String, gardens: DataFrame,
                             cfg: VegPipeline.Config): DataFrame = {
-    val index = VegPipeline.buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom)
-    val nK = cfg.kernelNames.length
-    val partials = spark.read.parquet(s"$outDir/batch=*")
-    val withMissing =
-      if (cfg.handleMissingTiles)
-        partials.unionByName(
-          VegPipeline.missingSumsFromPresent(
-              spark.read.parquet(s"$outDir/cells/batch=*").distinct(), index, cfg)
-            .select(Seq(col("gid"), col("npix")) ++
-              (0 until nK).map(i => col("veg")(i).as(s"veg_$i")): _*))
-      else partials
-    val agg = withMissing.groupBy("gid").agg(
-      sum("npix").as("npix"),
-      (0 until nK).map(i => sum(col(s"veg_$i")).as(s"veg_$i")): _*)
-    VegPipeline.fractionsFromSums(index, agg, cfg)
-      .drop("uprn", "sort_key")
+    val index = VegPipeline.buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom, cfg.grid)
+    VegPipeline.fractionsFromPartials(index, spark.read.parquet(s"$outDir/batch=*"),
+      spark.read.parquet(s"$outDir/cells/batch=*").distinct(), cfg)
   }
 
   /** The file streaming source requires a directory; stage single files. */

@@ -1920,14 +1920,15 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("query registry: bench lists and oracles name registered queries") {
-    val keys = Queries.all.keySet
-    assert(Bench.headline.distinct.size == Bench.headline.size)
-    assert(Bench.headline.filterNot(keys).isEmpty, "headline names without a query")
-    assert(Bench.sidecarQueries.filterNot(keys).isEmpty, "sidecar names without a query")
-    assert(Bench.headline.intersect(Bench.sidecarQueries).isEmpty)
-    assert(keys == Queries.oracles.keySet,
-      s"queries without an oracle: ${keys -- Queries.oracles.keySet}; " +
-        s"oracles without a query: ${Queries.oracles.keySet -- keys}")
+    val names = Queries.registry.map(_.name)
+    assert(names.size == 127)
+    assert(names.distinct == names, s"duplicate names: ${names.diff(names.distinct)}")
+    val keys = SparkEntry.queries.keySet
+    assert(Queries.registry.filter(_.benched).map(_.name).filterNot(keys).isEmpty,
+      "benched rows without a query")
+    assert(keys == SparkEntry.oracleSql.keySet,
+      s"queries without an oracle: ${keys -- SparkEntry.oracleSql.keySet}; " +
+        s"oracles without a query: ${SparkEntry.oracleSql.keySet -- keys}")
   }
 
   test("int8 quantize (q65): affine code map, clamp, constant-vector edge") {

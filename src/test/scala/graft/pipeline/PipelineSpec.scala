@@ -556,6 +556,65 @@ class PipelineSpec extends AnyFunSuite {
     assert(withPix.nonEmpty && withPix.exists(r => r.getAs[Double]("frac_greenleaf") > 0.1))
   }
 
+  /** The web-mercator oracle spec's fixture: 12 CRS84 gardens inside a
+    * 3x3 block of slippy tiles at zoom 15. */
+  private def webMercFixture(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val zoom = 15
+    val x0 = 16150; val y0 = 10900
+    def tileToLonLat(tx: Double, ty: Double): (Double, Double) = {
+      val n = (1 << zoom).toDouble
+      ((tx / n - 0.5) * 360.0, math.toDegrees(math.atan(math.sinh(math.Pi * (1.0 - 2.0 * ty / n)))))
+    }
+    val rnd = new scala.util.Random(5)
+    val gardens = (0 until 12).map { i =>
+      val cxT = x0 + 0.3 + rnd.nextDouble() * 2.4
+      val cyT = y0 + 0.3 + rnd.nextDouble() * 2.4
+      val radius = 0.05 + rnd.nextDouble() * 0.25
+      val pts = (0 until 5).map { k =>
+        val ang = 2 * math.Pi * k / 5 + rnd.nextDouble() * 0.3
+        val (lon, lat) = tileToLonLat(cxT + radius * math.cos(ang), cyT + radius * math.sin(ang))
+        Seq(lon, lat)
+      }
+      Synthetic.GardenRow(s"wm$i", Array(s"9$i"), Seq(Seq(pts :+ pts.head)), Exprs.CRS84)
+    }.toDF()
+    val tiles = (for (x <- x0 until x0 + 3; y <- y0 until y0 + 3) yield
+      Synthetic.TileRow(s"$zoom/$x/$y", Codec.encodePNG(Synthetic.tileRaster(x, y, 64, 42L)),
+        64, 64, "png", "wm tile", 0L)).toDF()
+    (gardens, tiles)
+  }
+
+  test("checkpointed web-mercator run (runGroups + fractions) equals the batch pipeline") {
+    val (gardens, allTiles) = webMercFixture()
+    // one covered tile missing, so the final pass zero-fills slippy cells too
+    val tiles = allTiles.where(org.apache.spark.sql.functions.col("image_id") =!= "15/16151/10901")
+    val cfg = VegPipeline.Config(tileSize = 64, kernelNames = Seq("greenleaf", "hsv"),
+      webMercatorZoom = Some(15))
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_wm").toString
+    val idx = VegPipeline.buildIndex(spark, gardens, 64, Some(15))
+    assert(Checkpoint.runGroups(spark, idx, tiles, cfg, dir, buckets = 4, groupSize = 2) == 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "npix", "frac_greenleaf", "frac_hsv").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).sortBy(_._1).toSeq
+    val batch = rows(VegPipeline.run(spark, gardens, tiles, cfg))
+    assert(batch.size == 12 && batch.count(_._2 > 0) >= 10)
+    assert(rows(Checkpoint.fractions(spark, idx, tiles, cfg, dir)) == batch)
+  }
+
+  test("scoring an index under a config for another grid or tile naming fails loudly") {
+    val gardens = Synthetic.gardens(spark, 10, gridW, gridH)
+    val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
+    val squareIdx = VegPipeline.buildIndex(spark, gardens, ts)
+    val cfg = VegPipeline.Config(tileSize = ts, handleMissingTiles = false)
+    intercept[IllegalArgumentException] {
+      VegPipeline.scoreAgainst(spark, squareIdx, tiles,
+        cfg.copy(grid = graft.index.GridSystem.Hex(1.7))).collect()
+    }
+    intercept[IllegalArgumentException] {
+      VegPipeline.scoreAgainst(spark, squareIdx, tiles, cfg.copy(webMercatorZoom = Some(15))).collect()
+    }
+  }
+
   test("shuffle path and metrics accumulators") {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
