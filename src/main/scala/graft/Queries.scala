@@ -4932,8 +4932,8 @@ object Queries {
       |SELECT a, b, n_pairs FROM g
       |ORDER BY n_pairs DESC, a, b LIMIT 20""".stripMargin
 
-  /** One registered query: its builder over a testdata directory, the
-    * DuckDB SQL that checks it, and whether Bench times it. */
+  /** One registered query: the function that builds it over a testdata
+    * directory, the DuckDB SQL that checks it, and whether Bench times it. */
   final case class Query(name: String, build: (SparkSession, String) => DataFrame,
                          oracle: String, benched: Boolean = false)
 
