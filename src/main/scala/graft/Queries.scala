@@ -353,9 +353,7 @@ object Queries {
       |ORDER BY 1, 2, 3""".stripMargin
 
   /** Streaming per-user sessionization (event-time session windows,
-    * 4-hour gap) — declarative session_window; the custom-state
-    * flatMapGroupsWithState formulation is unit-tested equal
-    * ([[graft.streaming.Streams.userSessionsWithState]]). The oracle
+    * 4-hour gap) — declarative session_window. The oracle
     * re-derives gap-and-islands sessionization in SQL: break at
     * gap >= 4 h (session_window merges strictly-inside events),
     * session_end = last event + gap. */

@@ -31,16 +31,6 @@ object Ann {
     (u01(h) + u01(mix(h))) - 1.0
   }
 
-  /** Sign-LSH bucket id from `nPlanes` hyperplanes (one bit each). */
-  def lshBucket(embedding: Column, dim: Int, nPlanes: Int, seed: Long = 42L): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val dot = (0 until dim).map(j => embedding(j).cast("double") * lit(hyperplane(p, j, seed)))
-        .reduce(_ + _)
-      when(dot >= 0, lit(1 << p)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _).as("bucket")
-  }
-
   /** Exact brute-force top-k cosine neighbours for a query subset. */
   def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -34,15 +34,14 @@ object Rasterize {
     *
     * GDAL's half-open scanline rule is expressed in RASTER rows; under the
     * OSGB y-FLIP affine (Affine(...,-1,max_y)) it lands on world ys as
-    * (low, high] — include the upper endpoint (`includeTop` = true, the
-    * default). The web-mercator loader uses an unflipped y-down affine
-    * (image_loaders.py:139), where the same rule is [low, high) in its
-    * world coords (`includeTop` = false with rows returned y-ascending via
-    * [[maskWindowYDown]]).
+    * (low, high]: a scanline crosses an edge when it lies above the edge's
+    * low end and at or below its high end. The web-mercator loader uses an
+    * unflipped y-down affine (image_loaders.py:139), where the same rule is
+    * [low, high) in its world coords; [[maskWindowYDown]] negates y to
+    * reuse this (low, high] core.
     *
     * @param gPix geometry already scaled to absolute pixel units */
-  def maskWindow(gPix: MPoly, x0: Int, y0: Int, w: Int, h: Int,
-                 includeTop: Boolean = true): Array[Boolean] = {
+  def maskWindow(gPix: MPoly, x0: Int, y0: Int, w: Int, h: Int): Array[Boolean] = {
     val mask = new Array[Boolean](w * h)
     if (w <= 0 || h <= 0) return mask
 
@@ -81,10 +80,7 @@ object Rasterize {
                 val ty = dy1; dy1 = dy2; dy2 = ty
                 val tx = dx1; dx1 = dx2; dx2 = tx
               }
-              val crosses =
-                if (includeTop) yc > dy1 && yc <= dy2 // flipped-affine rule (OSGB)
-                else yc >= dy1 && yc < dy2            // unflipped rule (web-mercator)
-              if (crosses) {
+              if (yc > dy1 && yc <= dy2) { // flipped-affine rule (OSGB)
                 val intersect = (yc - dy1) * (dx2 - dx1) / (dy2 - dy1) + dx1
                 if (nInts == xs.length) {
                   val bigger = new Array[Double](xs.length * 2)
@@ -126,16 +122,15 @@ object Rasterize {
 
   /** Web-mercator variant: y-DOWN world coordinates (tile y grows south).
     * Window rows [y0, y0+h-1] with row 0 = y0 (top, since y is downward).
-    * Implemented by negating y so the scanline core is shared; the
-    * half-open rule maps to includeTop=false semantics. */
+    * Implemented by negating y so the scanline core is shared. */
   def maskWindowYDown(gPix: MPoly, x0: Int, y0: Int, w: Int, h: Int): Array[Boolean] = {
     val flipped = gPix.map((x, y) => (x, -y))
     // y-down pixel i has center i+0.5, which negates to (-i-1)+0.5: the
     // y-up indices are -(y0+h)..-y0-1, and the y-down [low, high) rule
-    // becomes (low, high] after negation = includeTop (the default).
+    // becomes (low, high] after negation = the rule maskWindow applies.
     // Row 0 of the y-up mask = highest y-up index -y0-1 = y-down row y0
     // = the TOP row in y-down order, so rows align 1:1.
-    maskWindow(flipped, x0, -(y0 + h), w, h, includeTop = true)
+    maskWindow(flipped, x0, -(y0 + h), w, h)
   }
 
   /** Count of set pixels in a window mask. */

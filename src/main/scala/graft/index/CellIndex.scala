@@ -61,14 +61,10 @@ object ZIndex {
     out.filter(_ >= 0)
   }
 
-  /** Is the closed unit cell [e,e+1]x[n,n+1] fully covered by the polygon
-    * (no hole or edge intrusion)? Conservative exact test: all 4 corners
-    * inside (even-odd) and no ring edge intersects the cell square. */
-  def cellFullyCovered(g: MPoly, e: Int, n: Int): Boolean =
-    rectFullyCovered(g, e.toDouble, n.toDouble, e + 1.0, n + 1.0)
-
-  /** Generalized fully-covered test for an arbitrary rect (used with
-    * pixel-space coordinates by the fragment scorer). */
+  /** Is the closed rect [x0,x1]x[y0,y1] fully covered by the polygon (no
+    * hole or edge intrusion)? Conservative exact test: all 4 corners
+    * inside (even-odd) and no ring edge intersects the rect. Used with
+    * pixel-space coordinates by the fragment scorer. */
   def rectFullyCovered(g: MPoly, x0: Double, y0: Double, x1: Double, y1: Double): Boolean = {
     if (!pipEvenOdd(g, x0, y0) || !pipEvenOdd(g, x1, y0) ||
         !pipEvenOdd(g, x0, y1) || !pipEvenOdd(g, x1, y1)) return false

@@ -18,8 +18,8 @@ import graft.img.{Codec, ColorSpace, Raster, Resize}
   *
   * The container codecs for real-world formats (mp4/mp3/...) are NOT in
   * this environment — those decode paths are STUBBED: `probe` reports
-  * kind="unsupported" and the frame operators return empty results, with
-  * the real-deployment hook documented at [[MediaCodec.decodeExternal]].
+  * kind="unsupported" and the frame operators return empty results (see
+  * [[MediaCodec.sampleFrames]]).
   * Everything else — schema, partitioning, per-row batch shape, PNG frame
   * decode, resize, feature extraction — is real and tested, on a
   * deterministic container format (GRFTVID1/GRFTAUD1).
@@ -79,9 +79,14 @@ object MediaCodec {
     Some(VideoMeta(in.readInt(), in.readInt(), in.readInt(), in.readInt()))
   }
 
-  /** Every `stride`-th frame's PNG payload (real for GRFTVID1). */
+  /** Every `stride`-th frame's PNG payload (real for GRFTVID1). A
+    * production deployment plugs an external codec (e.g. jcodec/ffmpeg
+    * bindings) in for other containers; the engine bundles none, so
+    * unsupported containers yield no frames rather than failing the job
+    * (corrupt-input tracking mirrors the reference's corrupted-tile
+    * lists, generate_coverage.py:95-97). */
   def sampleFrames(bytes: Array[Byte], stride: Int): Seq[Array[Byte]] = {
-    if (magicOf(bytes) != "video") return decodeExternal(bytes)
+    if (magicOf(bytes) != "video") return Seq.empty
     val in = new DataInputStream(new ByteArrayInputStream(bytes, 8, bytes.length - 8))
     val n = in.readInt(); in.readInt(); in.readInt(); in.readInt()
     (0 until n).flatMap { i =>
@@ -91,13 +96,6 @@ object MediaCodec {
       if (i % stride == 0) Some(frame) else None
     }
   }
-
-  /** STUB: external-codec decode hook. A production deployment plugs an
-    * image/video library here (e.g. jcodec/ffmpeg bindings); this sandbox
-    * has none, so unsupported containers yield no frames rather than
-    * failing the job (corrupt-input tracking mirrors the reference's
-    * corrupted-tile lists, generate_coverage.py:95-97). */
-  def decodeExternal(bytes: Array[Byte]): Seq[Array[Byte]] = Seq.empty
 
   /** 11-dim frame feature: BGR channel means + 8-bin grey histogram
     * (normalised) — a deterministic stand-in for a learned embedding. */

@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * scripts/bulk_analyse.py / bulk_sift_incomplete.py / bulk_recombine.py).
   *
   * The tile table is bucketed by cell hash into `buckets` units of work,
-  * processed `groupSize` buckets per Spark job. Each completed group
-  * appends a manifest line after its partial-sum parquet commits, so a
+  * processed `groupSize` buckets per Spark job. Each group is one
+  * partial-sum unit ([[VegPipeline.writePartialUnit]]: sums at
+  * `group=<g>`, its present-cell set at `cells/group=<g>`), and the group
+  * appends a manifest line after both commit, so a
   * crashed run resumes by anti-joining the manifest — per-partition
   * lineage, idempotent (re-running a group overwrites its own output
   * only). Partials carry RAW LONG (gid, npix, veg_i) sums — pure long
@@ -21,10 +23,12 @@ import org.apache.spark.sql.functions._
   * correctly against an index rebuilt by a fresh session.
   *
   * The final fractions re-aggregate all partials plus, once, the
-  * zero-fill fragments for covered cells absent from the ENTIRE tile
-  * table (the reference's missing-tile semantics, image_loaders.py:239)
+  * zero-fill fragments for covered cells absent from EVERY group's cell
+  * set (the reference's missing-tile semantics, image_loaders.py:239)
   * — per-group runs must not each zero-fill, a cell missing from one
-  * group's bucket range is usually present in another's.
+  * group's bucket range is usually present in another's. Finalization
+  * reads no tile, so the tile table may change or go once all groups
+  * have run.
   */
 object Checkpoint {
 
@@ -59,9 +63,7 @@ object Checkpoint {
       val hi = math.min(lo + groupSize, buckets)
       val part = tilesWithBucket.where(col("bucket") >= lo && col("bucket") < hi)
         .drop("cell0", "bucket")
-      VegPipeline.fragmentSums(spark, index, part,
-          cfg.copy(handleMissingTiles = false))
-        .write.mode("overwrite").parquet(s"$outDir/group=$g")
+      VegPipeline.writePartialUnit(spark, index, part, cfg, outDir, s"group=$g")
       // commit marker AFTER the data is durably written
       Files.writeString(manifestPath(outDir), s"$g\n",
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -70,14 +72,17 @@ object Checkpoint {
   }
 
   /** Final per-garden fractions across all committed groups, plus the
-    * once-only missing-tile zero-fill pass against the full tile table
-    * (`tiles` must be the same table the groups partitioned). */
-  def fractions(spark: SparkSession, index: VegPipeline.PolyIndex, tiles: DataFrame,
-                cfg: VegPipeline.Config, outDir: String): DataFrame =
-    // zero-fill against the SAME pruned tile set each group scored
-    // (fragmentSums prunes internally): a parseable-but-non-canonical id
-    // dropped by the covering-range predicate must count as a missing
-    // tile here, not vanish from both passes
-    VegPipeline.fractionsFromPartials(index, spark.read.parquet(s"$outDir/group=*"),
-      VegPipeline.presentCells(VegPipeline.pruneTiles(tiles, index, cfg), cfg), cfg)
+    * once-only missing-tile zero-fill pass against the union of their
+    * cell sets. A committed group without a cell set was written by an
+    * older layout whose finalization re-scanned the tile table; zero-
+    * filling it here would count all its cells as missing, so it fails. */
+  def fractions(spark: SparkSession, index: VegPipeline.PolyIndex,
+                cfg: VegPipeline.Config, outDir: String): DataFrame = {
+    completedGroups(outDir).toSeq.sorted
+      .find(g => !Files.isDirectory(Paths.get(outDir, "cells", s"group=$g")))
+      .foreach(g => throw new IllegalStateException(
+        s"checkpoint group $g in $outDir has no cells/group=$g output " +
+          "(written before partial units carried their cell set); re-run into a fresh directory"))
+    VegPipeline.fractionsFromUnits(spark, index, cfg, outDir, "group=*")
+  }
 }

@@ -263,10 +263,10 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       coalesce(cellToImageId(cfg, keyToCell(cfg.webMercatorZoom)(col("image_id"))), col("image_id")))
 
   /** The tile frame with the covering-range scan predicate applied — the
-    * exact pruning [[fragmentSums]] performs internally. Exposed so
-    * resumable/streaming callers zero-fill against the SAME tile set the
-    * scoring pass saw (a tile dropped by pruning must count as missing,
-    * not silently vanish from both passes). */
+    * exact pruning [[fragmentSums]] performs internally, so
+    * [[writePartialUnit]] records the SAME tile set the scoring pass saw
+    * (a tile dropped by pruning must count as missing, not silently
+    * vanish from both passes). */
   def pruneTiles(tiles: DataFrame, index: PolyIndex, cfg: Config): DataFrame =
     if (!cfg.pruneTileScan || cfg.grid != graft.index.GridSystem.Square) tiles
     else tileIdPredicate(index, cfg).fold(tiles)(tiles.where)
@@ -389,7 +389,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
 
     if (cfg.handleMissingTiles)
-      scored.union(missingTileSums(prunedTiles, index, cfg))
+      scored.union(missingSumsFromPresent(presentCells(prunedTiles, cfg), index, cfg))
     else scored
   }
 
@@ -404,14 +404,9 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       .distinct()
   }
 
-  /** Zero-fill fragment scores for covered cells absent from the tile
-    * table (null raster -> onBlack classification). Returns unaggregated
-    * (gid, npix, veg) rows. The tile scan here reads ONLY image_id. */
-  def missingTileSums(tiles: DataFrame, index: PolyIndex, cfg: Config): DataFrame =
-    missingSumsFromPresent(presentCells(tiles, cfg), index, cfg)
-
-  /** As [[missingTileSums]] but from an already-computed present-cell
-    * frame (the streaming path accumulates per-batch cell sets). */
+  /** Zero-fill fragment scores for covered cells absent from `present`
+    * (null raster -> onBlack classification). Returns unaggregated
+    * (gid, npix, veg) rows. */
   def missingSumsFromPresent(present: DataFrame, index: PolyIndex, cfg: Config): DataFrame = {
     requireIndexFits(index, cfg)
     val missing = index.cellPolys.join(present, Seq("cell"), "left_anti")
@@ -424,12 +419,37 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
   }
 
+  /** Writes one partial-sum unit — a [[Checkpoint]] group or a
+    * streaming micro-batch — of `tiles`: the raw-long sums without
+    * zero-fill at `<outDir>/<unit>`, then the cells the unit presented to
+    * scoring at `<outDir>/cells/<unit>`. Both overwrite, so re-running a
+    * unit is idempotent; callers commit (manifest line, batch id) after
+    * this returns. The cell set is taken from the SAME pruned tile set
+    * scoring saw: a tile the covering-range predicate drops (a
+    * parseable but non-canonical id) counts as missing at finalization
+    * instead of vanishing from both passes. */
+  def writePartialUnit(spark: SparkSession, index: PolyIndex, tiles: DataFrame, cfg: Config,
+                       outDir: String, unit: String): Unit = {
+    fragmentSums(spark, index, tiles, cfg.copy(handleMissingTiles = false))
+      .write.mode("overwrite").parquet(s"$outDir/$unit")
+    presentCells(pruneTiles(tiles, index, cfg), cfg)
+      .write.mode("overwrite").parquet(s"$outDir/cells/$unit")
+  }
+
+  /** Final per-garden fractions over the units matching `unitGlob` (e.g.
+    * `group=*`) that [[writePartialUnit]] wrote under `outDir`. Reads
+    * partials and cell sets only, no tile. */
+  def fractionsFromUnits(spark: SparkSession, index: PolyIndex, cfg: Config,
+                         outDir: String, unitGlob: String): DataFrame =
+    fractionsFromPartials(index, spark.read.parquet(s"$outDir/$unitGlob"),
+      spark.read.parquet(s"$outDir/cells/$unitGlob"), cfg)
+
   /** Final per-garden fractions (without uprn and sort_key) from
-    * persisted raw-long partials (gid, npix, veg_0..) — Checkpoint groups
-    * or streaming batches. With handleMissingTiles, the zero-fill
-    * fragments of covered cells absent from `present` are added once
-    * here: per-part runs must not each zero-fill, since a cell missing
-    * from one part is usually present in another. */
+    * persisted raw-long partials (gid, npix, veg_0..). With
+    * handleMissingTiles, the zero-fill fragments of covered cells absent
+    * from `present` are added once here: per-unit runs must not each
+    * zero-fill, since a cell missing from one unit is usually present in
+    * another. */
   def fractionsFromPartials(index: PolyIndex, partials: DataFrame, present: => DataFrame,
                             cfg: Config): DataFrame = {
     val nK = cfg.kernelNames.length

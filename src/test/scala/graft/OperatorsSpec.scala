@@ -754,13 +754,14 @@ class OperatorsSpec extends AnyFunSuite {
     val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("greenleaf"))
     assert(cfg.handleMissingTiles, "test must exercise the batch default")
 
-    val q = Streams.startTileScoring(spark, tilesDir, all, gardens, cfg, outDir)
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+    val q = Streams.startTileScoring(spark, tilesDir, all, idx, cfg, outDir)
     q.processAllAvailable()
     all.where(col("image_id") >= lit("SU0202")).write.mode("append").parquet(tilesDir)
     q.processAllAvailable()
     q.stop()
 
-    val streamed = Streams.fractionsFromPartials(spark, outDir, gardens, cfg)
+    val streamed = Streams.fractionsFromPartials(spark, outDir, idx, cfg)
       .select("id", "npix", "frac_greenleaf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     val batch = VegPipeline.run(spark, gardens, all, cfg)
@@ -794,7 +795,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(graft.pipeline.Checkpoint.runGroups(spark, idx, tiles, cfg, dir,
       buckets = 16, groupSize = 4) == 0)
 
-    val resumed = graft.pipeline.Checkpoint.fractions(spark, idx, tiles, cfg, dir)
+    val resumed = graft.pipeline.Checkpoint.fractions(spark, idx, cfg, dir)
       .select("id", "npix", "frac_greenleaf", "frac_hsv").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).sortBy(_._1)
     val batch = VegPipeline.run(spark, gardens, tiles, cfg)
@@ -823,13 +824,74 @@ class OperatorsSpec extends AnyFunSuite {
     val idx = VegPipeline.buildIndex(spark, gardens, ts)
     graft.pipeline.Checkpoint.runGroups(spark, idx, tiles, cfg, dir,
       buckets = 8, groupSize = 4)
-    val ck = graft.pipeline.Checkpoint.fractions(spark, idx, tiles, cfg, dir)
+    val ck = graft.pipeline.Checkpoint.fractions(spark, idx, cfg, dir)
       .select("id", "npix", "frac_greenleaf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     val batch = VegPipeline.run(spark, gardens, tiles, cfg)
       .select("id", "npix", "frac_greenleaf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(ck.toSeq == batch.toSeq)
+  }
+
+  test("streaming tile scoring equals batch on alias tile ids (SU+201 zero-filled)") {
+    // the covering-range predicate drops the alias "SU+201" from every
+    // scan, so batch zero-fills its cell; a stream unit must prune the
+    // same way and record the cell as missing, not score its pixels
+    val ts = 64
+    val dir = java.nio.file.Files.createTempDirectory("stream_alias").toString
+    val tilesDir = s"$dir/tiles"
+    val outDir = s"$dir/out"
+    val tiles = Synthetic.tiles(spark, 4, 4, ts)
+      .withColumn("image_id",
+        when(col("image_id") === "SU0201", lit("SU+201")).otherwise(col("image_id")))
+    val gardens = Synthetic.gardens(spark, 20, 4, 4)
+    val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("greenleaf"))
+    assert(cfg.handleMissingTiles, "test must exercise the batch default")
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+
+    tiles.where(col("image_id") < lit("SU0202")).write.parquet(tilesDir)
+    val q = Streams.startTileScoring(spark, tilesDir, tiles, idx, cfg, outDir)
+    try {
+      q.processAllAvailable()
+      tiles.where(col("image_id") >= lit("SU0202")).write.mode("append").parquet(tilesDir)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("id", "npix", "frac_greenleaf").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    assert(rows(Streams.fractionsFromPartials(spark, outDir, idx, cfg)) ==
+      rows(VegPipeline.run(spark, gardens, tiles, cfg)))
+  }
+
+  test("checkpoint fractions read no tile and refuse a directory without cell sets") {
+    val ts = 64
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_notiles")
+    val tilesDir = dir.resolve("tiles").toString
+    val outDir = dir.resolve("out").toString
+    Synthetic.tiles(spark, 4, 4, ts).where(!col("image_id").isin("SU0200", "SU0103"))
+      .write.parquet(tilesDir)
+    val tiles = spark.read.parquet(tilesDir)
+    val gardens = Synthetic.gardens(spark, 20, 4, 4)
+    val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("greenleaf"))
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("id", "npix", "frac_greenleaf").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    val batch = rows(VegPipeline.run(spark, gardens, tiles, cfg))
+    assert(graft.pipeline.Checkpoint.runGroups(spark, idx, tiles, cfg, outDir,
+      buckets = 8, groupSize = 4) == 2)
+
+    // finalization reads only partials and cell sets: the tiles may go
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tilesDir))
+    assert(rows(graft.pipeline.Checkpoint.fractions(spark, idx, cfg, outDir)) == batch)
+
+    // a committed group without its cell set (the layout written before
+    // partial units carried one) must fail, not zero-fill all its cells
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      dir.resolve("out").resolve("cells").resolve("group=1").toFile)
+    val e = intercept[IllegalStateException] {
+      graft.pipeline.Checkpoint.fractions(spark, idx, cfg, outDir)
+    }
+    assert(e.getMessage.contains("group 1"), e.getMessage)
   }
 
   test("streaming hourly window agg runs and is deterministic") {
@@ -873,43 +935,10 @@ class OperatorsSpec extends AnyFunSuite {
     assert(streamed == batch && streamed.nonEmpty)
   }
 
-  test("sessionization: flatMapGroupsWithState custom state equals declarative session_window") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val eventsPath = "/root/testdata/sf0.001/events.parquet"
-    val declarative = Streams.userSessions(spark, eventsPath)
-      .collect().map(_.toString).sorted
+  test("sessionization (q40): session_window matches the DuckDB 691-session count") {
+    val sessions = Streams.userSessions(spark, "/root/testdata/sf0.001/events.parquet").collect()
     // 691 sessions independently derived via gap-and-islands SQL in DuckDB
-    assert(declarative.length == 691)
-
-    val static = spark.read.parquet(eventsPath)
-    val dir = Files.createTempDirectory("graft_sess_state")
-    Files.copy(Paths.get(eventsPath), dir.resolve("data.parquet"))
-    val q = Streams.userSessionsWithState(spark, dir.toString, static.schema,
-      "4 hours", "sess_state_sink")
-    try {
-      q.processAllAvailable()
-      // two sentinel future-dated batches: the first advances the
-      // watermark past every open session, the second fires the timeouts
-      // (watermark updates at batch END; timeouts fire in the NEXT batch)
-      val maxTs = static.agg(max(col("ts").cast("timestamp"))).head().getTimestamp(0)
-      (1 to 2).foreach { i =>
-        val tmp = Files.createTempDirectory(s"graft_sess_sentinel$i")
-        static.limit(1)
-          .withColumn("user_id", lit(-1L * i))
-          .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 30L * 86400000L))
-            .cast(static.schema("ts").dataType))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        Files.move(part, dir.resolve(s"sentinel$i.parquet"))
-        q.processAllAvailable()
-      }
-      val got = spark.table("sess_state_sink").where(col("user_id") >= 0)
-        .select("user_id", "session_start", "session_end", "n", "sum_value")
-        .collect().map(_.toString).sorted
-      assert(got.toSeq == declarative.toSeq)
-    } finally q.stop()
+    assert(sessions.length == 691)
   }
 
   test("embedding-cosine near-dup (q29) finds exactly the injected pairs") {

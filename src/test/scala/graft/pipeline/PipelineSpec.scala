@@ -598,7 +598,7 @@ class PipelineSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).sortBy(_._1).toSeq
     val batch = rows(VegPipeline.run(spark, gardens, tiles, cfg))
     assert(batch.size == 12 && batch.count(_._2 > 0) >= 10)
-    assert(rows(Checkpoint.fractions(spark, idx, tiles, cfg, dir)) == batch)
+    assert(rows(Checkpoint.fractions(spark, idx, cfg, dir)) == batch)
   }
 
   test("scoring an index under a config for another grid or tile naming fails loudly") {
