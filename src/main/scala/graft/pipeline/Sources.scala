@@ -108,10 +108,12 @@ object Reports {
       try warnings.foreach(w.println) finally w.close()
     }
 
-    val ordered = perGarden.orderBy(col("sort_key"), col("gid"))
-    val rows = ordered.select(
+    // the rows are collected anyway, so they sort on the driver: a
+    // global orderBy would add a sampling job and a shuffle
+    val rows = perGarden.select(
       Seq(col("id"), col("cx"), col("cy"), col("area_m2"), col("uprn")) ++
-        kernelNames.map(n => col(s"frac_$n")): _*).collect()
+        kernelNames.map(n => col(s"frac_$n")) ++ Seq(col("sort_key"), col("gid")): _*)
+      .collect().sortBy(r => (r.getLong(r.length - 2), r.getLong(r.length - 1)))
 
     // summary (analyse_polygons.py:135-155): the reference accumulates
     // `+=` over features IN PROCESSING ORDER, and commaFixed2's last

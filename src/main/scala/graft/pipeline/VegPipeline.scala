@@ -1,9 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.geo.TileCode
 import graft.kernel.Kernels
 
 /** The flagship distributed query: garden polygons x aerial tile table ->
@@ -14,13 +17,17 @@ import graft.kernel.Kernels
   * Plan shape (designed for a 100 TB tile table):
   *   1. prepare gardens (tiny side): CRS transform, centroid, area, cover
   *      cells, pixel-space blob — one narrow projection.
-  *   2. group polygon blobs by cell -> cell→polys "interval index".
-  *   3. join tiles ⋈ broadcast(cellPolys) on cell — the tile table streams,
-  *      image bytes NEVER shuffle; each matched tile is decoded exactly
-  *      once and scored against all covering polygons (ScoreFragments).
+  *   2. index blobs by cell: within broadcastMaxBytes the index is the
+  *      lookup, a driver-built cell→blobs map broadcast once, whose keys
+  *      also give the pruning ids and zero-fill cells without a Spark job;
+  *      cellPolys (blobs grouped by cell) serves only the shuffled join.
+  *   3. score tiles through the lookup (or join cellPolys on cell) — the
+  *      tile table streams; each matched tile is decoded exactly once and
+  *      scored against all covering polygons (ScoreFragments).
   *   4. explode fragment scores -> partial-aggregated (map-side combine)
   *      groupBy gid: only (gid, npix, veg[]) rows cross the wire.
-  *   5. broadcast-join garden metadata back, derive fractions.
+  *   5. merge-join garden metadata back (its shuffle overlaps scoring),
+  *      derive fractions.
   *
   * Skew: dense cells cost per-tile work proportional to covering polygons;
   * no shuffle key carries image bytes, so AQE's skew-join handling plus the
@@ -115,16 +122,19 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   /** The tile naming, chosen in this one place: OSGB km tile codes by
     * default, slippy "z/x/y" keys at a web-mercator zoom. `toCell` maps a
     * key to its packed cell (null outside the grid); `toKey` is its exact
-    * inverse for well-formed keys. */
-  private final case class TileNaming(toCell: Column => Column, toKey: Column => Column)
+    * inverse for well-formed keys, and `cellKey` the same on the driver. */
+  private final case class TileNaming(toCell: Column => Column, toKey: Column => Column,
+                                      cellKey: Long => String)
   private def naming(webMercatorZoom: Option[Int]): TileNaming = webMercatorZoom match {
     case Some(z) => TileNaming(id => ec(SlippyKeyToCell(ee(id), z)),
       cell => concat(lit(s"$z/"), shiftright(cell, 31).cast("long"),
-        lit("/"), cell.bitwiseAND(lit(0x7fffffffL)).cast("long")))
+        lit("/"), cell.bitwiseAND(lit(0x7fffffffL)).cast("long")),
+      cell => s"$z/${cell >> 31}/${cell & 0x7fffffffL}")
     case None => TileNaming(id => ec(TileCodeToCell(ee(id))),
       cell => ec(CellToTileCode(
         ee(shiftright(cell, 31).cast("int")),
-        ee(cell.bitwiseAND(lit(0x7fffffffL)).cast("int")))))
+        ee(cell.bitwiseAND(lit(0x7fffffffL)).cast("int")))),
+      cell => TileCode.fromEastingsNorthings((cell >> 31).toInt, (cell & 0x7fffffffL).toInt))
   }
 
   /** Tile key (image_id) -> packed cell id, null for a key outside the
@@ -145,20 +155,17 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     @transient private[pipeline] lazy val predicateCache =
       new java.util.concurrent.ConcurrentHashMap[(Option[Int], Int), Option[Column]]()
 
-    /** Estimated in-memory size of [[broadcastLookup]], from one bounded
-      * agg over the persisted `prepared` frame (3 longs to the driver):
-      * each garden contributes its blob bytes once (blobs are
-      * reference-shared across covering cells) plus an 8-byte array ref
-      * per covering cell, and each distinct cell a map-entry overhead.
-      * Drives the automatic broadcast↔shuffle path choice — computed
-      * lazily and memoized so the shuffle-only path never pays for it. */
-    @transient lazy val broadcastEstimateBytes: Long = {
-      val r = prepared.agg(
-        sum(length(col("blob"))), sum(size(col("cells"))), count(lit(1))).head()
-      val blobBytes = if (r.isNullAt(0)) 0L else r.getLong(0)
-      val cellRefs = if (r.isNullAt(1)) 0L else r.getLong(1)
-      blobBytes + cellRefs * 8L + cellRefs * 64L // 64B/entry map overhead bound
-    }
+    /** Estimated in-memory size of [[broadcastLookup]]: each garden's
+      * blob bytes once (blobs are reference-shared across covering cells)
+      * plus, per covering cell, an 8-byte array ref and a 64-byte
+      * map-entry overhead bound. One narrow pass over the persisted
+      * `prepared` frame sends one sum per partition to the driver (one
+      * job, no exchange). Drives the automatic broadcast↔shuffle path
+      * choice — computed lazily and memoized. */
+    @transient lazy val broadcastEstimateBytes: Long =
+      prepared.select(coalesce(length(col("blob")), lit(0)).cast("long") +
+          coalesce(size(col("cells")), lit(0)).cast("long") * 72L)
+        .rdd.mapPartitions(rows => Iterator(rows.map(_.getLong(0)).sum)).collect().sum
 
     /** The cell→blobs lookup as an executor-shared Broadcast variable,
       * materialized ONCE per index lifetime. A BroadcastHashJoin would
@@ -231,6 +238,18 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   private def cellToImageId(cfg: Config, cell: Column = col("cell")): Column =
     naming(cfg.webMercatorZoom).toKey(cell)
 
+  private def fitsBroadcast(index: PolyIndex, cfg: Config): Boolean =
+    index.broadcastEstimateBytes <= cfg.broadcastMaxBytes
+
+  /** The covering cells, for the scan predicate and the zero-fill alike:
+    * the lookup's sorted keys on the driver, without a Spark job, when the
+    * index fits the broadcast ceiling (the lookup is touched only then);
+    * otherwise `cellPolys`, whose `cell` column is the same set. */
+  private def coveredCells(index: PolyIndex, cfg: Config): Either[Array[Long], DataFrame] =
+    if (fitsBroadcast(index, cfg))
+      Left(index.broadcastLookup.value.keySet.asScala.toArray.sorted)
+    else Right(index.cellPolys)
+
   /** Covering-range scan pruning: a parquet-pushable predicate on
     * image_id derived from the polygon set's covering cells. Exact IN
     * set of canonical ids when the extent is small (the reference's
@@ -239,17 +258,21 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     * when the polygon set covers nothing. */
   def tileIdPredicate(index: PolyIndex, cfg: Config): Option[Column] =
     index.predicateCache.computeIfAbsent((cfg.webMercatorZoom, cfg.pruneInSetMax), _ => {
-      val ids = index.cellPolys.select(cellToImageId(cfg).as("tid"))
-        .where(col("tid").isNotNull)
-      // one bounded collect decides small-vs-large AND supplies the set
-      val headIds = ids.limit(cfg.pruneInSetMax + 1).collect().map(_.getString(0))
+      // up to pruneInSetMax + 1 ids decide small-vs-large AND supply the
+      // set; `range` gives the min and max id over all of them
+      val (headIds, range) = coveredCells(index, cfg) match {
+        case Left(cells) =>
+          val ids = cells.map(naming(cfg.webMercatorZoom).cellKey).filter(_ != null)
+          (ids.take(cfg.pruneInSetMax + 1), () => (ids.min, ids.max))
+        case Right(cellPolys) =>
+          val ids = cellPolys.select(cellToImageId(cfg).as("tid")).where(col("tid").isNotNull)
+          (ids.limit(cfg.pruneInSetMax + 1).collect().map(_.getString(0)),
+            () => { val r = ids.agg(min("tid"), max("tid")).head(); (r.getString(0), r.getString(1)) })
+      }
       if (headIds.isEmpty) Some(lit(false))
       else if (headIds.length <= cfg.pruneInSetMax)
         Some(col("image_id").isInCollection(headIds.toSeq))
-      else {
-        val r = ids.agg(min("tid").as("lo"), max("tid").as("hi")).head()
-        Some(col("image_id") >= r.getString(0) && col("image_id") <= r.getString(1))
-      }
+      else { val (lo, hi) = range(); Some(col("image_id") >= lo && col("image_id") <= hi) }
     })
 
   /** Rewrite image_id to canonical form by round-tripping through the
@@ -314,13 +337,10 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     // the estimated lookup size fits the configured ceiling; otherwise the
     // shuffled cell join, without the caller having to know (What a user
     // of the reference never configures, the engine must not OOM over).
-    val useBroadcast = {
-      val est = index.broadcastEstimateBytes
-      if (est > cfg.broadcastMaxBytes)
-        logWarning(s"polygon index estimated at $est bytes exceeds " +
-          s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
-      est <= cfg.broadcastMaxBytes
-    }
+    val useBroadcast = fitsBroadcast(index, cfg)
+    if (!useBroadcast)
+      logWarning(s"polygon index estimated at ${index.broadcastEstimateBytes} bytes exceeds " +
+        s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
 
     def prune(df: DataFrame): DataFrame = pruneTiles(df, index, cfg)
     val prunedTiles = prune(tiles)
@@ -384,9 +404,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
           cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
           metrics = cfg.metrics)))
       }
-    val scored = matched
-      .select(explode(scoreCol).as("s"))
-      .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
+    val scored = fragmentRows(matched, scoreCol)
 
     if (cfg.handleMissingTiles)
       scored.union(missingSumsFromPresent(presentCells(prunedTiles, cfg), index, cfg))
@@ -406,18 +424,29 @@ object VegPipeline extends org.apache.spark.internal.Logging {
 
   /** Zero-fill fragment scores for covered cells absent from `present`
     * (null raster -> onBlack classification). Returns unaggregated
-    * (gid, npix, veg) rows. */
+    * (gid, npix, veg) rows. On the broadcast path the covered cells are
+    * the lookup's keys and the missing ones score through the lookup;
+    * the shuffled path takes both from cellPolys. */
   def missingSumsFromPresent(present: DataFrame, index: PolyIndex, cfg: Config): DataFrame = {
     requireIndexFits(index, cfg)
-    val missing = index.cellPolys.join(present, Seq("cell"), "left_anti")
+    val (covered, blobs, lookup) = coveredCells(index, cfg) match {
+      case Left(cells) => // an RDD keeps a large cell set out of the plan
+        val spark = present.sparkSession
+        (spark.createDataset(spark.sparkContext.parallelize(cells.toSeq))(Encoders.scalaLong)
+          .toDF("cell"), lit(null).cast("array<binary>"), Some(index.broadcastLookup))
+      case Right(cellPolys) => (cellPolys, col("blobs"), None)
+    }
     val missingScore = ec(ScoreFragments(
-      ee(col("cell")), ee(lit(null).cast("binary")), ee(lit(null).cast("binary")), ee(col("blobs")),
+      ee(col("cell")), ee(lit(null).cast("binary")), ee(lit(null).cast("binary")), ee(blobs),
       cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
-      metrics = cfg.metrics))
-    missing
-      .select(explode(missingScore).as("s"))
-      .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
+      metrics = cfg.metrics, lookup = lookup))
+    fragmentRows(covered.join(present, Seq("cell"), "left_anti"), missingScore)
   }
+
+  /** One (gid, npix, veg) row per fragment of a ScoreFragments column. */
+  private def fragmentRows(df: DataFrame, score: Column): DataFrame =
+    df.select(explode(score).as("s"))
+      .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
 
   /** Writes one partial-sum unit — a [[Checkpoint]] group or a
     * streaming micro-batch — of `tiles`: the raw-long sums without
@@ -468,7 +497,10 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   /** Garden metadata ⋈ raw sums -> the per-garden result frame
     * (gid, id, uprn, cx, cy, area_m2, sort_key, npix, frac_<kernel>...). */
   def fractionsFromSums(index: PolyIndex, sums: DataFrame, cfg: Config): DataFrame = {
+    // a merge join: the meta side's shuffle runs beside the scoring
+    // stages, where a broadcast of the sums would wait for them
     val meta = index.prepared.select("gid", "id", "uprn", "cx", "cy", "area_m2", "sort_key")
+      .hint("merge")
     val joined = meta.join(sums, Seq("gid"), "left_outer")
     val fracCols = cfg.kernelNames.zipWithIndex.map { case (name, i) =>
       when(col("npix").isNull || col("npix") === 0L, lit(0.0))

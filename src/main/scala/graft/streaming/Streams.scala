@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,9 +69,12 @@ object Streams extends Serializable {
       maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
         .parquet(srcDir)
     }
-    val q = query(events).writeStream.outputMode(outputMode)
-      .format("memory").queryName(sinkName).start()
-    try q.processAllAvailable() finally q.stop()
+    // the memory sink holds the result, so the staged copy can go
+    try {
+      val q = query(events).writeStream.outputMode(outputMode)
+        .format("memory").queryName(sinkName).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally if (srcDir != eventsPath) FileUtils.deleteDirectory(new java.io.File(srcDir))
     spark.table(sinkName)
   }
 

@@ -399,6 +399,36 @@ class OperatorsSpec extends AnyFunSuite {
       java.nio.file.Paths.get(dir + "/run-testloader-greenleaf-warnings.txt")))
   }
 
+  test("writeAll orders rows by (sort_key, gid) exactly as a Spark orderBy does") {
+    import spark.implicits._
+    // sort_key ties broken by gid (negative gids too), a garden with
+    // npix = 0, a multi-uprn and a uprn-less garden, in no sorted order
+    val cols = Seq("gid", "id", "uprn", "cx", "cy", "area_m2", "sort_key", "npix", "frac_a", "frac_b")
+    val perGarden = Seq(("g1", 7L, 3L, Seq("u1")), ("g2", 7L, -5L, Seq("u2", "u3", "u4")),
+      ("g3", 2L, 9L, Seq.empty[String]), ("g4", 7L, 0L, Seq("u5")), ("g5", -1L, 4L, Seq("u6")),
+      ("g6", 2L, -9L, Seq("u7", "u8")), ("g7", 7L, Long.MinValue, Seq("u9"))).zipWithIndex.map {
+      case ((id, sortKey, gid, uprn), i) =>
+        val npix = if (id == "g3") 0L else 100L + i
+        (gid, id, uprn, 1000.5 + i * 3.25, 2000.25 - i, 10.1 + i * 0.3, sortKey, npix,
+          if (npix == 0) 0.0 else (i + 1) / 9.0, if (npix == 0) 0.0 else 1.0 / (i + 2))
+    }.toDF(cols: _*).repartition(3)
+    val dir = java.nio.file.Files.createTempDirectory("report_order").toString
+    Reports.writeAll(perGarden, Seq("a", "b"), "t", s"$dir/got-", "EPSG:27700")
+    // the same rows in Spark's orderBy order, re-keyed by their rank so
+    // that any sort keeps that order
+    val ranked = perGarden.orderBy("sort_key", "gid")
+      .as[(Long, String, Seq[String], Double, Double, Double, Long, Long, Double, Double)]
+      .collect().zipWithIndex.map { case (r, i) => r.copy(_1 = i.toLong, _7 = i.toLong) }
+    Reports.writeAll(ranked.toSeq.toDF(cols: _*), Seq("a", "b"), "t", s"$dir/want-", "EPSG:27700")
+    def bytes(prefix: String, file: String) =
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$prefix-t-a-b-$file")).toSeq
+    Seq("vegetation.csv", "toid2uprn.csv", "summary.txt").foreach { f =>
+      assert(bytes("got", f) == bytes("want", f), f)
+    }
+    assert(new String(bytes("got", "toid2uprn.csv").toArray, "UTF-8").linesIterator.toSeq.tail ==
+      Seq("g5, u6", "g6, u7", "g6, u8", "g7, u9", "g2, u2", "g2, u3", "g2, u4", "g4, u5", "g1, u1"))
+  }
+
   test("debug PNG sink writes garden/mask/overlay images (S11)") {
     val dir = java.nio.file.Files.createTempDirectory("dbg").toString
     val gardens = Synthetic.gardens(spark, 10, 4, 4)
@@ -899,6 +929,21 @@ class OperatorsSpec extends AnyFunSuite {
     assert(a.length > 0)
     val b = Streams.hourlyEventCounts(spark, "/root/testdata/sf0.001/events.parquet").collect()
     assert(a.map(_.toString).sameElements(b.map(_.toString)))
+  }
+
+  test("streaming over a single-file events parquet leaves no staged copy behind") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("events_one").toFile
+    Seq(("2024-01-01 00:10:00", "view", 1.5), ("2024-01-01 01:20:00", "click", 2.0))
+      .toDF("ts", "event_type", "value").withColumn("ts", col("ts").cast("timestamp"))
+      .coalesce(1).write.parquet(s"$dir/events")
+    val file = new java.io.File(dir, "events").listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(file.length == 1)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged() = Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_stream_src")).toSet
+    val before = staged()
+    assert(Streams.hourlyEventCounts(spark, file.head.getPath).count() == 2)
+    assert(staged() -- before == Set.empty)
   }
 
   test("streaming dedup (q56): equals batch SELECT DISTINCT; state bounded by watermark key") {

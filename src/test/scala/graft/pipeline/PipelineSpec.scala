@@ -280,6 +280,89 @@ class PipelineSpec extends AnyFunSuite {
     assert(a.sameElements(b))
   }
 
+  test("broadcast and shuffled paths zero-fill the same missing tiles") {
+    import org.apache.spark.sql.functions.col
+    // the broadcast path takes the covered cells from the lookup's keys,
+    // the shuffled one (broadcastMaxBytes = 0) from cellPolys
+    def rows(df: org.apache.spark.sql.DataFrame, names: Seq[String]) =
+      df.select(col("id") +: col("npix") +: names.map(n => col(s"frac_$n")): _*).collect()
+        .map(r => (r.getString(0), r.getLong(1), names.indices.map(i => r.getDouble(2 + i))))
+        .sortBy(_._1).toSeq
+    def code(e: Int, n: Int) = graft.geo.TileCode.fromEastingsNorthings(e, n)
+
+    // a plain RGB run with a block of tiles dropped
+    val rgbNames = Seq("greenleaf", "naive")
+    val rgbCfg = VegPipeline.Config(tileSize = ts, kernelNames = rgbNames)
+    val dropped = for (e <- Synthetic.BaseE + 1 to Synthetic.BaseE + 2;
+                       n <- Synthetic.BaseN + 1 to Synthetic.BaseN + 2) yield code(e, n)
+    val gardens = Synthetic.gardens(spark, 40, gridW, gridH)
+    val tiles = Synthetic.tiles(spark, gridW, gridH, ts).where(!col("image_id").isin(dropped: _*))
+    def rgb(cfg: VegPipeline.Config) = rows(VegPipeline.run(spark, gardens, tiles, cfg), rgbNames)
+    val filled = rgb(rgbCfg)
+    assert(filled == rgb(rgbCfg.copy(broadcastMaxBytes = 0)))
+    assert(filled.map(_._2).sum > rgb(rgbCfg.copy(handleMissingTiles = false)).map(_._2).sum,
+      "fixture should zero-fill some pixels")
+
+    // an IRGB run over CIR tiles with one RGB tile absent
+    val irgbNames = Seq("ndvi-irgb", "matt")
+    val irgbCfg = VegPipeline.Config(tileSize = ts, kernelNames = irgbNames)
+    val rgb3 = Synthetic.tiles(spark, 3, 3, ts)
+      .where(col("image_id") =!= code(Synthetic.BaseE + 1, Synthetic.BaseN + 1))
+    def irgb(cfg: VegPipeline.Config) = rows(VegPipeline.run(spark, Synthetic.gardens(spark, 12, 3, 3),
+      rgb3, cfg, cirTiles = Some(Synthetic.tilesCir(spark, 3, 3, ts))), irgbNames)
+    assert(irgb(irgbCfg) == irgb(irgbCfg.copy(broadcastMaxBytes = 0)))
+
+    // Checkpoint.fractions over the same partials
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_paths").toString
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+    Checkpoint.runGroups(spark, idx, tiles, rgbCfg, dir, buckets = 4, groupSize = 2)
+    def ckpt(cfg: VegPipeline.Config) = rows(Checkpoint.fractions(spark, idx, cfg, dir), rgbNames)
+    assert(ckpt(rgbCfg) == filled)
+    assert(ckpt(rgbCfg.copy(broadcastMaxBytes = 0)) == filled)
+  }
+
+  test("the broadcast path never computes cellPolys") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def inGroup[A](g: String)(f: => A): A = {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try f finally sc.clearJobGroup()
+    }
+    // a dense-like job: IRGB over CIR tiles, one RGB tile absent, zero-fill
+    val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("ndvi-irgb", "matt"))
+    val gardens = Synthetic.gardens(spark, 30, 3, 3)
+    val tiles = Synthetic.tiles(spark, 3, 3, ts).where(col("image_id") =!=
+      graft.geo.TileCode.fromEastingsNorthings(Synthetic.BaseE + 1, Synthetic.BaseN + 1))
+    val cir = Synthetic.tilesCir(spark, 3, 3, ts)
+    val out = java.nio.file.Files.createTempDirectory("dense_like").toString + "/"
+    sc.addSparkListener(listener)
+    try {
+      val idx = inGroup("op") {
+        val i = VegPipeline.buildIndex(spark, gardens, ts)
+        Reports.writeAll(VegPipeline.scoreAgainst(spark, i, tiles, cfg, Some(cir)),
+          cfg.kernelNames, "bench", out, "EPSG:27700")
+        i
+      }
+      // the listener bus is ordered: once the marker job is seen, every
+      // job of the op has been counted
+      inGroup("marker")(sc.parallelize(Seq(1), 1).count())
+      while (!groups.contains("marker")) Thread.sleep(5)
+      val cached = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState
+        .cacheManager.lookupCachedData(idx.cellPolys.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      assert(cached.nonEmpty, "cellPolys stays registered as persisted")
+      assert(!cached.get.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded,
+        "the broadcast path computed cellPolys")
+      val jobs = groups.toArray.count(_ == "op")
+      assert(jobs <= 8, s"$jobs Spark jobs for one dense-like job")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("oversized polygon index auto-falls-back to the shuffled cell join") {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
