@@ -758,8 +758,8 @@ object Queries {
   }
 
   /** The square-grid flagship frame WITHOUT missing-tile zero-fill — the
-    * comparison target for the hex-cover query (q39; hex cannot zero-fill,
-    * a square-grid notion). */
+    * comparison target for the hex-cover query (q39, which runs without
+    * zero-fill too). */
   private[graft] def flagshipFrameNoFill(s: SparkSession, dir: String): DataFrame = {
     val (gw, gh, ng) = syntheticScale(dir)
     VegPipeline.run(s, Synthetic.gardens(s, ng, gw, gh),
@@ -1847,13 +1847,14 @@ object Queries {
     * theta-join. Per-row work never leaves the map stage. */
   private def q63(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("n_chars"))
-    // one corpus pass: the histogram both yields the total row count
-    // (Σ cnt ≡ count(*)) and feeds the distributed prefix sum — the
-    // former separate docs.count() was a second full scan
+    // one corpus pass: the histogram feeds the distributed prefix sum
+    // (which materializes it once), and the last running total is the row
+    // count (Σ cnt ≡ count(*)) — a separate docs.count() was a second
+    // full scan
     val hist = docs.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    // sum over an empty table is null: no documents, total 0
-    val totalRow = hist.agg(sum("cnt")).head()
+    val cum = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
+    // an empty table has no running total: no documents, total 0
+    val totalRow = cum.agg(max("cum")).head()
     val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
     val targets = Seq(25, 50, 75, 95, 99).map(p => (p, (p * total + 99) / 100))
     val tdf = s.createDataFrame(targets).toDF("pct", "rank")
@@ -1862,7 +1863,6 @@ object Queries {
     if (total == 0L)
       return tdf.withColumn("value", lit(null).cast(docs.schema("n_chars").dataType))
         .orderBy("pct")
-    val cum = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
     cum.join(broadcast(tdf), col("cum") >= col("rank"))
       .groupBy("pct", "rank").agg(min("n_chars").as("value"))
       .orderBy("pct")

@@ -95,9 +95,9 @@ object Sidecars {
       .select("id", "uprn", "cx", "cy", "area_m2", "npix", "frac_greenleaf")
       .coalesce(1).write.mode("overwrite").parquet(vegPath)
     // q39: the SQUARE-grid flagship frame with handleMissingTiles=false —
-    // the hex-cover query must reproduce it row-for-row (hex has no
-    // zero-fill, so the comparable square run disables it too; the
-    // square path itself is mosaic-oracle-validated in PipelineSpec)
+    // the hex-cover query, which runs without zero-fill, must reproduce
+    // it row-for-row (the square path itself is mosaic-oracle-validated
+    // in PipelineSpec)
     Queries.flagshipFrameNoFill(s, dir)
       .select("id", "npix", "frac_greenleaf")
       .coalesce(1).write.mode("overwrite").parquet(vegNoFillPath)

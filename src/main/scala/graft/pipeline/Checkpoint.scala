@@ -13,22 +13,21 @@ import org.apache.spark.sql.functions._
   * The tile table is bucketed by cell hash into `buckets` units of work,
   * processed `groupSize` buckets per Spark job. Each group is one
   * partial-sum unit ([[VegPipeline.writePartialUnit]]: sums at
-  * `group=<g>`, its present-cell set at `cells/group=<g>`), and the group
-  * appends a manifest line after both commit, so a
-  * crashed run resumes by anti-joining the manifest — per-partition
+  * `group=<g>`), and the group appends a manifest line after it commits,
+  * so a crashed run resumes by anti-joining the manifest — per-partition
   * lineage, idempotent (re-running a group overwrites its own output
   * only). Partials carry RAW LONG (gid, npix, veg_i) sums — pure long
   * adds re-aggregate bit-exactly, never round-tripping a double — and
   * gid is xxhash64(feature id), so partials written before a crash join
   * correctly against an index rebuilt by a fresh session.
   *
-  * The final fractions re-aggregate all partials plus, once, the
-  * zero-fill fragments for covered cells absent from EVERY group's cell
-  * set (the reference's missing-tile semantics, image_loaders.py:239)
-  * — per-group runs must not each zero-fill, a cell missing from one
-  * group's bucket range is usually present in another's. Finalization
-  * reads no tile, so the tile table may change or go once all groups
-  * have run.
+  * The final fractions re-aggregate all partials, then zero-fill once
+  * (the reference's missing-tile semantics, image_loaders.py:239): each
+  * garden's mask pixels that no group scored count as black. No cell set
+  * is kept, so finalization reads no tile — the tile table may change or
+  * go once all groups have run — and directories written by older
+  * layouts, which also hold a `cells` directory of cell sets, finalize
+  * as they are.
   */
 object Checkpoint {
 
@@ -71,18 +70,9 @@ object Checkpoint {
     toRun.size
   }
 
-  /** Final per-garden fractions across all committed groups, plus the
-    * once-only missing-tile zero-fill pass against the union of their
-    * cell sets. A committed group without a cell set was written by an
-    * older layout whose finalization re-scanned the tile table; zero-
-    * filling it here would count all its cells as missing, so it fails. */
+  /** Final per-garden fractions across all committed groups, zero-filled
+    * once. */
   def fractions(spark: SparkSession, index: VegPipeline.PolyIndex,
-                cfg: VegPipeline.Config, outDir: String): DataFrame = {
-    completedGroups(outDir).toSeq.sorted
-      .find(g => !Files.isDirectory(Paths.get(outDir, "cells", s"group=$g")))
-      .foreach(g => throw new IllegalStateException(
-        s"checkpoint group $g in $outDir has no cells/group=$g output " +
-          "(written before partial units carried their cell set); re-run into a fresh directory"))
+                cfg: VegPipeline.Config, outDir: String): DataFrame =
     VegPipeline.fractionsFromUnits(spark, index, cfg, outDir, "group=*")
-  }
 }

@@ -51,8 +51,10 @@ object Exprs {
 }
 
 /** Per-garden preparation: projection to tile-unit space, centroid
-  * (original CRS), surface area, covering cells, spatial sort key and
-  * the serialized pixel-space polygon blob.
+  * (original CRS), surface area, covering cells, spatial sort key, the
+  * serialized pixel-space polygon blob and the mask's pixel count over
+  * its square cover (`npix_total`, the sum of the per-fragment npix that
+  * scoring computes, so zero-fill is arithmetic on it).
   * (reference: calculate_indices.py:110-137 + image_loaders.py:201-213,
   * 257-294 prep portions)
   *
@@ -84,7 +86,8 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
     StructField("cx", DoubleType, nullable = false),
     StructField("cy", DoubleType, nullable = false),
     StructField("area_m2", DoubleType, nullable = false),
-    StructField("sort_key", LongType, nullable = false)
+    StructField("sort_key", LongType, nullable = false),
+    StructField("npix_total", LongType, nullable = false)
   ))
 
   override def eval(input: InternalRow): Any = {
@@ -123,8 +126,11 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
     val cropY1 = math.floor(mxy * ts).toInt
     val gPix = g.affine(ts, 0, 0, ts, 0, 0)
     val blob = PolyBlob.serialize(gidV, cropX0, cropX1, cropY0, cropY1, gPix)
+    val pp = PolyBlob.Prepared(gidV, cropX0, cropX1, cropY0, cropY1, gPix)
+    val npixTotal = sqCells.map(c => PolyBlob.scoreFragment(
+      pp, ZIndex.cellE(c), ZIndex.cellN(c), ts, null, Array.empty, slippy)._1).sum
 
-    InternalRow(blob, new GenericArrayData(cells), cx, cy, area, sortKey)
+    InternalRow(blob, new GenericArrayData(cells), cx, cy, area, sortKey, npixTotal)
   }
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
@@ -141,7 +147,7 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
   * ([[PolyBlob.windowUnion]]) through [[Codec.decodeBGRWindow]] — the
   * window pixels equal a full decode, everything outside it is 0 and is
   * never read. A tile no fragment window meets is not decoded at all
-  * (and not counted in `tilesDecoded`). Null/absent tile bytes -> the
+  * (and not counted in `tilesDecoded`). Null or empty tile bytes -> the
   * reference's zero-fill semantics via each kernel's onBlack value.
   * Wrong-sized tiles fall back to a full decode, an S10 warning and a
   * resize to tileSize (image_loaders.py:222-226). For IRGB kernels,

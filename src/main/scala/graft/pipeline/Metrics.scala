@@ -14,6 +14,11 @@ import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
   * back per task — correct on a real multi-executor cluster, not just
   * local mode.
   *
+  * `missingTileFragments` counts fragments scored against a tile row
+  * whose bytes are null or empty. Tiles absent from the table are
+  * zero-filled by arithmetic on the garden's mask total, without a
+  * fragment, so they do not count.
+  *
   * `warnings` carries per-tile warning MESSAGES from executors (S10 —
   * the reference appends text like resize mismatches to its warnings
   * list, image_loaders.py:222-224, and writes them to

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,18 +16,19 @@ import graft.kernel.Kernels
   *
   * Plan shape (designed for a 100 TB tile table):
   *   1. prepare gardens (tiny side): CRS transform, centroid, area, cover
-  *      cells, pixel-space blob — one narrow projection.
+  *      cells, pixel-space blob, mask pixel total — one narrow projection.
   *   2. index blobs by cell: within broadcastMaxBytes the index is the
   *      lookup, a driver-built cell→blobs map broadcast once, whose keys
-  *      also give the pruning ids and zero-fill cells without a Spark job;
-  *      cellPolys (blobs grouped by cell) serves only the shuffled join.
+  *      also give the pruning ids without a Spark job; cellPolys (blobs
+  *      grouped by cell) serves only the shuffled join.
   *   3. score tiles through the lookup (or join cellPolys on cell) — the
-  *      tile table streams; each matched tile is decoded exactly once and
-  *      scored against all covering polygons (ScoreFragments).
+  *      tile table streams once; each matched tile is decoded exactly once
+  *      and scored against all covering polygons (ScoreFragments).
   *   4. explode fragment scores -> partial-aggregated (map-side combine)
   *      groupBy gid: only (gid, npix, veg[]) rows cross the wire.
   *   5. merge-join garden metadata back (its shuffle overlaps scoring),
-  *      derive fractions.
+  *      zero-fill the mask pixels no tile row covered (mask total less
+  *      scored pixels), derive fractions.
   *
   * Skew: dense cells cost per-tile work proportional to covering polygons;
   * no shuffle key carries image bytes, so AQE's skew-join handling plus the
@@ -83,14 +84,12 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       metrics: Option[PipelineMetrics] = None,
       /** Grid system for the cell→polygon index and the polygon⋈tile
         * join key. Square (default) = one cell per km tile, the
-        * reference's semantics and the zero-fill/pruning-capable path.
+        * reference's semantics and the pruning-capable path.
         * A hex grid (H3-style axial hexes, [[graft.index.HexIndex]])
         * indexes polygons by the hexes of their covered tiles' centers;
         * the join matches a superset of the square-grid tile set whose
         * extra fragments score zero pixels, so the per-garden sums are
-        * bit-identical. Hex requires handleMissingTiles=false (zero-fill
-        * enumerates expected TILES, which only the square grid can) and
-        * disables covering-range scan pruning. */
+        * bit-identical. Hex disables covering-range scan pruning. */
       grid: graft.index.GridSystem = graft.index.GridSystem.Square)
 
   import Exprs.{col => ec, expr => ee}
@@ -116,7 +115,8 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       .select(col("gid"), col("id"), col("uprn"),
         col("prep.blob").as("blob"), col("prep.cells").as("cells"),
         col("prep.cx").as("cx"), col("prep.cy").as("cy"),
-        col("prep.area_m2").as("area_m2"), col("prep.sort_key").as("sort_key"))
+        col("prep.area_m2").as("area_m2"), col("prep.sort_key").as("sort_key"),
+        col("prep.npix_total").as("npix_total"))
   }
 
   /** The tile naming, chosen in this one place: OSGB km tile codes by
@@ -219,16 +219,12 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     fractionsFromSums(index, fragmentSums(spark, index, tiles, cfg, cirTiles), cfg)
 
   /** An index scored under a config keyed differently would look its
-    * cells up in the wrong key space and return wrong sums silently; and
-    * zero-fill enumerates square tiles, so it cannot run on a hex grid. */
+    * cells up in the wrong key space and return wrong sums silently. */
   private def requireIndexFits(index: PolyIndex, cfg: Config): Unit = {
     require(index.tileSize == cfg.tileSize, "index/config tile size mismatch")
     require(index.webMercatorZoom == cfg.webMercatorZoom,
       s"index built for webMercatorZoom=${index.webMercatorZoom}, config has ${cfg.webMercatorZoom}")
     require(index.grid == cfg.grid, s"index built for grid ${index.grid}, config has ${cfg.grid}")
-    require(cfg.grid == graft.index.GridSystem.Square || !cfg.handleMissingTiles,
-      "missing-tile zero-fill enumerates expected TILES, which only the " +
-        "square grid keys; use handleMissingTiles=false with a hex grid")
   }
 
   /** Canonical image_id of a packed cell — the exact inverse of
@@ -241,34 +237,29 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   private def fitsBroadcast(index: PolyIndex, cfg: Config): Boolean =
     index.broadcastEstimateBytes <= cfg.broadcastMaxBytes
 
-  /** The covering cells, for the scan predicate and the zero-fill alike:
-    * the lookup's sorted keys on the driver, without a Spark job, when the
-    * index fits the broadcast ceiling (the lookup is touched only then);
-    * otherwise `cellPolys`, whose `cell` column is the same set. */
-  private def coveredCells(index: PolyIndex, cfg: Config): Either[Array[Long], DataFrame] =
-    if (fitsBroadcast(index, cfg))
-      Left(index.broadcastLookup.value.keySet.asScala.toArray.sorted)
-    else Right(index.cellPolys)
-
   /** Covering-range scan pruning: a parquet-pushable predicate on
     * image_id derived from the polygon set's covering cells. Exact IN
     * set of canonical ids when the extent is small (the reference's
     * covering-range read, image_loaders.py:266-269); sound min/max id
     * range (row-group pruning via parquet stats) when it is not. None
-    * when the polygon set covers nothing. */
+    * when the polygon set covers nothing. The covering cells are the
+    * lookup's sorted keys on the driver, without a Spark job, when the
+    * index fits the broadcast ceiling (the lookup is touched only then),
+    * otherwise the `cell` column of `cellPolys`. */
   def tileIdPredicate(index: PolyIndex, cfg: Config): Option[Column] =
     index.predicateCache.computeIfAbsent((cfg.webMercatorZoom, cfg.pruneInSetMax), _ => {
       // up to pruneInSetMax + 1 ids decide small-vs-large AND supply the
       // set; `range` gives the min and max id over all of them
-      val (headIds, range) = coveredCells(index, cfg) match {
-        case Left(cells) =>
-          val ids = cells.map(naming(cfg.webMercatorZoom).cellKey).filter(_ != null)
+      val (headIds, range) =
+        if (fitsBroadcast(index, cfg)) {
+          val ids = index.broadcastLookup.value.keySet.asScala.toArray.sorted
+            .map(naming(cfg.webMercatorZoom).cellKey).filter(_ != null)
           (ids.take(cfg.pruneInSetMax + 1), () => (ids.min, ids.max))
-        case Right(cellPolys) =>
-          val ids = cellPolys.select(cellToImageId(cfg).as("tid")).where(col("tid").isNotNull)
+        } else {
+          val ids = index.cellPolys.select(cellToImageId(cfg).as("tid")).where(col("tid").isNotNull)
           (ids.limit(cfg.pruneInSetMax + 1).collect().map(_.getString(0)),
             () => { val r = ids.agg(min("tid"), max("tid")).head(); (r.getString(0), r.getString(1)) })
-      }
+        }
       if (headIds.isEmpty) Some(lit(false))
       else if (headIds.length <= cfg.pruneInSetMax)
         Some(col("image_id").isInCollection(headIds.toSeq))
@@ -280,50 +271,65 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     * unchanged (and are skipped by scoring anyway). Run at ingest when a
     * tile catalog may contain parseable-but-non-canonical names, so the
     * covering-range pruning predicate ([[Config.pruneTileScan]]) and the
-    * scored set agree. */
+    * scored set agree. An alias merged into the id of a tile the table
+    * also holds leaves two rows for one cell, which zero-fill does not
+    * take (see [[fragmentSums]]): keep one of them. */
   def normalizeImageIds(tiles: DataFrame, cfg: Config): DataFrame =
     tiles.withColumn("image_id",
       coalesce(cellToImageId(cfg, keyToCell(cfg.webMercatorZoom)(col("image_id"))), col("image_id")))
 
   /** The tile frame with the covering-range scan predicate applied — the
-    * exact pruning [[fragmentSums]] performs internally, so
-    * [[writePartialUnit]] records the SAME tile set the scoring pass saw
-    * (a tile dropped by pruning must count as missing, not silently
-    * vanish from both passes). */
+    * exact pruning [[fragmentSums]] performs internally. A tile it drops
+    * is not scored, so zero-fill counts its pixels as missing. */
   def pruneTiles(tiles: DataFrame, index: PolyIndex, cfg: Config): DataFrame =
     if (!cfg.pruneTileScan || cfg.grid != graft.index.GridSystem.Square) tiles
     else tileIdPredicate(index, cfg).fold(tiles)(tiles.where)
 
   /** The distributive core: per-garden raw long sums
-    * (gid, npix, veg_0..veg_{nK-1}) of all fragment scores. This is the
-    * unit Checkpoint groups and streaming batches persist — re-aggregating
-    * any partition of the tile table and summing is bit-exact (pure long
-    * adds), so partials never round-trip through a double.
+    * (gid, npix, veg_0..veg_{nK-1}) of the scored fragments, one per tile
+    * row a polygon covers. This is the unit Checkpoint groups and
+    * streaming batches persist — re-aggregating any partition of the tile
+    * table and summing is bit-exact (pure long adds), so partials never
+    * round-trip through a double. The sums carry no zero-fill:
+    * [[fractionsFromSums]] adds it from each garden's mask total.
     *
-    * `handleMissingTiles` adds the reference's zero-fill fragments
-    * (image_loaders.py:239): cells covered by polygons but absent from
-    * the tile table score against a null raster (onBlack classification,
-    * full npix denominator). The present-cell set comes from a second,
-    * image_id-column-only pass over the tile table — parquet column
-    * pruning makes that a ~0.01% re-read, no fragment persist needed. */
+    * PRECONDITION with `handleMissingTiles`: at most one tile row per
+    * cell after pruning, as in the reference, which reads one file per
+    * tile name (image_loaders.py:229-233). A cell scored twice (a
+    * duplicate row, or an alias [[normalizeImageIds]] merged into a tile
+    * the table also holds) lifts a garden's scored pixels above its mask
+    * total, and [[fractionsFromSums]] fails naming the garden. */
   def fragmentSums(spark: SparkSession, index: PolyIndex, tiles: DataFrame,
                    cfg: Config, cirTiles: Option[DataFrame] = None): DataFrame = {
-    val nK = cfg.kernelNames.length
-    val frags = fragments(spark, index, tiles, cfg, cirTiles)
-    val vegSums = (0 until nK).map(i => sum(col("veg")(i)).as(s"veg_$i"))
-    frags.groupBy("gid").agg(sum(col("npix")).as("npix"), vegSums: _*)
+    val vegSums = cfg.kernelNames.indices.map(i => sum(col("veg")(i)).as(s"veg_$i"))
+    scoredFragments(index, tiles, cfg, cirTiles)
+      .groupBy("gid").agg(sum(col("npix")).as("npix"), vegSums: _*)
   }
 
-  /** The unaggregated fragment frame (gid, npix, veg[nK]) that
-    * [[fragmentSums]] groups — one row per scored polygon∩tile fragment
-    * (plus the zero-fill rows when handleMissingTiles). Exposed so the
+  /** The unaggregated fragment frame (gid, npix, veg[nK]) whose
+    * groupBy-sum is [[fragmentSums]], plus with handleMissingTiles one
+    * zero-fill row per garden — (gid, missing pixels, onBlack × them),
+    * the arithmetic [[fractionsFromSums]] applies. Exposed so the
     * correctness sidecars ([[graft.Sidecars]]) can hand the DuckDB oracle
     * the pipeline's pre-aggregation state: the oracle then re-derives the
     * groupBy-sum, metadata join and fraction division independently. */
   def fragments(spark: SparkSession, index: PolyIndex, tiles: DataFrame,
                 cfg: Config, cirTiles: Option[DataFrame] = None): DataFrame = {
-    val nK = cfg.kernelNames.length
-    require(nK > 0, "at least one index kernel required")
+    val scored = scoredFragments(index, tiles, cfg, cirTiles)
+    if (!cfg.handleMissingTiles) scored
+    else {
+      val missing = missingPixels
+      scored.union(index.prepared.select("gid", "id", "npix_total")
+        .join(scored.groupBy("gid").agg(sum("npix").as("npix")), Seq("gid"), "left_outer")
+        .select(col("gid"), missing.as("npix"),
+          array(onBlack(cfg).map(b => lit(b) * missing): _*).as("veg")))
+    }
+  }
+
+  /** One (gid, npix, veg) row per polygon∩tile fragment scored. */
+  private def scoredFragments(index: PolyIndex, tiles: DataFrame, cfg: Config,
+                              cirTiles: Option[DataFrame]): DataFrame = {
+    require(cfg.kernelNames.nonEmpty, "at least one index kernel required")
     requireIndexFits(index, cfg)
     // format-compat check (reference: analyse_polygons.py:208-213)
     val fmts = cfg.kernelNames.map(Kernels.all(_).inputFormat).distinct
@@ -343,7 +349,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
 
     def prune(df: DataFrame): DataFrame = pruneTiles(df, index, cfg)
-    val prunedTiles = prune(tiles)
     // a pre-materialized `cell` column (the bucketed tile-table write
     // path, TileBuckets.write) is used as-is: deriving it again through
     // the key expression would discard the scan's bucket partitioning
@@ -351,7 +356,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     def withCell(df: DataFrame): DataFrame =
       if (df.columns.contains("cell")) df
       else df.withColumn("cell", keyToCell(cfg.webMercatorZoom)(col("image_id")))
-    val rgbWithCell = withCell(prunedTiles)
+    val rgbWithCell = withCell(prune(tiles))
       .select(col("cell"), col("image_id"), col("bytes"))
       .where(col("cell").isNotNull)
 
@@ -404,114 +409,83 @@ object VegPipeline extends org.apache.spark.internal.Logging {
           cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
           metrics = cfg.metrics)))
       }
-    val scored = fragmentRows(matched, scoreCol)
-
-    if (cfg.handleMissingTiles)
-      scored.union(missingSumsFromPresent(presentCells(prunedTiles, cfg), index, cfg))
-    else scored
-  }
-
-  /** Distinct cells present in a tile table — an image_id-column-only
-    * scan (parquet column pruning skips the bytes entirely). */
-  def presentCells(tiles: DataFrame, cfg: Config): DataFrame = {
-    val cellCol =
-      if (tiles.columns.contains("cell")) col("cell")
-      else keyToCell(cfg.webMercatorZoom)(col("image_id"))
-    tiles.select(cellCol.as("cell"))
-      .where(col("cell").isNotNull)
-      .distinct()
-  }
-
-  /** Zero-fill fragment scores for covered cells absent from `present`
-    * (null raster -> onBlack classification). Returns unaggregated
-    * (gid, npix, veg) rows. On the broadcast path the covered cells are
-    * the lookup's keys and the missing ones score through the lookup;
-    * the shuffled path takes both from cellPolys. */
-  def missingSumsFromPresent(present: DataFrame, index: PolyIndex, cfg: Config): DataFrame = {
-    requireIndexFits(index, cfg)
-    val (covered, blobs, lookup) = coveredCells(index, cfg) match {
-      case Left(cells) => // an RDD keeps a large cell set out of the plan
-        val spark = present.sparkSession
-        (spark.createDataset(spark.sparkContext.parallelize(cells.toSeq))(Encoders.scalaLong)
-          .toDF("cell"), lit(null).cast("array<binary>"), Some(index.broadcastLookup))
-      case Right(cellPolys) => (cellPolys, col("blobs"), None)
-    }
-    val missingScore = ec(ScoreFragments(
-      ee(col("cell")), ee(lit(null).cast("binary")), ee(lit(null).cast("binary")), ee(blobs),
-      cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
-      metrics = cfg.metrics, lookup = lookup))
-    fragmentRows(covered.join(present, Seq("cell"), "left_anti"), missingScore)
-  }
-
-  /** One (gid, npix, veg) row per fragment of a ScoreFragments column. */
-  private def fragmentRows(df: DataFrame, score: Column): DataFrame =
-    df.select(explode(score).as("s"))
+    matched.select(explode(scoreCol).as("s"))
       .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
+  }
 
   /** Writes one partial-sum unit — a [[Checkpoint]] group or a
-    * streaming micro-batch — of `tiles`: the raw-long sums without
-    * zero-fill at `<outDir>/<unit>`, then the cells the unit presented to
-    * scoring at `<outDir>/cells/<unit>`. Both overwrite, so re-running a
-    * unit is idempotent; callers commit (manifest line, batch id) after
-    * this returns. The cell set is taken from the SAME pruned tile set
-    * scoring saw: a tile the covering-range predicate drops (a
-    * parseable but non-canonical id) counts as missing at finalization
-    * instead of vanishing from both passes. */
+    * streaming micro-batch — of `tiles`: its [[fragmentSums]] at
+    * `<outDir>/<unit>`. The write overwrites, so re-running a unit is
+    * idempotent; callers commit (manifest line, batch id) after this
+    * returns. */
   def writePartialUnit(spark: SparkSession, index: PolyIndex, tiles: DataFrame, cfg: Config,
-                       outDir: String, unit: String): Unit = {
-    fragmentSums(spark, index, tiles, cfg.copy(handleMissingTiles = false))
-      .write.mode("overwrite").parquet(s"$outDir/$unit")
-    presentCells(pruneTiles(tiles, index, cfg), cfg)
-      .write.mode("overwrite").parquet(s"$outDir/cells/$unit")
-  }
+                       outDir: String, unit: String): Unit =
+    fragmentSums(spark, index, tiles, cfg).write.mode("overwrite").parquet(s"$outDir/$unit")
 
-  /** Final per-garden fractions over the units matching `unitGlob` (e.g.
-    * `group=*`) that [[writePartialUnit]] wrote under `outDir`. Reads
-    * partials and cell sets only, no tile. */
+  /** Final per-garden fractions (without uprn and sort_key) over the
+    * units matching `unitGlob` (e.g. `group=*`) that [[writePartialUnit]]
+    * wrote under `outDir`: their sums re-aggregate and
+    * [[fractionsFromSums]] zero-fills once. Reads partials only, no tile;
+    * other entries of `outDir`, such as the `cells` directory older
+    * layouts wrote, are ignored. Fails when no unit matches. */
   def fractionsFromUnits(spark: SparkSession, index: PolyIndex, cfg: Config,
-                         outDir: String, unitGlob: String): DataFrame =
-    fractionsFromPartials(index, spark.read.parquet(s"$outDir/$unitGlob"),
-      spark.read.parquet(s"$outDir/cells/$unitGlob"), cfg)
-
-  /** Final per-garden fractions (without uprn and sort_key) from
-    * persisted raw-long partials (gid, npix, veg_0..). With
-    * handleMissingTiles, the zero-fill fragments of covered cells absent
-    * from `present` are added once here: per-unit runs must not each
-    * zero-fill, since a cell missing from one unit is usually present in
-    * another. */
-  def fractionsFromPartials(index: PolyIndex, partials: DataFrame, present: => DataFrame,
-                            cfg: Config): DataFrame = {
-    val nK = cfg.kernelNames.length
-    val withMissing =
-      if (cfg.handleMissingTiles)
-        partials.unionByName(missingSumsFromPresent(present, index, cfg)
-          .select(Seq(col("gid"), col("npix")) ++
-            (0 until nK).map(i => col("veg")(i).as(s"veg_$i")): _*))
-      else partials
-    val agg = withMissing.groupBy("gid").agg(
-      sum("npix").as("npix"),
-      (0 until nK).map(i => sum(col(s"veg_$i")).as(s"veg_$i")): _*)
-    fractionsFromSums(index, agg, cfg).drop("uprn", "sort_key")
+                         outDir: String, unitGlob: String): DataFrame = {
+    // concrete paths: the reader logs a WARN with a stack trace for a
+    // glob while it looks for a streaming-sink metadata directory
+    val pattern = new org.apache.hadoop.fs.Path(outDir, unitGlob)
+    val units = Option(pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(pattern)).toSeq.flatten.filter(_.isDirectory).map(_.getPath.toString)
+    require(units.nonEmpty, s"no partial-sum unit matches $pattern")
+    val sums = spark.read.parquet(units: _*).groupBy("gid").agg(sum("npix").as("npix"),
+      cfg.kernelNames.indices.map(i => sum(col(s"veg_$i")).as(s"veg_$i")): _*)
+    fractionsFromSums(index, sums, cfg).drop("uprn", "sort_key")
   }
 
   /** Garden metadata ⋈ raw sums -> the per-garden result frame
-    * (gid, id, uprn, cx, cy, area_m2, sort_key, npix, frac_<kernel>...). */
+    * (gid, id, uprn, cx, cy, area_m2, sort_key, npix, frac_<kernel>...).
+    * With handleMissingTiles, zero-fill happens here as long arithmetic
+    * on the scored sums: npix = npix_total and
+    * veg_i = Σveg_i + onBlack_i × (npix_total − Σnpix) — the totals of
+    * scoring each uncovered cell against a null raster, without reading
+    * the tile table again. */
   def fractionsFromSums(index: PolyIndex, sums: DataFrame, cfg: Config): DataFrame = {
     // a merge join: the meta side's shuffle runs beside the scoring
     // stages, where a broadcast of the sums would wait for them
-    val meta = index.prepared.select("gid", "id", "uprn", "cx", "cy", "area_m2", "sort_key")
+    val meta = index.prepared
+      .select("gid", "id", "uprn", "cx", "cy", "area_m2", "sort_key", "npix_total")
       .hint("merge")
     val joined = meta.join(sums, Seq("gid"), "left_outer")
-    val fracCols = cfg.kernelNames.zipWithIndex.map { case (name, i) =>
-      when(col("npix").isNull || col("npix") === 0L, lit(0.0))
-        .otherwise(col(s"veg_$i").cast("double") / col("npix").cast("double"))
+    val missing = if (cfg.handleMissingTiles) missingPixels else lit(0L)
+    val npix = coalesce(col("npix"), lit(0L)) + missing
+    val fracCols = cfg.kernelNames.zip(onBlack(cfg)).zipWithIndex.map { case ((name, b), i) =>
+      val veg = coalesce(col(s"veg_$i"), lit(0L)) + lit(b) * missing
+      when(npix === 0L, lit(0.0)).otherwise(veg.cast("double") / npix.cast("double"))
         .as(s"frac_$name")
     }
     joined.select(
       Seq(col("gid"), col("id"), col("uprn"), col("cx"), col("cy"),
-        col("area_m2"), col("sort_key"),
-        coalesce(col("npix"), lit(0L)).as("npix")) ++ fracCols: _*)
+        col("area_m2"), col("sort_key"), npix.as("npix")) ++ fracCols: _*)
   }
+
+  /** The pixels of a garden's mask that no scored tile row covered — the
+    * mosaic regions the reference zero-fills (image_loaders.py:239) — on
+    * a row with the garden's `id`, `npix_total` and scored `npix` sum
+    * (null when nothing was scored). More scored pixels than the mask
+    * holds mean a cell was scored twice, which no arithmetic undoes: that
+    * fails, naming the garden. */
+  private def missingPixels: Column = {
+    val scored = coalesce(col("npix"), lit(0L))
+    // raise_error is null-typed; the coalesce keeps the column non-nullable
+    coalesce(
+      when(scored > col("npix_total"), raise_error(concat(lit("garden "), col("id"),
+        lit(" scored "), scored.cast("string"), lit(" pixels, more than its mask's "),
+        col("npix_total").cast("string"), lit(": a tile cell was scored twice " +
+          "(duplicate tile rows, or an alias id merged into its canonical tile)")))),
+      col("npix_total") - scored)
+  }
+
+  /** Each kernel's count for one zero-filled (black) pixel. */
+  private def onBlack(cfg: Config): Seq[Long] = cfg.kernelNames.map(Kernels.all(_).onBlack.toLong)
 
   /** Global summary (A2): total area, per-index vegetation area + pct
     * (reference: analyse_polygons.py:135-155). Each double term is cast

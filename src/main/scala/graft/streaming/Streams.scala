@@ -35,10 +35,11 @@ object Streams extends Serializable {
       .start()
 
   /** Final per-garden fractions from the accumulated streaming partials.
-    * With cfg.handleMissingTiles (the batch default), covered cells never
-    * seen in ANY batch get the reference's zero-fill fragments here, once
-    * — same semantics as the batch path with handleMissingTiles=true.
-    * Reads no tile. */
+    * With cfg.handleMissingTiles (the batch default), each garden's mask
+    * pixels that no batch scored are zero-filled here, once — the batch
+    * path's semantics. Batches keep no cell set, so this reads no tile,
+    * and output directories of older layouts, which also hold a `cells`
+    * directory of cell sets, finalize as they are. */
   def fractionsFromPartials(spark: SparkSession, outDir: String, index: VegPipeline.PolyIndex,
                             cfg: VegPipeline.Config): DataFrame =
     VegPipeline.fractionsFromUnits(spark, index, cfg, outDir, "batch=*")

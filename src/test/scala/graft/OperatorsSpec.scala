@@ -893,7 +893,7 @@ class OperatorsSpec extends AnyFunSuite {
       rows(VegPipeline.run(spark, gardens, tiles, cfg)))
   }
 
-  test("checkpoint fractions read no tile and refuse a directory without cell sets") {
+  test("checkpoint fractions read no tile, also in a directory an older layout wrote") {
     val ts = 64
     val dir = java.nio.file.Files.createTempDirectory("ckpt_notiles")
     val tilesDir = dir.resolve("tiles").toString
@@ -910,18 +910,20 @@ class OperatorsSpec extends AnyFunSuite {
     assert(graft.pipeline.Checkpoint.runGroups(spark, idx, tiles, cfg, outDir,
       buckets = 8, groupSize = 4) == 2)
 
-    // finalization reads only partials and cell sets: the tiles may go
+    // finalization reads only partials: the tiles may go
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tilesDir))
     assert(rows(graft.pipeline.Checkpoint.fractions(spark, idx, cfg, outDir)) == batch)
 
-    // a committed group without its cell set (the layout written before
-    // partial units carried one) must fail, not zero-fill all its cells
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      dir.resolve("out").resolve("cells").resolve("group=1").toFile)
-    val e = intercept[IllegalStateException] {
-      graft.pipeline.Checkpoint.fractions(spark, idx, cfg, outDir)
+    // an older layout also kept each group's cell set under cells/; the
+    // directory finalizes as it is
+    spark.range(3).toDF("cell").write.parquet(dir.resolve("out").resolve("cells")
+      .resolve("group=1").toString)
+    assert(rows(graft.pipeline.Checkpoint.fractions(spark, idx, cfg, outDir)) == batch)
+
+    // a directory no group committed to still fails
+    intercept[IllegalArgumentException] {
+      graft.pipeline.Checkpoint.fractions(spark, idx, cfg, dir.resolve("empty").toString)
     }
-    assert(e.getMessage.contains("group 1"), e.getMessage)
   }
 
   test("streaming hourly window agg runs and is deterministic") {

@@ -115,7 +115,7 @@ class PipelineSpec extends AnyFunSuite {
     // same pipeline, cell→polygon index keyed by hexes of covered tile
     // centers: every square-grid tile match is preserved (superset cover,
     // extra fragments score zero pixels), so sums are bit-identical.
-    // handleMissingTiles=false on BOTH configs (zero-fill is square-only).
+    // handleMissingTiles=false on both configs first, then zero-fill on.
     val names = Seq("greenleaf", "vari")
     val nG = 40L
     val gardenRows = (0L until nG).map(Synthetic.makeGarden(_, gridW, gridH, 42L))
@@ -154,6 +154,28 @@ class PipelineSpec extends AnyFunSuite {
     val hxShuffle = keyed(VegPipeline.run(spark, gardens, tiles,
       cfg(graft.index.GridSystem.Hex(1.7)).copy(broadcastMaxBytes = 0)).collect())
     assert(hxShuffle == hx, "hex shuffle-join path diverged from broadcast path")
+
+    // zero-fill on, with a block of tiles dropped: hex equals square and
+    // the mosaic oracle for every garden, straddlers included
+    val missing = (for (e <- Synthetic.BaseE + 1 to Synthetic.BaseE + 2;
+                        n <- Synthetic.BaseN + 1 to Synthetic.BaseN + 2) yield (e, n)).toSet
+    val holed = tiles.where(!org.apache.spark.sql.functions.col("image_id").isin(
+      missing.toSeq.map { case (e, n) => graft.geo.TileCode.fromEastingsNorthings(e, n) }: _*))
+    def filled(c: VegPipeline.Config) =
+      keyed(VegPipeline.run(spark, gardens, holed, c.copy(handleMissingTiles = true)).collect())
+    val sqFill = filled(cfg(graft.index.GridSystem.Square))
+    assert(filled(cfg(graft.index.GridSystem.Hex(1.7))) == sqFill, "hex zero-fill diverged")
+    assert(filled(cfg(graft.index.GridSystem.Hex(1.7)).copy(broadcastMaxBytes = 0)) == sqFill,
+      "hex shuffle-join zero-fill diverged")
+    val oracleFill = oracleResults(gardenRows, names, missing)
+    assert(gardenRows.exists(g => oracleFill(g.id).fracs != oracle(g.id).fracs),
+      "fixture should zero-fill some pixels")
+    gardenRows.foreach { g =>
+      val o = oracleFill(g.id)
+      val (npix, fracs) = sqFill(g.id)
+      assert(npix == o.npix, s"zero-filled npix for ${g.id}")
+      names.indices.foreach(i => assert(fracs(i) == o.fracs(i), s"zero-filled ${names(i)} for ${g.id}"))
+    }
   }
 
   test("hex-grid superset matches decode exactly the square grid's tiles") {
@@ -319,6 +341,53 @@ class PipelineSpec extends AnyFunSuite {
     def ckpt(cfg: VegPipeline.Config) = rows(Checkpoint.fractions(spark, idx, cfg, dir), rgbNames)
     assert(ckpt(rgbCfg) == filled)
     assert(ckpt(rgbCfg.copy(broadcastMaxBytes = 0)) == filled)
+  }
+
+  test("zero-fill scans each tile table once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
+    // an IRGB job with one RGB tile absent, over parquet tables
+    val dir = java.nio.file.Files.createTempDirectory("one_scan").toString
+    Synthetic.tiles(spark, 3, 3, ts).where(col("image_id") =!=
+      graft.geo.TileCode.fromEastingsNorthings(Synthetic.BaseE + 1, Synthetic.BaseN + 1))
+      .write.parquet(s"$dir/rgb")
+    Synthetic.tilesCir(spark, 3, 3, ts).write.parquet(s"$dir/cir")
+    val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("ndvi-irgb", "matt"))
+    assert(cfg.handleMissingTiles, "test must exercise the batch default")
+    val idx = VegPipeline.buildIndex(spark, Synthetic.gardens(spark, 12, 3, 3), ts)
+    for (c <- Seq(cfg, cfg.copy(broadcastMaxBytes = 0))) {
+      val res = VegPipeline.scoreAgainst(spark, idx, spark.read.parquet(s"$dir/rgb"), c,
+        Some(spark.read.parquet(s"$dir/cir")))
+      res.collect()
+      val scans = new AdaptiveSparkPlanHelper {}.collect(res.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName).mkString(",")
+      }
+      assert(scans.sorted == Seq("cir", "rgb"), s"tile scans (broadcastMaxBytes=${c.broadcastMaxBytes})")
+    }
+  }
+
+  test("zero-fill fails naming the garden when a tile row is duplicated") {
+    import org.apache.spark.sql.functions.{array_contains, col}
+    val gardens = Synthetic.gardens(spark, 20, 3, 3)
+    val dup = graft.geo.TileCode.fromEastingsNorthings(Synthetic.BaseE + 1, Synthetic.BaseN + 1)
+    val tiles = Synthetic.tiles(spark, 3, 3, ts)
+    val twice = tiles.union(tiles.where(col("image_id") === dup))
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+    val cfg = VegPipeline.Config(tileSize = ts)
+    // without zero-fill the duplicate is summed as it stands
+    VegPipeline.scoreAgainst(spark, idx, twice, cfg.copy(handleMissingTiles = false)).collect()
+    val e = intercept[Exception] {
+      VegPipeline.scoreAgainst(spark, idx, twice, cfg).collect()
+    }
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msg.contains("a tile cell was scored twice"), msg)
+    val named = "garden (\\S+) scored".r.findFirstMatchIn(msg).map(_.group(1))
+    val covering = idx.prepared
+      .where(array_contains(col("cells"), graft.index.ZIndex.cellId(Synthetic.BaseE + 1, Synthetic.BaseN + 1)))
+      .select("id").collect().map(_.getString(0)).toSet
+    assert(named.exists(covering), s"named ${named.orNull}, covering gardens $covering")
   }
 
   test("the broadcast path never computes cellPolys") {
@@ -613,30 +682,38 @@ class PipelineSpec extends AnyFunSuite {
     val names = Seq("greenleaf", "hsv")
     val kernels = names.map(Kernels.all(_)).toArray
     val ts = 64
-    def tileFor(x: Int, y: Int): Option[graft.img.Raster] =
-      if (x < x0 || x >= x0 + 3 || y < y0 || y >= y0 + 3) None
-      else Some(Synthetic.tileRaster(x, y, ts, 42L))
-    val oracle = gardenRows.map(g => g.id -> MosaicOracle.computeWebMerc(g, zoom, ts, tileFor, kernels)).toMap
-
-    val tiles = (for (x <- x0 until x0 + 3; y <- y0 until y0 + 3) yield {
-      val r = Synthetic.tileRaster(x, y, ts, 42L)
-      Synthetic.TileRow(s"$zoom/$x/$y", graft.img.Codec.encodePNG(r), ts, ts, "png", "wm tile", 0L)
-    }).toDF()
     val gardens = gardenRows.toDF()
-    val res = VegPipeline.run(spark, gardens, tiles,
-      VegPipeline.Config(tileSize = ts, kernelNames = names,
-        webMercatorZoom = Some(zoom), handleMissingTiles = false)).collect()
-    assert(res.length == 12)
-    res.foreach { row =>
-      val o = oracle(row.getAs[String]("id"))
-      assert(row.getAs[Long]("npix") == o.npix, s"npix for ${row.getAs[String]("id")}")
-      names.zipWithIndex.foreach { case (nm, i) =>
-        assert(row.getAs[Double](s"frac_$nm") == o.fracs(i), s"$nm for ${row.getAs[String]("id")}")
+    // the whole 3x3 block without zero-fill, then zero-fill with one
+    // covered tile dropped: the y-down mask totals fill its pixels
+    val oracles = Seq(None, Some((x0 + 1, y0 + 1))).map { dropped =>
+      def tileFor(x: Int, y: Int): Option[graft.img.Raster] =
+        if (x < x0 || x >= x0 + 3 || y < y0 || y >= y0 + 3 || dropped.contains((x, y))) None
+        else Some(Synthetic.tileRaster(x, y, ts, 42L))
+      val oracle =
+        gardenRows.map(g => g.id -> MosaicOracle.computeWebMerc(g, zoom, ts, tileFor, kernels)).toMap
+
+      val tiles = (for (x <- x0 until x0 + 3; y <- y0 until y0 + 3; r <- tileFor(x, y)) yield
+        Synthetic.TileRow(s"$zoom/$x/$y", graft.img.Codec.encodePNG(r), ts, ts, "png", "wm tile", 0L)
+      ).toDF()
+      val res = VegPipeline.run(spark, gardens, tiles,
+        VegPipeline.Config(tileSize = ts, kernelNames = names,
+          webMercatorZoom = Some(zoom), handleMissingTiles = dropped.nonEmpty)).collect()
+      assert(res.length == 12)
+      res.foreach { row =>
+        val o = oracle(row.getAs[String]("id"))
+        assert(row.getAs[Long]("npix") == o.npix, s"npix for ${row.getAs[String]("id")} ($dropped)")
+        names.zipWithIndex.foreach { case (nm, i) =>
+          assert(row.getAs[Double](s"frac_$nm") == o.fracs(i),
+            s"$nm for ${row.getAs[String]("id")} ($dropped)")
+        }
+        assert(math.abs(row.getAs[Double]("area_m2") - o.areaM2) < 1e-12) // tile² units
       }
-      assert(math.abs(row.getAs[Double]("area_m2") - o.areaM2) < 1e-12) // tile² units
+      val withPix = res.filter(_.getAs[Long]("npix") > 100)
+      assert(withPix.nonEmpty && withPix.exists(r => r.getAs[Double]("frac_greenleaf") > 0.1))
+      oracle
     }
-    val withPix = res.filter(_.getAs[Long]("npix") > 100)
-    assert(withPix.nonEmpty && withPix.exists(r => r.getAs[Double]("frac_greenleaf") > 0.1))
+    assert(gardenRows.exists(g => oracles(0)(g.id).fracs != oracles(1)(g.id).fracs),
+      "the dropped tile should be covered")
   }
 
   /** The web-mercator oracle spec's fixture: 12 CRS84 gardens inside a
