@@ -1377,7 +1377,7 @@ object Queries {
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
     // `div`, not `/`: Spark's `/` is double division, which drops token
     // offsets past 2^53 — a real corpus overflows that
-    graft.functions.PrefixSum.runningTotal(toks, "doc_id", "n_tokens", "running")
+    graft.functions.PrefixSum.runningTotal(toks, "doc_id", "n_tokens", "running")._1
       .select(col("doc_id"), col("n_tokens"),
         (col("running") - col("n_tokens")).as("start_offset"),
         expr(s"(running - n_tokens) div ${seqLen}L").as("seq_first"),
@@ -1670,7 +1670,7 @@ object Queries {
         conv(substring(md5(concat(lit("shuf|"), col("text"))), 1, 15), 16, 10)
           .cast("long").as("k"))
       .withColumn("one", lit(1L))
-    graft.functions.PrefixSum.runningTotal(keyed, "k", "one", "pos")
+    graft.functions.PrefixSum.runningTotal(keyed, "k", "one", "pos")._1
       .select(col("doc_id"), (col("pos") - 1).as("shuffle_pos"))
       .orderBy("doc_id")
   }
@@ -1852,10 +1852,9 @@ object Queries {
     // count (Σ cnt ≡ count(*)) — a separate docs.count() was a second
     // full scan
     val hist = docs.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
-    val cum = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
-    // an empty table has no running total: no documents, total 0
-    val totalRow = cum.agg(max("cum")).head()
-    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
+    // the prefix sum's grand total (0 for an empty table) comes from the
+    // driver, so the windowed frame is evaluated once, by the rank join
+    val (cum, total) = graft.functions.PrefixSum.runningTotal(hist, "n_chars", "cnt", "cum")
     val targets = Seq(25, 50, 75, 95, 99).map(p => (p, (p * total + 99) / 100))
     val tdf = s.createDataFrame(targets).toDF("pct", "rank")
     // every rank is 0 and no value exists (the oracle's scalar subquery
@@ -3780,14 +3779,12 @@ object Queries {
     val n = 100L
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").cast("long").as("w"))
-    // an empty table sums to null, zero-length docs to 0: either way
-    // there is no weight line to cut, so no picks (as in the oracle)
-    val totalRow = docs.agg(sum("w")).head()
-    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
+    // an empty table or zero-length docs total 0: there is no weight
+    // line to cut, so no picks (as in the oracle)
+    val (cum, total) = graft.functions.PrefixSum.runningTotal(docs, "doc_id", "w", "cum")
     if (total == 0L)
       return docs.select(lit(0L).as("k"), col("doc_id"), col("w")).limit(0)
-    graft.functions.PrefixSum.runningTotal(docs, "doc_id", "w", "cum")
-      .withColumn("cb", col("cum") - col("w"))
+    cum.withColumn("cb", col("cum") - col("w"))
       .withColumn("m_lo", expr(s"(2L * ${n}L * cb + ${total}L - 1L) div ${total}L"))
       .withColumn("m_lo", expr("m_lo + CAST(m_lo % 2L = 0L AS BIGINT)"))
       .withColumn("m_hi", expr(s"(2L * ${n}L * cum - 1L) div ${total}L"))
@@ -4854,11 +4851,9 @@ object Queries {
       .select(col("file"), col("rows").cast("long").as("rows"),
         col(s"min_$statCol").cast("long").as("min_key"),
         col(s"max_$statCol").cast("long").as("max_key"))
-    val total = man.agg(sum("rows")).head().getLong(0)
+    val (cum, total) = graft.functions.PrefixSum.runningTotal(man, "min_key", "rows", "cum")
     val target = math.max(1L, (total + 3L) / 4L)
-    val binned = graft.functions.PrefixSum
-      .runningTotal(man, "min_key", "rows", "cum")
-      .withColumn("bin", expr(s"(cum - rows) div ${target}L"))
+    val binned = cum.withColumn("bin", expr(s"(cum - rows) div ${target}L"))
     val stats = binned.groupBy("bin").agg(
       count(lit(1)).as("bin_files"), sum("rows").as("bin_rows"),
       min("min_key").as("bin_min_key"), max("max_key").as("bin_max_key"))

@@ -37,12 +37,14 @@ object PrefixSum {
   /** Appends `outCol` = Σ value over all rows with key <= this row's key
     * (inclusive running total, key ascending; `valueCol` must be
     * non-negative longs and `keyCol` unique — both hold for token counts
-    * keyed by doc id).
+    * keyed by doc id). Returns the frame with the grand total Σ value,
+    * which the driver already holds (0 for an empty input), so a caller
+    * needing it does not evaluate the window a second time.
     *
     * @param buckets number of range buckets P; parallelism of the sort
     *                stage. Each bucket window-sorts ~N/P rows. */
   def runningTotal(df: DataFrame, keyCol: String, valueCol: String,
-                   outCol: String, buckets: Int = 32): DataFrame = {
+                   outCol: String, buckets: Int = 32): (DataFrame, Long) = {
     require(buckets >= 1, "buckets must be >= 1")
     // the input feeds THREE passes (the min/max agg, the bucket totals,
     // the final local cumsum) — materialize it once so its derivation
@@ -52,7 +54,7 @@ object PrefixSum {
     val dfm = df.localCheckpoint(true)
     val kc = col(keyCol).cast("long")
     val Array(kmin, kmax) = dfm.agg(min(kc), max(kc)).head() match {
-      case r if r.isNullAt(0) => return dfm.withColumn(outCol, lit(null).cast("long"))
+      case r if r.isNullAt(0) => return (dfm.withColumn(outCol, lit(null).cast("long")), 0L)
       case r => Array(r.getLong(0), r.getLong(1))
     }
     // equal-width range buckets over [kmin, kmax]: order-preserving
@@ -76,7 +78,7 @@ object PrefixSum {
     // bucket totals -> exclusive running offset per bucket (P rows on the
     // driver; P is a parallelism knob, never data-sized)
     val totals = withB.groupBy("__psb")
-      .agg(sum(col(valueCol).cast("long")).as("__pstot"))
+      .agg(coalesce(sum(col(valueCol).cast("long")), lit(0L)).as("__pstot"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
     val offsets = totals.map { case (b, t) => val o = (b, acc); acc += t; o }
@@ -84,7 +86,6 @@ object PrefixSum {
       when(col("__psb") === b, lit(o)).otherwise(c)
     }
 
-    local.withColumn(outCol, col("__pslocal") + offCol)
-      .drop("__psb", "__pslocal")
+    (local.withColumn(outCol, col("__pslocal") + offCol).drop("__psb", "__pslocal"), acc)
   }
 }

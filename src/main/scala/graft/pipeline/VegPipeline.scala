@@ -55,31 +55,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         * default: well under driver/executor headroom and Spark's 8 GiB
         * broadcast hard cap. */
       broadcastMaxBytes: Long = 2L << 30,
-      /** Push the polygon set's covering range into the tile scan as an
-        * image_id predicate (the reference never reads a tile outside the
-        * covering range, image_loaders.py:266-269). Canonical-id IN set
-        * for small extents, min/max range otherwise — both reach the
-        * parquet reader as PushedFilters.
-        *
-        * PRECONDITION: image_ids must be in canonical form (the id
-        * [[normalizeImageIds]] round-trips to itself; the reference only
-        * ever reads canonically-named tiles, it builds paths FROM
-        * coordinates, image_loaders.py:229-233). A parseable but
-        * NON-canonical id (e.g. an OSGB code containing the skipped
-        * letter 'I') decodes to the same cell yet fails the IN-set match
-        * and is treated as missing (zero-filled). Run
-        * [[normalizeImageIds]] at ingest when ids may be non-canonical. */
-      pruneTileScan: Boolean = true,
-      /** Covering-cell count above which pruning falls back from an exact
-        * IN set to a sound min/max image_id range. The literal IN set is
-        * serialized into every task binary and deserialized PER TASK —
-        * measured at ~35 ms/task for 147k strings, which at 1000 scan
-        * tasks costs more than the whole unpruned scan. 8k ids ≈ 200 KB
-        * keeps that negligible; beyond it a covering set that large
-        * overlaps most of the table anyway, so the min/max range (pushed
-        * to parquet row-group stats) plus the exact cell join filter
-        * capture nearly all the benefit. */
-      pruneInSetMax: Int = 8192,
       /** decoded-tile / fragment accumulators (C3 statistics). */
       metrics: Option[PipelineMetrics] = None,
       /** Grid system for the cell→polygon index and the polygon⋈tile
@@ -89,7 +64,8 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         * indexes polygons by the hexes of their covered tiles' centers;
         * the join matches a superset of the square-grid tile set whose
         * extra fragments score zero pixels, so the per-garden sums are
-        * bit-identical. Hex disables covering-range scan pruning. */
+        * bit-identical. Hex cells are not tiles, so a hex run scans the
+        * tile table without covering-range pruning. */
       grid: graft.index.GridSystem = graft.index.GridSystem.Square)
 
   import Exprs.{col => ec, expr => ee}
@@ -149,11 +125,13 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   final case class PolyIndex(prepared: DataFrame, cellPolys: DataFrame, tileSize: Int,
                              webMercatorZoom: Option[Int] = None,
                              grid: graft.index.GridSystem = graft.index.GridSystem.Square) {
-    /** Memoized covering-range scan predicates (one per loader/config):
-      * the index is immutable once built, so repeated scoring runs reuse
-      * the computed id set instead of re-collecting it. */
-    @transient private[pipeline] lazy val predicateCache =
-      new java.util.concurrent.ConcurrentHashMap[(Option[Int], Int), Option[Column]]()
+    /** [[VegPipeline.covering]]'s memo: one slot with no key, since both
+      * sources of the covering cells yield the same set. */
+    @transient private var coveringSet: Covering = _
+    private[pipeline] def coveringMemo(compute: => Covering): Covering = synchronized {
+      if (coveringSet == null) coveringSet = compute
+      coveringSet
+    }
 
     /** Estimated in-memory size of [[broadcastLookup]]: each garden's
       * blob bytes once (blobs are reference-shared across covering cells)
@@ -227,63 +205,86 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     require(index.grid == cfg.grid, s"index built for grid ${index.grid}, config has ${cfg.grid}")
   }
 
-  /** Canonical image_id of a packed cell — the exact inverse of
-    * [[keyToCell]] for well-formed ids (the reference only ever reads
-    * canonically-named tiles: it builds file paths FROM coordinates,
-    * image_loaders.py:229-233, 266-269). */
-  private def cellToImageId(cfg: Config, cell: Column = col("cell")): Column =
-    naming(cfg.webMercatorZoom).toKey(cell)
-
   private def fitsBroadcast(index: PolyIndex, cfg: Config): Boolean =
     index.broadcastEstimateBytes <= cfg.broadcastMaxBytes
 
-  /** Covering-range scan pruning: a parquet-pushable predicate on
-    * image_id derived from the polygon set's covering cells. Exact IN
-    * set of canonical ids when the extent is small (the reference's
-    * covering-range read, image_loaders.py:266-269); sound min/max id
-    * range (row-group pruning via parquet stats) when it is not. None
-    * when the polygon set covers nothing. The covering cells are the
-    * lookup's sorted keys on the driver, without a Spark job, when the
-    * index fits the broadcast ceiling (the lookup is touched only then),
-    * otherwise the `cell` column of `cellPolys`. */
-  def tileIdPredicate(index: PolyIndex, cfg: Config): Option[Column] =
-    index.predicateCache.computeIfAbsent((cfg.webMercatorZoom, cfg.pruneInSetMax), _ => {
-      // up to pruneInSetMax + 1 ids decide small-vs-large AND supply the
-      // set; `range` gives the min and max id over all of them
-      val (headIds, range) =
-        if (fitsBroadcast(index, cfg)) {
-          val ids = index.broadcastLookup.value.keySet.asScala.toArray.sorted
-            .map(naming(cfg.webMercatorZoom).cellKey).filter(_ != null)
-          (ids.take(cfg.pruneInSetMax + 1), () => (ids.min, ids.max))
-        } else {
-          val ids = index.cellPolys.select(cellToImageId(cfg).as("tid")).where(col("tid").isNotNull)
-          (ids.limit(cfg.pruneInSetMax + 1).collect().map(_.getString(0)),
-            () => { val r = ids.agg(min("tid"), max("tid")).head(); (r.getString(0), r.getString(1)) })
+  /** What pruning reads of an index's covering tile cells: the image_id
+    * predicate and the cells' (eMin, eMax, nMin, nMax), None if empty. */
+  private[graft] final case class Covering(idPredicate: Column, bbox: Option[(Long, Long, Long, Long)])
+
+  /** Covering-cell count above which the predicate falls back from an
+    * exact IN set to a sound min/max image_id range. The literal IN set
+    * is serialized into every task binary and deserialized PER TASK —
+    * measured at ~35 ms/task for 147k strings, which at 1000 scan tasks
+    * costs more than the whole unpruned scan. 8k ids ≈ 200 KB keeps that
+    * negligible; beyond it a covering set that large overlaps most of the
+    * table anyway, so the min/max range (pushed to parquet row-group
+    * stats) plus the exact cell match capture nearly all the benefit. */
+  private val MaxInSetIds = 8192
+
+  /** The one source of covering-range pruning, for [[tileIdPredicate]]
+    * and [[graft.sources.SnapshotTiles.coveringRanges]]; None on a hex
+    * grid, whose cells are not tiles. The cells are the broadcast lookup's
+    * keys (no Spark job) when the index fits it, otherwise at most 8,193
+    * of `cellPolys`' cells; above 8,192 one aggregation gives the id range
+    * and the box, so the driver never holds a large covering set. */
+  private[graft] def covering(index: PolyIndex, cfg: Config): Option[Covering] =
+    if (index.grid != graft.index.GridSystem.Square) None
+    else Some(index.coveringMemo {
+      val name = naming(index.webMercatorZoom)
+      val lookup = fitsBroadcast(index, cfg)
+      val cells =
+        if (lookup) index.broadcastLookup.value.keySet.asScala.toArray
+        else index.cellPolys.select("cell").limit(MaxInSetIds + 1).collect().map(_.getLong(0))
+      val inHand = lookup || cells.length <= MaxInSetIds
+      lazy val ids = cells.map(name.cellKey).filter(_ != null).sorted
+      val (es, ns) = (cells.map(_ >> 31), cells.map(_ & 0x7fffffffL))
+      val (lo, hi, bbox) =
+        if (inHand) (ids.headOption.orNull, ids.lastOption.orNull,
+          Option.when(cells.nonEmpty)((es.min, es.max, ns.min, ns.max)))
+        else {
+          val (tid, e, n) = (name.toKey(col("cell")), shiftright(col("cell"), 31),
+            col("cell").bitwiseAND(lit(0x7fffffffL)))
+          val r = index.cellPolys.agg(min(tid), max(tid), min(e), max(e), min(n), max(n)).head()
+          (r.getString(0), r.getString(1), Some((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
         }
-      if (headIds.isEmpty) Some(lit(false))
-      else if (headIds.length <= cfg.pruneInSetMax)
-        Some(col("image_id").isInCollection(headIds.toSeq))
-      else { val (lo, hi) = range(); Some(col("image_id") >= lo && col("image_id") <= hi) }
+      Covering(
+        if (lo == null) lit(false)
+        else if (inHand && ids.length <= MaxInSetIds) col("image_id").isInCollection(ids)
+        else col("image_id") >= lo && col("image_id") <= hi, bbox)
     })
+
+  /** Covering-range scan pruning (the reference never reads a tile outside
+    * the covering range, image_loaders.py:266-269): a parquet-pushable
+    * image_id predicate from [[covering]]; None on a hex grid.
+    *
+    * PRECONDITION: image_ids are canonical (the id [[normalizeImageIds]]
+    * round-trips to itself; the reference builds paths FROM coordinates,
+    * image_loaders.py:229-233). A parseable but non-canonical id (e.g. an
+    * OSGB code with the skipped letter 'I') decodes to the same cell yet
+    * fails the IN set, so its tile is treated as missing (zero-filled). */
+  def tileIdPredicate(index: PolyIndex, cfg: Config): Option[Column] =
+    covering(index, cfg).map(_.idPredicate)
 
   /** Rewrite image_id to canonical form by round-tripping through the
     * cell key (id -> cell -> canonical id); unparseable ids pass through
     * unchanged (and are skipped by scoring anyway). Run at ingest when a
     * tile catalog may contain parseable-but-non-canonical names, so the
-    * covering-range pruning predicate ([[Config.pruneTileScan]]) and the
+    * always-on covering-range predicate ([[tileIdPredicate]]) and the
     * scored set agree. An alias merged into the id of a tile the table
     * also holds leaves two rows for one cell, which zero-fill does not
     * take (see [[fragmentSums]]): keep one of them. */
-  def normalizeImageIds(tiles: DataFrame, cfg: Config): DataFrame =
-    tiles.withColumn("image_id",
-      coalesce(cellToImageId(cfg, keyToCell(cfg.webMercatorZoom)(col("image_id"))), col("image_id")))
+  def normalizeImageIds(tiles: DataFrame, cfg: Config): DataFrame = {
+    val n = naming(cfg.webMercatorZoom)
+    tiles.withColumn("image_id", coalesce(n.toKey(n.toCell(col("image_id"))), col("image_id")))
+  }
 
-  /** The tile frame with the covering-range scan predicate applied — the
-    * exact pruning [[fragmentSums]] performs internally. A tile it drops
-    * is not scored, so zero-fill counts its pixels as missing. */
+  /** The tile frame with [[tileIdPredicate]] applied (unchanged on a hex
+    * grid) — the exact pruning [[fragmentSums]] performs internally. A
+    * tile it drops is not scored, so zero-fill counts its pixels as
+    * missing. */
   def pruneTiles(tiles: DataFrame, index: PolyIndex, cfg: Config): DataFrame =
-    if (!cfg.pruneTileScan || cfg.grid != graft.index.GridSystem.Square) tiles
-    else tileIdPredicate(index, cfg).fold(tiles)(tiles.where)
+    tileIdPredicate(index, cfg).fold(tiles)(tiles.where)
 
   /** The distributive core: per-garden raw long sums
     * (gid, npix, veg_0..veg_{nK-1}) of the scored fragments, one per tile
@@ -348,7 +349,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       logWarning(s"polygon index estimated at ${index.broadcastEstimateBytes} bytes exceeds " +
         s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
 
-    def prune(df: DataFrame): DataFrame = pruneTiles(df, index, cfg)
     // a pre-materialized `cell` column (the bucketed tile-table write
     // path, TileBuckets.write) is used as-is: deriving it again through
     // the key expression would discard the scan's bucket partitioning
@@ -356,7 +356,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     def withCell(df: DataFrame): DataFrame =
       if (df.columns.contains("cell")) df
       else df.withColumn("cell", keyToCell(cfg.webMercatorZoom)(col("image_id")))
-    val rgbWithCell = withCell(prune(tiles))
+    val rgbWithCell = withCell(pruneTiles(tiles, index, cfg))
       .select(col("cell"), col("image_id"), col("bytes"))
       .where(col("cell").isNotNull)
 
@@ -371,7 +371,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     // (TileBuckets), benched separately as q34_irgb_bucketed.
     val tilesWithCell = cirTiles match {
       case Some(cir) =>
-        val cirWithCell = withCell(prune(cir))
+        val cirWithCell = withCell(pruneTiles(cir, index, cfg))
           .select(col("cell"), col("bytes").as("cir_bytes"))
           .where(col("cell").isNotNull)
         rgbWithCell.join(cirWithCell, Seq("cell"), "left_outer")

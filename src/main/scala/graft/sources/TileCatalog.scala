@@ -85,8 +85,10 @@ object TileLayout {
   * intersect it are never planned — Iceberg's planning step), and then
   * the engine's covering-range image_id predicate
   * ([[graft.pipeline.VegPipeline.tileIdPredicate]]) prunes row-groups
-  * WITHIN the surviving files. Two independent pruning levels, both
-  * ahead of any decode work. */
+  * WITHIN the surviving files. Two pruning levels, both ahead of any
+  * decode work and both derived from the index's one covering-cell set
+  * (VegPipeline.covering); a hex index gets neither, its cells are
+  * not tiles. */
 object SnapshotTiles {
 
   /** Stat columns every tile-table commit carries for manifest skipping. */
@@ -103,21 +105,22 @@ object SnapshotTiles {
       TileLayout.zOrderClustered(tiles, nFiles, webMercatorZoom).drop("cell", "zkey"), statCols)
 
   /** The polygon index's covering-cell bounding box as manifest-prune
-    * ranges — O(covering cells) aggregation, resolved once per run. An
-    * empty index yields an impossible range, so the scan plans no real
-    * work and the re-applied filter returns an empty frame. */
-  def coveringRanges(index: VegPipeline.PolyIndex): Seq[SnapshotTable.Range] = {
-    val e = shiftright(col("cell"), 31)
-    val n = col("cell").bitwiseAND(lit(0x7fffffffL))
-    val r = index.cellPolys.agg(min(e), max(e), min(n), max(n)).head()
-    // The empty sentinel must prune EVERY file's [min,max] stats — a
-    // (lo=1, hi=0) range fails to prune files whose stats straddle 0,
-    // so they would be planned and scanned for nothing. (MaxValue,
-    // MinValue) makes `max < lo` true for every file.
-    if (r.isNullAt(0)) Seq(SnapshotTable.Range("cell_e", Long.MaxValue, Long.MinValue))
-    else Seq(SnapshotTable.Range("cell_e", r.getLong(0), r.getLong(1)),
-      SnapshotTable.Range("cell_n", r.getLong(2), r.getLong(3)))
-  }
+    * ranges: the `cell_e` and `cell_n` bounds of the same covering cells
+    * the image_id predicate is built from, sharing the index's one memo
+    * (no Spark job when the index fits the default broadcast ceiling).
+    * An empty index yields an impossible range, so the scan plans no real
+    * work; a hex index yields no range, since its cells are not tiles. */
+  def coveringRanges(index: VegPipeline.PolyIndex): Seq[SnapshotTable.Range] =
+    VegPipeline.covering(index, VegPipeline.Config()).map(_.bbox) match {
+      case None => Nil
+      // The empty sentinel must prune EVERY file's [min,max] stats — a
+      // (lo=1, hi=0) range fails to prune files whose stats straddle 0,
+      // so they would be planned and scanned for nothing. (MaxValue,
+      // MinValue) makes `max < lo` true for every file.
+      case Some(None) => Seq(SnapshotTable.Range("cell_e", Long.MaxValue, Long.MinValue))
+      case Some(Some((e0, e1, n0, n1))) =>
+        Seq(SnapshotTable.Range("cell_e", e0, e1), SnapshotTable.Range("cell_n", n0, n1))
+    }
 }
 
 /** The RGB (and optional CIR) tile tables over [[SnapshotTable]]s:

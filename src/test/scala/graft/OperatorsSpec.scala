@@ -1300,18 +1300,18 @@ class OperatorsSpec extends AnyFunSuite {
     val rows = Seq((7L, 3L), (1L, 0L), (100L, 5L), (42L, 2L), (3L, 7L),
       (55L, 1L), (2L, 4L), (99L, 0L), (64L, 6L), (13L, 9L))
     val df = rows.toDF("k", "v").repartition(4)
-    val got = graft.functions.PrefixSum.runningTotal(df, "k", "v", "run", buckets = 3)
+    val got = graft.functions.PrefixSum.runningTotal(df, "k", "v", "run", buckets = 3)._1
       .select("k", "run").as[(Long, Long)].collect().sortBy(_._1)
     val want = df.withColumn("run", sum("v").over(Window.orderBy("k")))
       .select("k", "run").as[(Long, Long)].collect().sortBy(_._1)
     assert(got.toSeq == want.toSeq)
     // the distributed scan must not plan the single-task global window
-    val plan = graft.functions.PrefixSum.runningTotal(df, "k", "v", "run", buckets = 3)
+    val plan = graft.functions.PrefixSum.runningTotal(df, "k", "v", "run", buckets = 3)._1
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"), s"global-window bottleneck:\n$plan")
     // empty input: null column, no crash
     val empty = spark.emptyDataFrame.withColumn("k", lit(1L)).withColumn("v", lit(1L)).where(lit(false))
-    assert(graft.functions.PrefixSum.runningTotal(empty, "k", "v", "run").count() == 0)
+    assert(graft.functions.PrefixSum.runningTotal(empty, "k", "v", "run")._1.count() == 0)
   }
 
   test("pack sequences (q50): offsets are a prefix sum; boundary docs span sequences") {

@@ -220,16 +220,20 @@ class PipelineSpec extends AnyFunSuite {
     Synthetic.tiles(spark, gridW, gridH, ts).write.parquet(dir)
     val tiles = spark.read.parquet(dir)
     // gardens clustered in a 2x2 sub-extent of the 6x6 tile grid
+    val gardenRows = (0L until 10L).map(Synthetic.makeGarden(_, 2, 2, 42L))
     val gardens = Synthetic.gardens(spark, 10, 2, 2)
     val idx = VegPipeline.buildIndex(spark, gardens, ts)
     val cfgOn = VegPipeline.Config(tileSize = ts)
-    val cfgOff = cfgOn.copy(pruneTileScan = false)
 
-    def rows(cfg: VegPipeline.Config) =
-      VegPipeline.scoreAgainst(spark, idx, tiles, cfg)
-        .select("id", "npix", "frac_greenleaf").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
-    assert(rows(cfgOn) == rows(cfgOff))
+    // the pruned run scores every garden exactly as the mosaic oracle
+    val oracle = oracleResults(gardenRows, Seq("greenleaf"))
+    val res = VegPipeline.scoreAgainst(spark, idx, tiles, cfgOn).collect()
+    assert(res.length == gardenRows.size)
+    res.foreach { row =>
+      val o = oracle(row.getAs[String]("id"))
+      assert(row.getAs[Long]("npix") == o.npix, s"npix for ${o.id}")
+      assert(row.getAs[Double]("frac_greenleaf") == o.fracs(0), s"fraction for ${o.id}")
+    }
 
     // the predicate is an exact canonical-id IN set for this small extent,
     // and it reaches the parquet scan as a pushed filter on image_id
@@ -241,16 +245,55 @@ class PipelineSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters") && plan.contains("image_id"),
       s"expected pushed image_id filter in:\n$plan")
 
-    // range fallback (covering set larger than pruneInSetMax) is a sound superset
-    val rangeCfg = cfgOn.copy(pruneInSetMax = 1)
-    assert(rows(rangeCfg) == rows(cfgOff))
-    val rangePred = VegPipeline.tileIdPredicate(idx, rangeCfg).get
-    val nRange = tiles.where(rangePred).count()
-    assert(nRange >= nCovering && nRange < gridW.toLong * gridH)
+    // range fallback: one ~91x91 km garden covers 8,281 cells, more than
+    // the IN set takes, so the predicate is a sound min/max id range
+    import spark.implicits._
+    val (bigTs, e0, n0, side) = (4, 400, 100, 91)
+    val ring = Seq(Seq(e0 + 0.5, n0 + 0.5), Seq(e0 + side - 0.5, n0 + 0.5),
+      Seq(e0 + side - 0.5, n0 + side - 0.5), Seq(e0 + 0.5, n0 + side - 0.5),
+      Seq(e0 + 0.5, n0 + 0.5)).map(_.map(_ * 1000.0))
+    val big = Synthetic.GardenRow("big", Array("1"), Seq(Seq(ring)), Exprs.EPSG27700)
+    val bigIdx = VegPipeline.buildIndex(spark, Seq(big).toDF(), bigTs)
+    val bigCfg = VegPipeline.Config(tileSize = bigTs)
+    val bigCells = bigIdx.cellPolys.select("cell").collect().map(_.getLong(0))
+    assert(bigCells.length == side * side && bigCells.length > 8192)
+    val coverIds = bigCells.toSeq.map(c =>
+      graft.geo.TileCode.fromEastingsNorthings((c >> 31).toInt, (c & 0x7fffffffL).toInt))
+    val rangePred = VegPipeline.tileIdPredicate(bigIdx, bigCfg).get
+    val cond = coverIds.toDF("image_id").where(rangePred).queryExecution.analyzed
+      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }.get
+    assert(cond.find(e => e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.In] ||
+      e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.InSet]).isEmpty,
+      s"expected a range, not an IN set: $cond")
+    assert(coverIds.toDF("image_id").where(rangePred).count() == coverIds.size,
+      "every covering tile must pass the range")
+    // the covering tiles plus one inside the id range but outside the
+    // cover (SU0095: read, matched by no polygon) and one past the range
+    def bigRaster(e: Int, n: Int) = Synthetic.tileRaster(e, n, bigTs, 42L)
+    val bigTiles = ((for (e <- e0 until e0 + side; n <- n0 until n0 + side) yield (e, n)) ++
+      Seq((e0, n0 + 95), (e0 + 95, n0 + 95))).map { case (e, n) =>
+      (graft.geo.TileCode.fromEastingsNorthings(e, n), Codec.encodePNG(bigRaster(e, n)))
+    }.toDF("image_id", "bytes")
+    assert(bigTiles.where(rangePred).count() == coverIds.size + 1)
+    // on the shuffled path the bounded collect finds more than 8,192
+    // cells, so one aggregation gives the same range and the same box
+    import graft.sources.{SnapshotTable, SnapshotTiles}
+    val aggIdx = VegPipeline.buildIndex(spark, Seq(big).toDF(), bigTs)
+    assert(VegPipeline.tileIdPredicate(aggIdx, bigCfg.copy(broadcastMaxBytes = 0)).get.toString ==
+      rangePred.toString)
+    assert(SnapshotTiles.coveringRanges(aggIdx) == Seq(SnapshotTable.Range("cell_e", e0, e0 + side - 1),
+      SnapshotTable.Range("cell_n", n0, n0 + side - 1)))
+    assert(SnapshotTiles.coveringRanges(bigIdx) == SnapshotTiles.coveringRanges(aggIdx))
+    val bigOracle = MosaicOracle.compute(big, bigTs, (e, n) =>
+      if (e >= e0 && e < e0 + side && n >= n0 && n < n0 + side) Some(bigRaster(e, n)) else None,
+      Array(Kernels.all("greenleaf")))
+    val bigRow = VegPipeline.scoreAgainst(spark, bigIdx, bigTiles, bigCfg)
+      .select("npix", "frac_greenleaf").head()
+    assert(bigOracle.npix > 0)
+    assert(bigRow.getLong(0) == bigOracle.npix && bigRow.getDouble(1) == bigOracle.fracs(0))
 
     // web-mercator path: the predicate enumerates canonical z/x/y keys
     // that exactly invert SlippyKeyToCell
-    import spark.implicits._
     val zoom = 15
     def lonLat(tx: Double, ty: Double): Seq[Double] = {
       val nT = (1 << zoom).toDouble
@@ -467,7 +510,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // pipeline-level: a garden over the SJ5050 cell, its tile named
     // non-canonically. Pruning drops the tile (zero-fill) unless ids are
-    // normalized at ingest — then pruned == unpruned, tile scored.
+    // normalized at ingest — then it scores as the canonically named tile.
     val sq = Seq(Seq(Seq(
       Seq(350200.0, 350200.0), Seq(350800.0, 350200.0),
       Seq(350800.0, 350800.0), Seq(350200.0, 350800.0), Seq(350200.0, 350200.0))))
@@ -476,19 +519,18 @@ class PipelineSpec extends AnyFunSuite {
     val bytes = Codec.encodePNG(Synthetic.tileRaster(350, 350, ts, 42L))
     val tiles = Seq(("SI5050", bytes)).toDF("image_id", "bytes")
 
-    def frac(tilesDf: org.apache.spark.sql.DataFrame, prune: Boolean): (Long, Double) = {
-      val r = VegPipeline.run(spark, gardens, tilesDf,
-        cfg.copy(pruneTileScan = prune)).select("npix", "frac_greenleaf").head()
+    def frac(tilesDf: org.apache.spark.sql.DataFrame): (Long, Double) = {
+      val r = VegPipeline.run(spark, gardens, tilesDf, cfg).select("npix", "frac_greenleaf").head()
       (r.getLong(0), r.getDouble(1))
     }
-    val unpruned = frac(tiles, prune = false)
-    val prunedRaw = frac(tiles, prune = true)
-    val prunedNorm = frac(VegPipeline.normalizeImageIds(tiles, cfg), prune = true)
-    assert(unpruned._1 > 0)
-    assert(prunedNorm == unpruned, "normalized ids must score identically under pruning")
+    val canonical = frac(Seq(("SJ5050", bytes)).toDF("image_id", "bytes"))
+    val prunedRaw = frac(tiles)
+    val prunedNorm = frac(VegPipeline.normalizeImageIds(tiles, cfg))
+    assert(canonical._1 > 0 && canonical._2 > 0.0)
+    assert(prunedNorm == canonical, "normalized ids must score as the canonical tile")
     // documented precondition: without normalization the non-canonical
     // tile is consistently treated as missing (zero-filled, frac 0)
-    assert(prunedRaw._1 == unpruned._1 && prunedRaw._2 == 0.0)
+    assert(prunedRaw._1 == canonical._1 && prunedRaw._2 == 0.0)
   }
 
   test("bucketed tile table: shuffle-join path has no Exchange on the tile side") {
@@ -594,6 +636,81 @@ class PipelineSpec extends AnyFunSuite {
     assert(v1.count() < tiles.count())
     val v1rows = rows(v1)
     assert(v1rows.map(_._1) == rows(tiles).map(_._1)) // same gardens, fewer pixels
+  }
+
+  test("hex index: no covering-range pruning; a snapshot-catalog run equals the plain-parquet run") {
+    import graft.sources.{SnapshotTileCatalog, SnapshotTiles}
+    val root = java.nio.file.Files.createTempDirectory("snaphex").toString + "/table"
+    val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
+    assert(SnapshotTiles.append(spark, root, tiles, 6) == 1)
+    val hex = graft.index.GridSystem.Hex(1.7)
+    val gardens = Synthetic.gardens(spark, 10, 2, 2)
+    val hexIdx = VegPipeline.buildIndex(spark, gardens, ts, grid = hex)
+    val hexCfg = VegPipeline.Config(tileSize = ts, grid = hex)
+    // hex cells are not tiles: no image_id predicate and no bbox
+    assert(VegPipeline.tileIdPredicate(hexIdx, hexCfg).isEmpty)
+    val ranges = SnapshotTiles.coveringRanges(hexIdx)
+    assert(ranges.isEmpty, s"hex index pruned the manifest by $ranges")
+    assert(VegPipeline.pruneTiles(tiles, hexIdx, hexCfg).count() == gridW.toLong * gridH)
+
+    def rows(idx: VegPipeline.PolyIndex, c: VegPipeline.Config, t: org.apache.spark.sql.DataFrame) =
+      VegPipeline.scoreAgainst(spark, idx, t, c)
+        .select("id", "npix", "frac_greenleaf").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    val plain = rows(hexIdx, hexCfg, tiles)
+    assert(plain.map(_._2).sum > 0)
+    assert(rows(hexIdx, hexCfg, SnapshotTileCatalog(root, ranges).tiles(spark)) == plain)
+    // and both equal the square grid's pruned run
+    assert(rows(VegPipeline.buildIndex(spark, gardens, ts), VegPipeline.Config(tileSize = ts),
+      tiles) == plain)
+  }
+
+  test("one covering-cell set: the broadcast path builds the predicate and bbox with no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.sources.{SnapshotTable, SnapshotTiles}
+    val sc = spark.sparkContext
+    // the result of `f` and the number of Spark jobs it started
+    def jobsIn[A](f: => A): (A, Int) = {
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      def inGroup[B](g: String)(h: => B): B = {
+        sc.setJobGroup(g, g, interruptOnCancel = false)
+        try h finally sc.clearJobGroup()
+      }
+      sc.addSparkListener(listener)
+      try {
+        val r = inGroup("measured")(f)
+        inGroup("marker")(sc.parallelize(Seq(1), 1).count())
+        while (!groups.contains("marker")) Thread.sleep(5)
+        (r, groups.toArray.count(_ == "measured"))
+      } finally sc.removeSparkListener(listener)
+    }
+    val gardens = Synthetic.gardens(spark, 10, 2, 2)
+    val cfg = VegPipeline.Config(tileSize = ts)
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+    idx.broadcastEstimateBytes
+    idx.broadcastLookup
+    val ((pred, ranges), jobs) =
+      jobsIn((VegPipeline.tileIdPredicate(idx, cfg), SnapshotTiles.coveringRanges(idx)))
+    assert(jobs == 0, "covering cells started a Spark job")
+    val cells = idx.cellPolys.select("cell").collect().map(_.getLong(0))
+    val (es, ns) = (cells.map(_ >> 31), cells.map(_ & 0x7fffffffL))
+    assert(ranges == Seq(SnapshotTable.Range("cell_e", es.min, es.max),
+      SnapshotTable.Range("cell_n", ns.min, ns.max)))
+    // the shuffled path collects cellPolys' cells: the same set; and
+    // coveringRanges reads the memo that source filled, with no job
+    // (building the broadcast lookup instead would collect `prepared`)
+    val shuffled = cfg.copy(broadcastMaxBytes = 0)
+    val idx2 = VegPipeline.buildIndex(spark, gardens, ts)
+    assert(VegPipeline.tileIdPredicate(idx2, shuffled).get.toString == pred.get.toString)
+    assert(jobsIn(SnapshotTiles.coveringRanges(idx2)) == ((ranges, 0)))
+    // and an index covering nothing plans an impossible range
+    val none = VegPipeline.buildIndex(spark, gardens.limit(0), ts)
+    assert(SnapshotTiles.coveringRanges(none) ==
+      Seq(SnapshotTable.Range("cell_e", Long.MaxValue, Long.MinValue)))
   }
 
   test("IRGB fused pipeline (ndvi-irgb + matt + nn) matches the fused-mosaic oracle") {
