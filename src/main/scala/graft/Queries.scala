@@ -701,8 +701,7 @@ object Queries {
     * (the image-side fragment scoring itself is pinned by the
     * mosaic-oracle/golden unit tests; no SQL engine can decode tiles). */
   private[graft] def vegFragParts(s: SparkSession, vc: VegCase): (DataFrame, DataFrame) = {
-    val idx = VegPipeline.buildIndex(s, vc.gardens, vc.cfg.tileSize,
-      vc.cfg.webMercatorZoom, vc.cfg.grid)
+    val idx = VegPipeline.buildIndex(s, vc.gardens, vc.cfg.tileSize, vc.cfg.webMercatorZoom)
     (VegPipeline.fragments(s, idx, vc.tiles, vc.cfg, vc.cir),
       idx.prepared.select("gid", "id"))
   }
@@ -768,16 +767,17 @@ object Queries {
   }
 
   /** The flagship polygon⋈tile join over the HEX (H3-style) cover
-    * ([[VegPipeline.Config.grid]]): per-garden sums must be bit-identical
-    * to the square-grid run (superset cover, zero-pixel extra fragments) —
-    * o39 checks that row-for-row against the square engine path's
-    * [[Sidecars.vegNoFillPath]] sidecar. */
+    * (the `grid` of [[VegPipeline.buildIndex]]): per-garden sums must be
+    * bit-identical to the square-grid run (superset cover, zero-pixel
+    * extra fragments) — o39 checks that row-for-row against the square
+    * engine path's [[Sidecars.vegNoFillPath]] sidecar. */
   private def q39(s: SparkSession, dir: String): DataFrame = {
     val (gw, gh, ng) = syntheticScale(dir)
-    VegPipeline.run(s, Synthetic.gardens(s, ng, gw, gh),
+    VegPipeline.scoreAgainst(s,
+      VegPipeline.buildIndex(s, Synthetic.gardens(s, ng, gw, gh), 64,
+        grid = graft.index.GridSystem.Hex(1.7)),
       Synthetic.tiles(s, gw, gh, 64),
-      VegPipeline.Config(tileSize = 64, handleMissingTiles = false,
-        grid = graft.index.GridSystem.Hex(1.7)))
+      VegPipeline.Config(tileSize = 64, handleMissingTiles = false))
       .select("id", "npix", "frac_greenleaf")
       .orderBy("id")
   }

@@ -68,13 +68,13 @@ object Exprs {
   *    the transformed bounds. */
 case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
                          tileSize: Int,
-                         /** Covering-cell grid for the polygon⋈tile join.
-                           * Square = one cell per km tile (reference
-                           * semantics). A hex grid (H3-style, OSGB only)
-                           * covers via the hexes of the covered tiles'
-                           * CENTERS — a superset match whose extra
-                           * fragments score zero pixels, so sums are
-                           * bit-identical. */
+                         /** The cover, chosen once here: Square = the
+                           * tiles of the bbox (reference semantics). A hex
+                           * grid (H3-style) covers every tile whose center
+                           * shares a hex with a square-cover tile's center
+                           * — a superset whose extra fragments score zero
+                           * pixels, so sums are bit-identical. Either way
+                           * `cells` are tile cells. */
                          grid: graft.index.GridSystem = graft.index.GridSystem.Square,
                          webMercatorZoom: Option[Int] = None)
     extends Expression with CodegenFallback {
@@ -111,10 +111,18 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
     val area = if (slippy) g.area else g.area * 1000.0 * 1000.0 // image_loaders.py:119
     val (mnx, mny, mxx, mxy) = g.bounds
     val sqCells = ZIndex.coverBounds(mnx, mny, mxx, mxy)
-    val cells =
-      if (grid == graft.index.GridSystem.Square) sqCells
-      else sqCells.map(c =>
-        grid.cellOf(ZIndex.cellE(c) + 0.5, ZIndex.cellN(c) + 0.5)).distinct
+    val cells = grid match {
+      case graft.index.GridSystem.Hex(size) =>
+        // two points of one hex are at most 2·size apart, so every tile
+        // center sharing a cover center's hex lies in the widened box
+        def hexOf(e: Int, n: Int) = grid.cellOf(e + 0.5, n + 0.5)
+        val hexes = sqCells.map(c => hexOf(ZIndex.cellE(c), ZIndex.cellN(c))).toSet
+        val w = math.ceil(2 * size).toInt
+        (for (n <- math.max(0, mny.toInt - w) to mxy.toInt + w;
+             e <- math.max(0, mnx.toInt - w) to mxx.toInt + w
+             if hexes(hexOf(e, n))) yield ZIndex.cellId(e, n)).toArray
+      case _ => sqCells
+    }
     val sortKey =
       if (slippy) mny.toInt.toLong * 1000L + mnx.toInt.toLong
       else mnx.toInt.toLong * 1000L + mny.toInt.toLong
@@ -165,15 +173,9 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
                             * — the map-side-join formulation with no
                             * per-query HashedRelation rebuild. */
                           lookup: Option[org.apache.spark.broadcast.Broadcast[
-                            java.util.HashMap[Long, Array[Array[Byte]]]]] = None,
-                          /** Lookup key when the polygon index is built on
-                            * a DIFFERENT grid than the square tile grid
-                            * (hex cover): `cell` stays the square tile
-                            * cell that anchors the raster geometry, this
-                            * keys the cell→blobs map. Defaults to `cell`. */
-                          joinCell: Option[Expression] = None)
+                            java.util.HashMap[Long, Array[Array[Byte]]]]] = None)
     extends Expression with CodegenFallback {
-  override def children: Seq[Expression] = Seq(cell, bytes, cirBytes, blobs) ++ joinCell
+  override def children: Seq[Expression] = Seq(cell, bytes, cirBytes, blobs)
   override def nullable: Boolean = false
 
   @transient private lazy val kernels: Array[IndexKernel] =
@@ -189,8 +191,7 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
   override def eval(input: InternalRow): Any = {
     val cellV = cell.eval(input).asInstanceOf[Long]
     val blobArr: Array[Array[Byte]] = lookup match {
-      case Some(b) => // null when the (join) cell is uncovered
-        b.value.get(joinCell.fold(cellV)(_.eval(input).asInstanceOf[Long]))
+      case Some(b) => b.value.get(cellV) // null when the cell is uncovered
       case None =>
         val blobsV = blobs.eval(input).asInstanceOf[ArrayData]
         if (blobsV == null) null
@@ -255,7 +256,7 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(cell = newChildren(0), bytes = newChildren(1), cirBytes = newChildren(2),
-      blobs = newChildren(3), joinCell = newChildren.lift(4))
+      blobs = newChildren(3))
 }
 
 /** Slippy key "z/x/y" -> packed cell id (null when zoom mismatches). */

@@ -56,17 +56,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         * broadcast hard cap. */
       broadcastMaxBytes: Long = 2L << 30,
       /** decoded-tile / fragment accumulators (C3 statistics). */
-      metrics: Option[PipelineMetrics] = None,
-      /** Grid system for the cell→polygon index and the polygon⋈tile
-        * join key. Square (default) = one cell per km tile, the
-        * reference's semantics and the pruning-capable path.
-        * A hex grid (H3-style axial hexes, [[graft.index.HexIndex]])
-        * indexes polygons by the hexes of their covered tiles' centers;
-        * the join matches a superset of the square-grid tile set whose
-        * extra fragments score zero pixels, so the per-garden sums are
-        * bit-identical. Hex cells are not tiles, so a hex run scans the
-        * tile table without covering-range pruning. */
-      grid: graft.index.GridSystem = graft.index.GridSystem.Square)
+      metrics: Option[PipelineMetrics] = None)
 
   import Exprs.{col => ec, expr => ee}
 
@@ -83,8 +73,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   def prepareGardens(gardens: DataFrame, tileSize: Int,
                      webMercatorZoom: Option[Int] = None,
                      grid: graft.index.GridSystem = graft.index.GridSystem.Square): DataFrame = {
-    require(webMercatorZoom.isEmpty || grid == graft.index.GridSystem.Square,
-      "non-square grids are only wired for the OSGB tile path")
     gardens.withColumn("gid", xxhash64(col("id")))
       .withColumn("prep", ec(PrepareGarden(
         ee(col("gid")), ee(col("geometry")), ee(col("crs")), tileSize, grid, webMercatorZoom)))
@@ -119,12 +107,11 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     naming(webMercatorZoom).toCell(imageId)
 
   /** The reusable cell→polygon "interval index" artifact: prepared garden
-    * metadata (persisted) + per-cell packed polygon blobs. Build once,
+    * metadata (persisted) + per-tile-cell packed polygon blobs. Build once,
     * score any number of tile batches/streams against it — under a
-    * config with the same tile size, tile naming and grid. */
+    * config with the same tile size and tile naming. */
   final case class PolyIndex(prepared: DataFrame, cellPolys: DataFrame, tileSize: Int,
-                             webMercatorZoom: Option[Int] = None,
-                             grid: graft.index.GridSystem = graft.index.GridSystem.Square) {
+                             webMercatorZoom: Option[Int] = None) {
     /** [[VegPipeline.covering]]'s memo: one slot with no key, since both
       * sources of the covering cells yield the same set. */
     @transient private var coveringSet: Covering = _
@@ -172,6 +159,10 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** Prepares the gardens and keys their blobs by tile cell. `grid` is
+    * the cover ([[PrepareGarden]]), the one place a grid is chosen: a hex
+    * cover keys each garden by a superset of its square cover's tiles,
+    * so every later step (lookup, pruning, zero-fill) is grid-blind. */
   def buildIndex(spark: SparkSession, gardens: DataFrame, tileSize: Int,
                  webMercatorZoom: Option[Int] = None,
                  grid: graft.index.GridSystem = graft.index.GridSystem.Square): PolyIndex = {
@@ -181,7 +172,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       .select(explode(col("cells")).as("cell"), col("blob"))
       .groupBy("cell").agg(collect_list("blob").as("blobs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    PolyIndex(prepared, cellPolys, tileSize, webMercatorZoom, grid)
+    PolyIndex(prepared, cellPolys, tileSize, webMercatorZoom)
   }
 
   /** Per-garden result: gid, id, uprn, cx, cy, area_m2, sort_key, npix,
@@ -189,7 +180,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   def run(spark: SparkSession, gardens: DataFrame, tiles: DataFrame,
           cfg: Config = Config(), cirTiles: Option[DataFrame] = None): DataFrame =
     scoreAgainst(spark,
-      buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom, cfg.grid),
+      buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom),
       tiles, cfg, cirTiles)
 
   def scoreAgainst(spark: SparkSession, index: PolyIndex, tiles: DataFrame,
@@ -202,7 +193,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     require(index.tileSize == cfg.tileSize, "index/config tile size mismatch")
     require(index.webMercatorZoom == cfg.webMercatorZoom,
       s"index built for webMercatorZoom=${index.webMercatorZoom}, config has ${cfg.webMercatorZoom}")
-    require(index.grid == cfg.grid, s"index built for grid ${index.grid}, config has ${cfg.grid}")
   }
 
   private def fitsBroadcast(index: PolyIndex, cfg: Config): Boolean =
@@ -223,48 +213,47 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   private val MaxInSetIds = 8192
 
   /** The one source of covering-range pruning, for [[tileIdPredicate]]
-    * and [[graft.sources.SnapshotTiles.coveringRanges]]; None on a hex
-    * grid, whose cells are not tiles. The cells are the broadcast lookup's
-    * keys (no Spark job) when the index fits it, otherwise at most 8,193
-    * of `cellPolys`' cells; above 8,192 one aggregation gives the id range
-    * and the box, so the driver never holds a large covering set. */
-  private[graft] def covering(index: PolyIndex, cfg: Config): Option[Covering] =
-    if (index.grid != graft.index.GridSystem.Square) None
-    else Some(index.coveringMemo {
-      val name = naming(index.webMercatorZoom)
-      val lookup = fitsBroadcast(index, cfg)
-      val cells =
-        if (lookup) index.broadcastLookup.value.keySet.asScala.toArray
-        else index.cellPolys.select("cell").limit(MaxInSetIds + 1).collect().map(_.getLong(0))
-      val inHand = lookup || cells.length <= MaxInSetIds
-      lazy val ids = cells.map(name.cellKey).filter(_ != null).sorted
-      val (es, ns) = (cells.map(_ >> 31), cells.map(_ & 0x7fffffffL))
-      val (lo, hi, bbox) =
-        if (inHand) (ids.headOption.orNull, ids.lastOption.orNull,
-          Option.when(cells.nonEmpty)((es.min, es.max, ns.min, ns.max)))
-        else {
-          val (tid, e, n) = (name.toKey(col("cell")), shiftright(col("cell"), 31),
-            col("cell").bitwiseAND(lit(0x7fffffffL)))
-          val r = index.cellPolys.agg(min(tid), max(tid), min(e), max(e), min(n), max(n)).head()
-          (r.getString(0), r.getString(1), Some((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-        }
-      Covering(
-        if (lo == null) lit(false)
-        else if (inHand && ids.length <= MaxInSetIds) col("image_id").isInCollection(ids)
-        else col("image_id") >= lo && col("image_id") <= hi, bbox)
-    })
+    * and [[graft.sources.SnapshotTiles.coveringRanges]], on any cover
+    * grid (an index's cells are tile cells). The cells are the broadcast
+    * lookup's keys (no Spark job) when the index fits it, otherwise at
+    * most 8,193 of `cellPolys`' cells; above 8,192 one aggregation gives
+    * the id range and the box, so the driver never holds a large
+    * covering set. */
+  private[graft] def covering(index: PolyIndex, cfg: Config): Covering = index.coveringMemo {
+    val name = naming(index.webMercatorZoom)
+    val lookup = fitsBroadcast(index, cfg)
+    val cells =
+      if (lookup) index.broadcastLookup.value.keySet.asScala.toArray
+      else index.cellPolys.select("cell").limit(MaxInSetIds + 1).collect().map(_.getLong(0))
+    val inHand = lookup || cells.length <= MaxInSetIds
+    lazy val ids = cells.map(name.cellKey).filter(_ != null).sorted
+    val (es, ns) = (cells.map(_ >> 31), cells.map(_ & 0x7fffffffL))
+    val (lo, hi, bbox) =
+      if (inHand) (ids.headOption.orNull, ids.lastOption.orNull,
+        Option.when(cells.nonEmpty)((es.min, es.max, ns.min, ns.max)))
+      else {
+        val (tid, e, n) = (name.toKey(col("cell")), shiftright(col("cell"), 31),
+          col("cell").bitwiseAND(lit(0x7fffffffL)))
+        val r = index.cellPolys.agg(min(tid), max(tid), min(e), max(e), min(n), max(n)).head()
+        (r.getString(0), r.getString(1), Some((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
+      }
+    Covering(
+      if (lo == null) lit(false)
+      else if (inHand && ids.length <= MaxInSetIds) col("image_id").isInCollection(ids)
+      else col("image_id") >= lo && col("image_id") <= hi, bbox)
+  }
 
   /** Covering-range scan pruning (the reference never reads a tile outside
     * the covering range, image_loaders.py:266-269): a parquet-pushable
-    * image_id predicate from [[covering]]; None on a hex grid.
+    * image_id predicate from [[covering]].
     *
     * PRECONDITION: image_ids are canonical (the id [[normalizeImageIds]]
     * round-trips to itself; the reference builds paths FROM coordinates,
     * image_loaders.py:229-233). A parseable but non-canonical id (e.g. an
     * OSGB code with the skipped letter 'I') decodes to the same cell yet
     * fails the IN set, so its tile is treated as missing (zero-filled). */
-  def tileIdPredicate(index: PolyIndex, cfg: Config): Option[Column] =
-    covering(index, cfg).map(_.idPredicate)
+  def tileIdPredicate(index: PolyIndex, cfg: Config): Column =
+    covering(index, cfg).idPredicate
 
   /** Rewrite image_id to canonical form by round-tripping through the
     * cell key (id -> cell -> canonical id); unparseable ids pass through
@@ -279,12 +268,11 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     tiles.withColumn("image_id", coalesce(n.toKey(n.toCell(col("image_id"))), col("image_id")))
   }
 
-  /** The tile frame with [[tileIdPredicate]] applied (unchanged on a hex
-    * grid) — the exact pruning [[fragmentSums]] performs internally. A
-    * tile it drops is not scored, so zero-fill counts its pixels as
-    * missing. */
+  /** The tile frame with [[tileIdPredicate]] applied — the exact pruning
+    * [[fragmentSums]] performs internally. A tile it drops is not scored,
+    * so zero-fill counts its pixels as missing. */
   def pruneTiles(tiles: DataFrame, index: PolyIndex, cfg: Config): DataFrame =
-    tileIdPredicate(index, cfg).fold(tiles)(tiles.where)
+    tiles.where(tileIdPredicate(index, cfg))
 
   /** The distributive core: per-garden raw long sums
     * (gid, npix, veg_0..veg_{nK-1}) of the scored fragments, one per tile
@@ -338,7 +326,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       s"all kernels in one pass must share an input format, got $fmts")
     require(fmts.head != "IRGB" || cirTiles.nonEmpty,
       "IRGB kernels need the CIR tile table for Ir fusion (S3)")
-    val hexGrid = cfg.grid != graft.index.GridSystem.Square
 
     // automatic path selection: the broadcast-lookup formulation only when
     // the estimated lookup size fits the configured ceiling; otherwise the
@@ -378,16 +365,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       case None => rgbWithCell.withColumn("cir_bytes", lit(null).cast("binary"))
     }
 
-    // hex cover: the join key is the hex of the tile's CENTER; `cell`
-    // stays the square tile cell that anchors the raster geometry
-    val tilesKeyed =
-      if (!hexGrid) tilesWithCell
-      else tilesWithCell.withColumn("jcell", ec(PointCell(
-        ee(shiftright(col("cell"), 31).cast("double") + lit(0.5)),
-        ee(col("cell").bitwiseAND(lit(0x7fffffffL)).cast("double") + lit(0.5)),
-        cfg.grid)))
-    val joinKey = if (hexGrid) "jcell" else "cell"
-
     val (matched, scoreCol) =
       if (useBroadcast) {
         // map-side-join formulation: the cell→blobs lookup is an
@@ -395,16 +372,13 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         // (index.broadcastLookup) — a BroadcastHashJoin would rebuild its
         // HashedRelation per query / per streaming micro-batch. Uncovered
         // cells yield an empty fragment array, i.e. inner-join semantics.
-        (tilesKeyed, ec(ScoreFragments(
+        (tilesWithCell, ec(ScoreFragments(
           ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")),
           ee(lit(null).cast("array<binary>")),
           cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
-          metrics = cfg.metrics, lookup = Some(index.broadcastLookup),
-          joinCell = if (hexGrid) Some(ee(col("jcell"))) else None)))
+          metrics = cfg.metrics, lookup = Some(index.broadcastLookup))))
       } else {
-        val polysKeyed =
-          if (hexGrid) index.cellPolys.withColumnRenamed("cell", "jcell") else index.cellPolys
-        (tilesKeyed.join(polysKeyed, Seq(joinKey)), ec(ScoreFragments(
+        (tilesWithCell.join(index.cellPolys, Seq("cell")), ec(ScoreFragments(
           ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")), ee(col("blobs")),
           cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
           metrics = cfg.metrics)))

@@ -87,8 +87,7 @@ object TileLayout {
   * ([[graft.pipeline.VegPipeline.tileIdPredicate]]) prunes row-groups
   * WITHIN the surviving files. Two pruning levels, both ahead of any
   * decode work and both derived from the index's one covering-cell set
-  * (VegPipeline.covering); a hex index gets neither, its cells are
-  * not tiles. */
+  * (VegPipeline.covering), whatever grid the index was built on. */
 object SnapshotTiles {
 
   /** Stat columns every tile-table commit carries for manifest skipping. */
@@ -109,16 +108,15 @@ object SnapshotTiles {
     * the image_id predicate is built from, sharing the index's one memo
     * (no Spark job when the index fits the default broadcast ceiling).
     * An empty index yields an impossible range, so the scan plans no real
-    * work; a hex index yields no range, since its cells are not tiles. */
+    * work. */
   def coveringRanges(index: VegPipeline.PolyIndex): Seq[SnapshotTable.Range] =
-    VegPipeline.covering(index, VegPipeline.Config()).map(_.bbox) match {
-      case None => Nil
+    VegPipeline.covering(index, VegPipeline.Config()).bbox match {
       // The empty sentinel must prune EVERY file's [min,max] stats — a
       // (lo=1, hi=0) range fails to prune files whose stats straddle 0,
       // so they would be planned and scanned for nothing. (MaxValue,
       // MinValue) makes `max < lo` true for every file.
-      case Some(None) => Seq(SnapshotTable.Range("cell_e", Long.MaxValue, Long.MinValue))
-      case Some(Some((e0, e1, n0, n1))) =>
+      case None => Seq(SnapshotTable.Range("cell_e", Long.MaxValue, Long.MinValue))
+      case Some((e0, e1, n0, n1)) =>
         Seq(SnapshotTable.Range("cell_e", e0, e1), SnapshotTable.Range("cell_n", n0, n1))
     }
 }

@@ -121,17 +121,15 @@ class PipelineSpec extends AnyFunSuite {
     val gardenRows = (0L until nG).map(Synthetic.makeGarden(_, gridW, gridH, 42L))
     val gardens = Synthetic.gardens(spark, nG, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
-    def cfg(grid: graft.index.GridSystem) = VegPipeline.Config(
-      tileSize = ts, kernelNames = names, handleMissingTiles = false, grid = grid)
+    val cfg = VegPipeline.Config(tileSize = ts, kernelNames = names, handleMissingTiles = false)
+    val hexIdx = VegPipeline.buildIndex(spark, gardens, ts, grid = graft.index.GridSystem.Hex(1.7))
 
     def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
       r.getAs[String]("id") ->
         ((r.getAs[Long]("npix"), names.map(n => r.getAs[Double](s"frac_$n"))))
     }.toMap
-    val sq = keyed(VegPipeline.run(spark, gardens, tiles,
-      cfg(graft.index.GridSystem.Square)).collect())
-    val hx = keyed(VegPipeline.run(spark, gardens, tiles,
-      cfg(graft.index.GridSystem.Hex(1.7))).collect())
+    val sq = keyed(VegPipeline.run(spark, gardens, tiles, cfg).collect())
+    val hx = keyed(VegPipeline.scoreAgainst(spark, hexIdx, tiles, cfg).collect())
     assert(hx.size == nG && sq == hx, "hex cover diverged from square cover")
 
     // gardens fully inside the tile grid also match the mosaic oracle
@@ -151,8 +149,8 @@ class PipelineSpec extends AnyFunSuite {
       names.indices.foreach(i => assert(fracs(i) == o.fracs(i), s"${names(i)} for ${g.id}"))
     }
     // and a hex run over the shuffle-join path agrees too
-    val hxShuffle = keyed(VegPipeline.run(spark, gardens, tiles,
-      cfg(graft.index.GridSystem.Hex(1.7)).copy(broadcastMaxBytes = 0)).collect())
+    val hxShuffle = keyed(VegPipeline.scoreAgainst(spark, hexIdx, tiles,
+      cfg.copy(broadcastMaxBytes = 0)).collect())
     assert(hxShuffle == hx, "hex shuffle-join path diverged from broadcast path")
 
     // zero-fill on, with a block of tiles dropped: hex equals square and
@@ -162,10 +160,10 @@ class PipelineSpec extends AnyFunSuite {
     val holed = tiles.where(!org.apache.spark.sql.functions.col("image_id").isin(
       missing.toSeq.map { case (e, n) => graft.geo.TileCode.fromEastingsNorthings(e, n) }: _*))
     def filled(c: VegPipeline.Config) =
-      keyed(VegPipeline.run(spark, gardens, holed, c.copy(handleMissingTiles = true)).collect())
-    val sqFill = filled(cfg(graft.index.GridSystem.Square))
-    assert(filled(cfg(graft.index.GridSystem.Hex(1.7))) == sqFill, "hex zero-fill diverged")
-    assert(filled(cfg(graft.index.GridSystem.Hex(1.7)).copy(broadcastMaxBytes = 0)) == sqFill,
+      keyed(VegPipeline.scoreAgainst(spark, hexIdx, holed, c.copy(handleMissingTiles = true)).collect())
+    val sqFill = keyed(VegPipeline.run(spark, gardens, holed, cfg.copy(handleMissingTiles = true)).collect())
+    assert(filled(cfg) == sqFill, "hex zero-fill diverged")
+    assert(filled(cfg.copy(broadcastMaxBytes = 0)) == sqFill,
       "hex shuffle-join zero-fill diverged")
     val oracleFill = oracleResults(gardenRows, names, missing)
     assert(gardenRows.exists(g => oracleFill(g.id).fracs != oracle(g.id).fracs),
@@ -186,8 +184,8 @@ class PipelineSpec extends AnyFunSuite {
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     def decoded(grid: graft.index.GridSystem): (Long, Long) = {
       val m = PipelineMetrics.create(spark)
-      VegPipeline.run(spark, gardens, tiles, VegPipeline.Config(tileSize = ts,
-        handleMissingTiles = false, grid = grid, metrics = Some(m))).collect()
+      VegPipeline.scoreAgainst(spark, VegPipeline.buildIndex(spark, gardens, ts, grid = grid), tiles,
+        VegPipeline.Config(tileSize = ts, handleMissingTiles = false, metrics = Some(m))).collect()
       (m.tilesDecoded.value, m.fragmentsScored.value)
     }
     val (sqTiles, sqFrags) = decoded(graft.index.GridSystem.Square)
@@ -237,7 +235,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // the predicate is an exact canonical-id IN set for this small extent,
     // and it reaches the parquet scan as a pushed filter on image_id
-    val pred = VegPipeline.tileIdPredicate(idx, cfgOn).get
+    val pred = VegPipeline.tileIdPredicate(idx, cfgOn)
     val nCovering = idx.cellPolys.count()
     assert(tiles.where(pred).count() == nCovering) // subset scanned, not 36
     assert(nCovering < gridW.toLong * gridH)
@@ -259,7 +257,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(bigCells.length == side * side && bigCells.length > 8192)
     val coverIds = bigCells.toSeq.map(c =>
       graft.geo.TileCode.fromEastingsNorthings((c >> 31).toInt, (c & 0x7fffffffL).toInt))
-    val rangePred = VegPipeline.tileIdPredicate(bigIdx, bigCfg).get
+    val rangePred = VegPipeline.tileIdPredicate(bigIdx, bigCfg)
     val cond = coverIds.toDF("image_id").where(rangePred).queryExecution.analyzed
       .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }.get
     assert(cond.find(e => e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.In] ||
@@ -279,7 +277,7 @@ class PipelineSpec extends AnyFunSuite {
     // cells, so one aggregation gives the same range and the same box
     import graft.sources.{SnapshotTable, SnapshotTiles}
     val aggIdx = VegPipeline.buildIndex(spark, Seq(big).toDF(), bigTs)
-    assert(VegPipeline.tileIdPredicate(aggIdx, bigCfg.copy(broadcastMaxBytes = 0)).get.toString ==
+    assert(VegPipeline.tileIdPredicate(aggIdx, bigCfg.copy(broadcastMaxBytes = 0)).toString ==
       rangePred.toString)
     assert(SnapshotTiles.coveringRanges(aggIdx) == Seq(SnapshotTable.Range("cell_e", e0, e0 + side - 1),
       SnapshotTable.Range("cell_n", n0, n0 + side - 1)))
@@ -306,7 +304,7 @@ class PipelineSpec extends AnyFunSuite {
       Synthetic.GardenRow("wmp0", Array("90"), Seq(Seq(square)), Exprs.CRS84)).toDF()
     val wmIdx = VegPipeline.buildIndex(spark, wmGardens, ts, Some(zoom))
     val wmCfg = VegPipeline.Config(tileSize = ts, webMercatorZoom = Some(zoom))
-    val wmPred = VegPipeline.tileIdPredicate(wmIdx, wmCfg).get
+    val wmPred = VegPipeline.tileIdPredicate(wmIdx, wmCfg)
     val wmCells = wmIdx.cellPolys.select("cell").collect().map(_.getLong(0)).toSet
     assert(wmCells.nonEmpty)
     val keys = wmCells.toSeq.map { c =>
@@ -390,7 +388,8 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.functions.col
-    // an IRGB job with one RGB tile absent, over parquet tables
+    // an IRGB job with one RGB tile absent, over parquet tables, on a
+    // square and a hex index
     val dir = java.nio.file.Files.createTempDirectory("one_scan").toString
     Synthetic.tiles(spark, 3, 3, ts).where(col("image_id") =!=
       graft.geo.TileCode.fromEastingsNorthings(Synthetic.BaseE + 1, Synthetic.BaseN + 1))
@@ -398,15 +397,23 @@ class PipelineSpec extends AnyFunSuite {
     Synthetic.tilesCir(spark, 3, 3, ts).write.parquet(s"$dir/cir")
     val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("ndvi-irgb", "matt"))
     assert(cfg.handleMissingTiles, "test must exercise the batch default")
-    val idx = VegPipeline.buildIndex(spark, Synthetic.gardens(spark, 12, 3, 3), ts)
-    for (c <- Seq(cfg, cfg.copy(broadcastMaxBytes = 0))) {
+    val gardens = Synthetic.gardens(spark, 12, 3, 3)
+    for (grid <- Seq(graft.index.GridSystem.Square, graft.index.GridSystem.Hex(1.7));
+         idx = VegPipeline.buildIndex(spark, gardens, ts, grid = grid);
+         c <- Seq(cfg, cfg.copy(broadcastMaxBytes = 0))) {
       val res = VegPipeline.scoreAgainst(spark, idx, spark.read.parquet(s"$dir/rgb"), c,
         Some(spark.read.parquet(s"$dir/cir")))
       res.collect()
-      val scans = new AdaptiveSparkPlanHelper {}.collect(res.queryExecution.executedPlan) {
+      val helper = new AdaptiveSparkPlanHelper {}
+      val plan = res.queryExecution.executedPlan
+      val scans = helper.collect(plan) {
         case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName).mkString(",")
       }
-      assert(scans.sorted == Seq("cir", "rgb"), s"tile scans (broadcastMaxBytes=${c.broadcastMaxBytes})")
+      val where = s"$grid, broadcastMaxBytes=${c.broadcastMaxBytes}"
+      assert(scans.sorted == Seq("cir", "rgb"), s"tile scans ($where)")
+      // the tiles are looked up by their own cell, whatever the grid
+      assert(helper.flatMap(plan)(_.expressions.flatMap(_.collect { case p: PointCell => p })).isEmpty,
+        s"PointCell in the plan ($where)")
     }
   }
 
@@ -616,7 +623,7 @@ class PipelineSpec extends AnyFunSuite {
     // level 2 (parquet row groups): the covering-range image_id predicate
     // still reaches the surviving files' scan as a pushed filter
     val cfg = VegPipeline.Config(tileSize = ts)
-    val pred = VegPipeline.tileIdPredicate(idx, cfg).get
+    val pred = VegPipeline.tileIdPredicate(idx, cfg)
     val plan = snap.where(pred).queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("image_id"),
       s"expected pushed image_id filter in:\n$plan")
@@ -638,31 +645,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(v1rows.map(_._1) == rows(tiles).map(_._1)) // same gardens, fewer pixels
   }
 
-  test("hex index: no covering-range pruning; a snapshot-catalog run equals the plain-parquet run") {
+  test("hex index: covering-range pruning over its square superset; a snapshot-catalog run equals the plain-parquet run") {
+    import spark.implicits._
+    import graft.geo.TileCode
     import graft.sources.{SnapshotTileCatalog, SnapshotTiles}
     val root = java.nio.file.Files.createTempDirectory("snaphex").toString + "/table"
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     assert(SnapshotTiles.append(spark, root, tiles, 6) == 1)
-    val hex = graft.index.GridSystem.Hex(1.7)
     val gardens = Synthetic.gardens(spark, 10, 2, 2)
-    val hexIdx = VegPipeline.buildIndex(spark, gardens, ts, grid = hex)
-    val hexCfg = VegPipeline.Config(tileSize = ts, grid = hex)
-    // hex cells are not tiles: no image_id predicate and no bbox
-    assert(VegPipeline.tileIdPredicate(hexIdx, hexCfg).isEmpty)
+    val hexIdx = VegPipeline.buildIndex(spark, gardens, ts, grid = graft.index.GridSystem.Hex(1.7))
+    val sqIdx = VegPipeline.buildIndex(spark, gardens, ts)
+    val cfg = VegPipeline.Config(tileSize = ts)
+    def tileIds(idx: VegPipeline.PolyIndex) = idx.cellPolys.select("cell").collect()
+      .map(_.getLong(0)).map(c => TileCode.fromEastingsNorthings((c >> 31).toInt, (c & 0x7fffffffL).toInt))
+    // a hex index is keyed by tile cells, a superset of the square cover's
+    val hexIds = tileIds(hexIdx)
+    assert(hexIds.forall(id => id != null && TileCode.toEastingsNorthings(id) != null))
+    val sqIds = tileIds(sqIdx)
+    assert(sqIds.toSet.subsetOf(hexIds.toSet) && hexIds.length > sqIds.length)
+    // so it gets the square index's pruning: an image_id predicate that
+    // passes every square-cover tile, and a manifest bbox
+    assert(sqIds.toSeq.toDF("image_id").where(VegPipeline.tileIdPredicate(hexIdx, cfg)).count() ==
+      sqIds.length)
+    assert(VegPipeline.pruneTiles(tiles, hexIdx, cfg).count() < gridW.toLong * gridH)
     val ranges = SnapshotTiles.coveringRanges(hexIdx)
-    assert(ranges.isEmpty, s"hex index pruned the manifest by $ranges")
-    assert(VegPipeline.pruneTiles(tiles, hexIdx, hexCfg).count() == gridW.toLong * gridH)
+    assert(ranges.nonEmpty)
 
     def rows(idx: VegPipeline.PolyIndex, c: VegPipeline.Config, t: org.apache.spark.sql.DataFrame) =
       VegPipeline.scoreAgainst(spark, idx, t, c)
         .select("id", "npix", "frac_greenleaf").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
-    val plain = rows(hexIdx, hexCfg, tiles)
+    val plain = rows(hexIdx, cfg, tiles)
     assert(plain.map(_._2).sum > 0)
-    assert(rows(hexIdx, hexCfg, SnapshotTileCatalog(root, ranges).tiles(spark)) == plain)
+    assert(rows(hexIdx, cfg, SnapshotTileCatalog(root, ranges).tiles(spark)) == plain)
     // and both equal the square grid's pruned run
-    assert(rows(VegPipeline.buildIndex(spark, gardens, ts), VegPipeline.Config(tileSize = ts),
-      tiles) == plain)
+    assert(rows(sqIdx, cfg, tiles) == plain)
   }
 
   test("one covering-cell set: the broadcast path builds the predicate and bbox with no Spark job") {
@@ -705,7 +722,7 @@ class PipelineSpec extends AnyFunSuite {
     // (building the broadcast lookup instead would collect `prepared`)
     val shuffled = cfg.copy(broadcastMaxBytes = 0)
     val idx2 = VegPipeline.buildIndex(spark, gardens, ts)
-    assert(VegPipeline.tileIdPredicate(idx2, shuffled).get.toString == pred.get.toString)
+    assert(VegPipeline.tileIdPredicate(idx2, shuffled).toString == pred.toString)
     assert(jobsIn(SnapshotTiles.coveringRanges(idx2)) == ((ranges, 0)))
     // and an index covering nothing plans an impossible range
     val none = VegPipeline.buildIndex(spark, gardens.limit(0), ts)
@@ -878,15 +895,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows(Checkpoint.fractions(spark, idx, cfg, dir)) == batch)
   }
 
-  test("scoring an index under a config for another grid or tile naming fails loudly") {
+  test("scoring an index under a config for another tile naming fails loudly") {
     val gardens = Synthetic.gardens(spark, 10, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     val squareIdx = VegPipeline.buildIndex(spark, gardens, ts)
     val cfg = VegPipeline.Config(tileSize = ts, handleMissingTiles = false)
-    intercept[IllegalArgumentException] {
-      VegPipeline.scoreAgainst(spark, squareIdx, tiles,
-        cfg.copy(grid = graft.index.GridSystem.Hex(1.7))).collect()
-    }
     intercept[IllegalArgumentException] {
       VegPipeline.scoreAgainst(spark, squareIdx, tiles, cfg.copy(webMercatorZoom = Some(15))).collect()
     }
