@@ -203,20 +203,26 @@ object Queries {
       |         / CAST(length(text) AS DOUBLE) AS vowel_ratio
       |FROM documents ORDER BY 1""".stripMargin
 
-  /** n-gram-heuristic language id: stopword-list hit counts, argmax with
-    * fixed precedence. */
-  private def q14(s: SparkSession, dir: String): DataFrame = {
-    val low = lower(col("text"))
-    def hits(words: Seq[String]): Column =
-      words.map(wd => size(split(low, s"\\b$wd\\b")) - 1).reduce(_ + _)
-    val en = hits(Seq("the", "and", "of", "is"))
-    val fr = hits(Seq("le", "la", "et", "est"))
-    val de = hits(Seq("der", "und", "die", "ist"))
-    t(s, dir, "documents").select(col("doc_id"),
-        en.as("en_hits"), fr.as("fr_hits"), de.as("de_hits"),
-        when(en >= fr && en >= de, "en").when(fr >= de, "fr").otherwise("de").as("lang_guess"))
-      .orderBy("doc_id")
+  /** The stopword language guess over a `text` column, shared by q14,
+    * q49, q54 and q98: per-language hit counts (each word's \b-bounded
+    * occurrences in lower(text)) and their argmax with fixed precedence
+    * en, fr, de. */
+  private object Lang {
+    private def hits(words: String*): Column =
+      words.map(wd => size(split(lower(col("text")), s"\\b$wd\\b")) - 1).reduce(_ + _)
+    val en: Column = hits("the", "and", "of", "is")
+    val fr: Column = hits("le", "la", "et", "est")
+    val de: Column = hits("der", "und", "die", "ist")
+    val guess: Column = when(en >= fr && en >= de, "en").when(fr >= de, "fr").otherwise("de")
   }
+
+  /** n-gram-heuristic language id: stopword-list hit counts, argmax with
+    * fixed precedence ([[Lang]]). */
+  private def q14(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(col("doc_id"),
+        Lang.en.as("en_hits"), Lang.fr.as("fr_hits"), Lang.de.as("de_hits"),
+        Lang.guess.as("lang_guess"))
+      .orderBy("doc_id")
 
   private val o14 =
     """SELECT doc_id, CAST(en_hits AS INT) AS en_hits, CAST(fr_hits AS INT) AS fr_hits,
@@ -239,14 +245,15 @@ object Queries {
     * runs, punctuation runs, residual whitespace — restricted to ASCII
     * classes with no lookahead so Java regex (Spark codegen'd
     * regexp_count) and RE2 (DuckDB) agree match-for-match. */
-  private def q15(s: SparkSession, dir: String): DataFrame = {
-    val bpe = "'(?:[sdmt]|ll|ve|re)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\\s']+|\\s+"
+  private def q15(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").select(col("doc_id"),
-        regexp_count(col("text"), lit(bpe)).as("n_bpe"),
+        regexp_count(col("text"), lit(BpePretokenizer)).as("n_bpe"),
         regexp_count(col("text"), lit(" ?[a-zA-Z]+")).as("n_word"),
         regexp_count(col("text"), lit("\\s+")).as("n_ws"))
       .orderBy("doc_id")
-  }
+
+  /** q15's and q114's GPT-2-style pretokenizer pattern. */
+  private val BpePretokenizer = "'(?:[sdmt]|ll|ve|re)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\\s']+|\\s+"
 
   private val o15 =
     """SELECT doc_id,
@@ -701,7 +708,7 @@ object Queries {
     * (the image-side fragment scoring itself is pinned by the
     * mosaic-oracle/golden unit tests; no SQL engine can decode tiles). */
   private[graft] def vegFragParts(s: SparkSession, vc: VegCase): (DataFrame, DataFrame) = {
-    val idx = VegPipeline.buildIndex(s, vc.gardens, vc.cfg.tileSize, vc.cfg.webMercatorZoom)
+    val idx = VegPipeline.buildIndex(s, vc.gardens, vc.cfg.tileSize)
     (VegPipeline.fragments(s, idx, vc.tiles, vc.cfg, vc.cir),
       idx.prepared.select("gid", "id"))
   }
@@ -867,16 +874,7 @@ object Queries {
     * injected pairs' 0.992 and 0.38 above the densest true pair. */
   private def q29(s: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.Exprs.{col => ec2, expr => ee2}
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
-    // max+1 offset keeps injected dup ids disjoint from real vec_ids at
-    // ANY table size (a fixed 1e6 collides past 1e6 rows); oracle mirrors.
-    val mxRow = emb.agg(max("vec_id")).head()
-    val dupOff = (if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)) + 1L // empty table: no rows to offset anyway
-    val dups = emb.where(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + lit(dupOff)).as("vec_id"),
-        transform(col("e"), (x, i) => when(i === 0, x + 0.125).otherwise(x)).as("e"))
-    val all = emb.unionAll(dups)
+    val all = embeddingsWithDups(s, dir)
     val a = all.select(col("vec_id").as("a_id"), col("e").as("ae"))
     val b = all.select(col("vec_id").as("b_id"), col("e").as("be"))
     val dot = ec2(DotF64(ee2(col("ae")), ee2(col("be"))))
@@ -887,6 +885,21 @@ object Queries {
       .select(col("a_id"), col("b_id"),
         floor(col("cos") * 100).cast("int").as("cos_pct"))
       .orderBy("a_id", "b_id")
+  }
+
+  /** The embeddings as (vec_id, e: array<double>) plus the injected
+    * near-dups of q29 and q102: a copy of every 50th vector with +0.125
+    * on dim 0, its id offset by max(vec_id) + 1. The offset keeps the
+    * copies' ids disjoint from real vec_ids at ANY table size (a fixed
+    * 1e6 collides past 1e6 rows); o29's and o102's mx CTEs mirror it. */
+  private def embeddingsWithDups(s: SparkSession, dir: String): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
+    val mxRow = emb.agg(max("vec_id")).head()
+    val dupOff = (if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)) + 1L // empty table: no rows to offset anyway
+    emb.unionAll(emb.where(col("vec_id") % 50 === 0)
+      .select((col("vec_id") + lit(dupOff)).as("vec_id"),
+        transform(col("e"), (x, i) => when(i === 0, x + 0.125).otherwise(x)).as("e")))
   }
 
   private val o29 =
@@ -1234,13 +1247,7 @@ object Queries {
     * the sampling hash from q46's split hash. Re-runs, re-shards and
     * appends keep/drop the same documents by construction. */
   private def q49(s: SparkSession, dir: String): DataFrame = {
-    val low = lower(col("text"))
-    def hits(words: Seq[String]): Column =
-      words.map(wd => size(split(low, s"\\b$wd\\b")) - 1).reduce(_ + _)
-    val en = hits(Seq("the", "and", "of", "is"))
-    val fr = hits(Seq("le", "la", "et", "est"))
-    val de = hits(Seq("der", "und", "die", "ist"))
-    val lang = when(en >= fr && en >= de, "en").when(fr >= de, "fr").otherwise("de")
+    val lang = Lang.guess
     val bucket = (conv(substring(md5(concat(lit("strat|"), col("text"))), 1, 6), 16, 10)
       .cast("long") % 100).cast("int")
     val rate = when(lang === "en", 50).when(lang === "fr", 20).otherwise(10)
@@ -1530,13 +1537,7 @@ object Queries {
     * this hash from q46's split and q49's sampling hashes, so the three
     * decisions are independent. */
   private def q54(s: SparkSession, dir: String): DataFrame = {
-    val low = lower(col("text"))
-    def hits(words: Seq[String]): Column =
-      words.map(wd => size(split(low, s"\\b$wd\\b")) - 1).reduce(_ + _)
-    val en = hits(Seq("the", "and", "of", "is"))
-    val fr = hits(Seq("le", "la", "et", "est"))
-    val de = hits(Seq("der", "und", "die", "ist"))
-    val lang = when(en >= fr && en >= de, "en").when(fr >= de, "fr").otherwise("de")
+    val lang = Lang.guess
     val u = (conv(substring(md5(concat(lit("mix|"), col("text"))), 1, 6), 16, 10)
       .cast("long") % 10000).cast("int")
     val base = when(lang === "en", 1).when(lang === "fr", 2).otherwise(3)
@@ -3259,15 +3260,7 @@ object Queries {
     * inner class join. Output is the full confusion frame with
     * marginals; the kappa scalars broadcast onto every cell row. */
   private def q98(s: SparkSession, dir: String): DataFrame = {
-    val low = lower(col("text"))
-    def hits(words: Seq[String]): Column =
-      words.map(wd => size(split(low, s"\\b$wd\\b")) - 1).reduce(_ + _)
-    val en = hits(Seq("the", "and", "of", "is"))
-    val fr = hits(Seq("le", "la", "et", "est"))
-    val de = hits(Seq("der", "und", "die", "ist"))
-    val lab = t(s, dir, "documents").select(col("lang"),
-      when(en >= fr && en >= de, "en").when(fr >= de, "fr").otherwise("de")
-        .as("lang_guess"))
+    val lab = t(s, dir, "documents").select(col("lang"), Lang.guess.as("lang_guess"))
     // cells has four consumers but is left LAZY deliberately: its
     // aggregation Exchange is identical under every consumer, so AQE
     // exchange reuse already runs the 12-regex corpus scan once — an
@@ -3560,16 +3553,7 @@ object Queries {
   private def q102(s: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.Exprs.{col => ec, expr => ee}
     val cents = kmeansCentroids(s, dir)
-    val emb = t(s, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
-    // Same max+1 disjoint-range device as q29 (and mirrored in o102's
-    // mx CTE): injected dup ids can never collide with real vec_ids.
-    val mxRow = emb.agg(max("vec_id")).head()
-    val dupOff = (if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)) + 1L // empty table: no rows to offset anyway
-    val dups = emb.where(col("vec_id") % 50 === 0)
-      .select((col("vec_id") + lit(dupOff)).as("vec_id"),
-        transform(col("e"), (x, i) => when(i === 0, x + 0.125).otherwise(x)).as("e"))
-    val allv = emb.unionAll(dups)
+    val allv = embeddingsWithDups(s, dir)
       .withColumn("cluster",
         element_at(ec(graft.functions.IvfLists(ee(col("e")), cents, 1)), 1).cast("int"))
     val dot = ec(DotF64(ee(col("ae")), ee(col("be"))))
@@ -4171,14 +4155,12 @@ object Queries {
     * letters fall into the `[^a-zA-Z0-9\s']+` residual class and \r/\t
     * boundaries fall into `\s+`. Both engines use ASCII \s and operate
     * per BMP codepoint, so the counts are exactly comparable. */
-  private def q114(s: SparkSession, dir: String): DataFrame = {
-    val bpe = "'(?:[sdmt]|ll|ve|re)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9\\s']+|\\s+"
+  private def q114(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Sidecars.unicodeDocsPath).select(col("uid"),
-        regexp_count(col("text"), lit(bpe)).as("n_bpe"),
+        regexp_count(col("text"), lit(BpePretokenizer)).as("n_bpe"),
         regexp_count(col("text"), lit(" ?[a-zA-Z]+")).as("n_word"),
         regexp_count(col("text"), lit("\\s+")).as("n_ws"))
       .orderBy("uid")
-  }
 
   private lazy val o114 =
     s"""SELECT uid,

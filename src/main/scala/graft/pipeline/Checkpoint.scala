@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * reference's atomic-rename work queue + sift + recombine,
   * scripts/bulk_analyse.py / bulk_sift_incomplete.py / bulk_recombine.py).
   *
-  * The tile table is bucketed by cell hash into `buckets` units of work,
-  * processed `groupSize` buckets per Spark job. Each group is one
+  * The tile table is bucketed by the hash of its tile cell, under the
+  * index's tile naming (`PolyIndex.webMercatorZoom`), into `buckets`
+  * units of work, processed `groupSize` buckets per Spark job. Each group is one
   * partial-sum unit ([[VegPipeline.writePartialUnit]]: sums at
   * `group=<g>`), and the group appends a manifest line after it commits,
   * so a crashed run resumes by anti-joining the manifest — per-partition
@@ -52,16 +53,18 @@ object Checkpoint {
     val pending = (0 until nGroups).filterNot(done)
     val toRun = pending.take(maxGroups)
 
+    // the bucket key is the tile cell under the index's tile naming;
+    // scoring takes the `cell` column as it is
     val tilesWithBucket = tiles
-      .withColumn("cell0", VegPipeline.keyToCell(cfg.webMercatorZoom)(col("image_id")))
-      .where(col("cell0").isNotNull)
-      .withColumn("bucket", pmod(hash(col("cell0")), lit(buckets)))
+      .withColumn("cell", VegPipeline.keyToCell(index.webMercatorZoom)(col("image_id")))
+      .where(col("cell").isNotNull)
+      .withColumn("bucket", pmod(hash(col("cell")), lit(buckets)))
 
     toRun.foreach { g =>
       val lo = g * groupSize
       val hi = math.min(lo + groupSize, buckets)
       val part = tilesWithBucket.where(col("bucket") >= lo && col("bucket") < hi)
-        .drop("cell0", "bucket")
+        .drop("bucket")
       VegPipeline.writePartialUnit(spark, index, part, cfg, outDir, s"group=$g")
       // commit marker AFTER the data is durably written
       Files.writeString(manifestPath(outDir), s"$g\n",

@@ -58,7 +58,9 @@ object Exprs {
   * (reference: calculate_indices.py:110-137 + image_loaders.py:201-213,
   * 257-294 prep portions)
   *
-  * Two tile namings share everything after the projection:
+  * Two tile namings share everything after the projection. The naming is
+  * chosen here, once per index ([[VegPipeline.buildIndex]]); scoring reads
+  * it back from `PolyIndex.webMercatorZoom`:
   *  - OSGB (`webMercatorZoom` None): CRS84 or EPSG:27700 to km tiles
   *    (y north), area in m², sort key (easting, northing) km;
   *  - web mercator (Some(zoom), the WebMercatorMapLoader path,

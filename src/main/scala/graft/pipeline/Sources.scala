@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,6 +12,7 @@ import org.apache.spark.sql.types._
   *   - uprn as scalar, list, "{a,b}"-packed string, or null,
   *   - Polygon vs MultiPolygon geometry (Polygon is wrapped),
   *   - file-level crs defaulting to CRS84.
+  * An input without features gives zero rows of the same schema.
   */
 object GeoJson {
 
@@ -24,10 +25,13 @@ object GeoJson {
       else Exprs.CRS84
 
     val feats = raw.select(explode(col("features")).as("f"))
-    val fSchema = feats.schema("f").dataType.asInstanceOf[StructType]
-    val props = fSchema("properties").dataType.asInstanceOf[StructType]
-    val geom = fSchema("geometry").dataType.asInstanceOf[StructType]
-    normalizeFeatures(feats, props, geom, pfx = "f.", crsName = crsName)
+    feats.schema("f").dataType match {
+      case f: StructType => normalizeFeatures(feats, f, pfx = "f.", crsName = crsName)
+      case _ => // `"features": []` infers array<string>
+        require(raw.where(size(col("features")) > 0).isEmpty,
+          "features must be GeoJSON Feature objects")
+        noFeatures(spark, crsName)
+    }
   }
 
   /** S1 scale path: newline-delimited GeoJSON features ("GeoJSONL") —
@@ -42,19 +46,28 @@ object GeoJson {
   def readGardensLines(spark: SparkSession, path: String,
                        crsName: String = Exprs.CRS84): DataFrame = {
     val raw = spark.read.json(path)
-    val schema = raw.schema
-    require(hasField(schema, "geometry") && hasField(schema, "properties"),
-      "GeoJSONL lines need geometry and properties fields")
-    val props = schema("properties").dataType.asInstanceOf[StructType]
-    val geom = schema("geometry").dataType.asInstanceOf[StructType]
-    normalizeFeatures(raw, props, geom, pfx = "", crsName = crsName)
+    if (raw.schema.isEmpty) noFeatures(spark, crsName) // an empty file infers struct<>
+    else normalizeFeatures(raw, raw.schema, pfx = "", crsName = crsName)
   }
 
-  /** Shared duck-typing normalization over a feature frame: `pfx` is ""
-    * for top-level (GeoJSONL) or "f." for the exploded collection. */
-  private def normalizeFeatures(feats: DataFrame, props: StructType,
-                                geom: StructType, pfx: String,
+  /** The normalized frame of an input without features: zero rows, built
+    * by the one normalization so its schema is a read's schema. */
+  private def noFeatures(spark: SparkSession, crsName: String): DataFrame = {
+    val feature = StructType.fromDDL("properties struct<id: string>, " +
+      "geometry struct<coordinates: array<array<array<array<double>>>>>")
+    normalizeFeatures(spark.createDataFrame(java.util.List.of[Row](), feature), feature,
+      pfx = "", crsName = crsName)
+  }
+
+  /** Shared duck-typing normalization over a feature frame of schema
+    * `feature`: `pfx` is "" for top-level (GeoJSONL) or "f." for the
+    * exploded collection. */
+  private def normalizeFeatures(feats: DataFrame, feature: StructType, pfx: String,
                                 crsName: String): DataFrame = {
+    require(hasField(feature, "geometry") && hasField(feature, "properties"),
+      "GeoJSON features need geometry and properties fields")
+    val props = feature("properties").dataType.asInstanceOf[StructType]
+    val geom = feature("geometry").dataType.asInstanceOf[StructType]
     val idCol: Column = (props.fieldNames.contains("id"), props.fieldNames.contains("toid")) match {
       case (true, true) => coalesce(col(s"${pfx}properties.id"), col(s"${pfx}properties.toid"))
       case (true, false) => col(s"${pfx}properties.id")

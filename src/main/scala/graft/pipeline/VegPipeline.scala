@@ -43,9 +43,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       tileSize: Int = 256,
       kernelNames: Seq[String] = Seq("greenleaf"),
       handleMissingTiles: Boolean = true,
-      /** Some(zoom): the web-mercator loader path (slippy "z/x/y" tiles,
-        * y-down raster, area in tile^2 units, image_loaders.py:32-158). */
-      webMercatorZoom: Option[Int] = None,
       /** Ceiling on the estimated broadcast-lookup size: when the
         * prepared polygon side exceeds it, the broadcast path is
         * auto-disabled and the same plan runs as the shuffled cell join
@@ -109,7 +106,8 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   /** The reusable cell→polygon "interval index" artifact: prepared garden
     * metadata (persisted) + per-tile-cell packed polygon blobs. Build once,
     * score any number of tile batches/streams against it — under a
-    * config with the same tile size and tile naming. */
+    * config with the same tile size. `webMercatorZoom` is the run's tile
+    * naming, the one copy scoring, pruning and checkpoint bucketing read. */
   final case class PolyIndex(prepared: DataFrame, cellPolys: DataFrame, tileSize: Int,
                              webMercatorZoom: Option[Int] = None) {
     /** [[VegPipeline.covering]]'s memo: one slot with no key, since both
@@ -159,10 +157,14 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Prepares the gardens and keys their blobs by tile cell. `grid` is
-    * the cover ([[PrepareGarden]]), the one place a grid is chosen: a hex
-    * cover keys each garden by a superset of its square cover's tiles,
-    * so every later step (lookup, pruning, zero-fill) is grid-blind. */
+  /** Prepares the gardens and keys their blobs by tile cell. The index
+    * fixes two choices once ([[PrepareGarden]]); every later step
+    * (lookup, pruning, zero-fill, checkpoint buckets) reads them from it:
+    *  - `webMercatorZoom` is the tile naming: None for OSGB km tile codes,
+    *    Some(zoom) for the web-mercator loader path (slippy "z/x/y" tiles,
+    *    y-down raster, area in tile² units, image_loaders.py:32-158);
+    *  - `grid` is the cover: a hex cover keys each garden by a superset of
+    *    its square cover's tiles, so the later steps are grid-blind. */
   def buildIndex(spark: SparkSession, gardens: DataFrame, tileSize: Int,
                  webMercatorZoom: Option[Int] = None,
                  grid: graft.index.GridSystem = graft.index.GridSystem.Square): PolyIndex = {
@@ -175,25 +177,16 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     PolyIndex(prepared, cellPolys, tileSize, webMercatorZoom)
   }
 
-  /** Per-garden result: gid, id, uprn, cx, cy, area_m2, sort_key, npix,
-    * frac_<kernel>... */
+  /** Per-garden result over OSGB-named tiles: gid, id, uprn, cx, cy,
+    * area_m2, sort_key, npix, frac_<kernel>... Other tile namings build
+    * their index with [[buildIndex]] and call [[scoreAgainst]]. */
   def run(spark: SparkSession, gardens: DataFrame, tiles: DataFrame,
           cfg: Config = Config(), cirTiles: Option[DataFrame] = None): DataFrame =
-    scoreAgainst(spark,
-      buildIndex(spark, gardens, cfg.tileSize, cfg.webMercatorZoom),
-      tiles, cfg, cirTiles)
+    scoreAgainst(spark, buildIndex(spark, gardens, cfg.tileSize), tiles, cfg, cirTiles)
 
   def scoreAgainst(spark: SparkSession, index: PolyIndex, tiles: DataFrame,
                    cfg: Config, cirTiles: Option[DataFrame] = None): DataFrame =
     fractionsFromSums(index, fragmentSums(spark, index, tiles, cfg, cirTiles), cfg)
-
-  /** An index scored under a config keyed differently would look its
-    * cells up in the wrong key space and return wrong sums silently. */
-  private def requireIndexFits(index: PolyIndex, cfg: Config): Unit = {
-    require(index.tileSize == cfg.tileSize, "index/config tile size mismatch")
-    require(index.webMercatorZoom == cfg.webMercatorZoom,
-      s"index built for webMercatorZoom=${index.webMercatorZoom}, config has ${cfg.webMercatorZoom}")
-  }
 
   private def fitsBroadcast(index: PolyIndex, cfg: Config): Boolean =
     index.broadcastEstimateBytes <= cfg.broadcastMaxBytes
@@ -255,16 +248,16 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   def tileIdPredicate(index: PolyIndex, cfg: Config): Column =
     covering(index, cfg).idPredicate
 
-  /** Rewrite image_id to canonical form by round-tripping through the
-    * cell key (id -> cell -> canonical id); unparseable ids pass through
-    * unchanged (and are skipped by scoring anyway). Run at ingest when a
-    * tile catalog may contain parseable-but-non-canonical names, so the
-    * always-on covering-range predicate ([[tileIdPredicate]]) and the
-    * scored set agree. An alias merged into the id of a tile the table
-    * also holds leaves two rows for one cell, which zero-fill does not
-    * take (see [[fragmentSums]]): keep one of them. */
-  def normalizeImageIds(tiles: DataFrame, cfg: Config): DataFrame = {
-    val n = naming(cfg.webMercatorZoom)
+  /** Rewrite image_id to canonical form under the `webMercatorZoom` tile
+    * naming (id -> cell -> canonical id); unparseable ids pass through
+    * unchanged (and are skipped by scoring anyway). Run at ingest, with or
+    * without an index, when a tile catalog may hold parseable but
+    * non-canonical names, so the always-on covering-range predicate
+    * ([[tileIdPredicate]]) and the scored set agree. An alias merged into
+    * the id of a tile the table also holds leaves two rows for one cell,
+    * which zero-fill does not take (see [[fragmentSums]]): keep one. */
+  def normalizeImageIds(tiles: DataFrame, webMercatorZoom: Option[Int] = None): DataFrame = {
+    val n = naming(webMercatorZoom)
     tiles.withColumn("image_id", coalesce(n.toKey(n.toCell(col("image_id"))), col("image_id")))
   }
 
@@ -319,7 +312,8 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   private def scoredFragments(index: PolyIndex, tiles: DataFrame, cfg: Config,
                               cirTiles: Option[DataFrame]): DataFrame = {
     require(cfg.kernelNames.nonEmpty, "at least one index kernel required")
-    requireIndexFits(index, cfg)
+    // masks laid on another tile size's pixel grid would sum wrong silently
+    require(index.tileSize == cfg.tileSize, "index/config tile size mismatch")
     // format-compat check (reference: analyse_polygons.py:208-213)
     val fmts = cfg.kernelNames.map(Kernels.all(_).inputFormat).distinct
     require(fmts.size == 1,
@@ -337,12 +331,13 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
 
     // a pre-materialized `cell` column (the bucketed tile-table write
-    // path, TileBuckets.write) is used as-is: deriving it again through
-    // the key expression would discard the scan's bucket partitioning
-    // and reintroduce the Exchange the bucketing exists to remove
+    // path, TileBuckets.write, or a Checkpoint group's bucket key) is used
+    // as-is: deriving it again through the key expression would discard
+    // the scan's bucket partitioning and reintroduce the Exchange the
+    // bucketing exists to remove
     def withCell(df: DataFrame): DataFrame =
       if (df.columns.contains("cell")) df
-      else df.withColumn("cell", keyToCell(cfg.webMercatorZoom)(col("image_id")))
+      else df.withColumn("cell", keyToCell(index.webMercatorZoom)(col("image_id")))
     val rgbWithCell = withCell(pruneTiles(tiles, index, cfg))
       .select(col("cell"), col("image_id"), col("bytes"))
       .where(col("cell").isNotNull)
@@ -375,12 +370,12 @@ object VegPipeline extends org.apache.spark.internal.Logging {
         (tilesWithCell, ec(ScoreFragments(
           ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")),
           ee(lit(null).cast("array<binary>")),
-          cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
+          cfg.tileSize, cfg.kernelNames, yDown = index.webMercatorZoom.nonEmpty,
           metrics = cfg.metrics, lookup = Some(index.broadcastLookup))))
       } else {
         (tilesWithCell.join(index.cellPolys, Seq("cell")), ec(ScoreFragments(
           ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")), ee(col("blobs")),
-          cfg.tileSize, cfg.kernelNames, yDown = cfg.webMercatorZoom.nonEmpty,
+          cfg.tileSize, cfg.kernelNames, yDown = index.webMercatorZoom.nonEmpty,
           metrics = cfg.metrics)))
       }
     matched.select(explode(scoreCol).as("s"))

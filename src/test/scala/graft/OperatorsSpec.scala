@@ -373,6 +373,22 @@ class OperatorsSpec extends AnyFunSuite {
     assert(geom.length == 1 && geom.head.head.length == 4)
   }
 
+  test("empty GeoJSON inputs give zero gardens of the normalized schema") {
+    // `"features": []` infers array<string>; an empty GeoJSONL file infers struct<>
+    val fc = java.io.File.createTempFile("gardens_empty", ".geojson")
+    java.nio.file.Files.writeString(fc.toPath, """{"type":"FeatureCollection","features":[]}""")
+    val lines = java.io.File.createTempFile("gardens_empty", ".geojsonl")
+    val tiles = Synthetic.tiles(spark, 2, 2, 64)
+    Seq(GeoJson.readGardens(spark, fc.getAbsolutePath),
+        GeoJson.readGardensLines(spark, lines.getAbsolutePath)).foreach { df =>
+      assert(df.schema.map(f => f.name -> f.dataType.simpleString) == Seq("id" -> "string",
+        "uprn" -> "array<string>", "geometry" -> "array<array<array<array<double>>>>",
+        "crs" -> "string"))
+      assert(df.count() == 0)
+      assert(VegPipeline.run(spark, df, tiles, VegPipeline.Config(tileSize = 64)).count() == 0)
+    }
+  }
+
   // ------------------------------------------------ reports
 
   test("report files replicate the reference's formats byte-for-byte") {

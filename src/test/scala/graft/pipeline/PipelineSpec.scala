@@ -303,7 +303,7 @@ class PipelineSpec extends AnyFunSuite {
     val wmGardens = Seq(
       Synthetic.GardenRow("wmp0", Array("90"), Seq(Seq(square)), Exprs.CRS84)).toDF()
     val wmIdx = VegPipeline.buildIndex(spark, wmGardens, ts, Some(zoom))
-    val wmCfg = VegPipeline.Config(tileSize = ts, webMercatorZoom = Some(zoom))
+    val wmCfg = VegPipeline.Config(tileSize = ts)
     val wmPred = VegPipeline.tileIdPredicate(wmIdx, wmCfg)
     val wmCells = wmIdx.cellPolys.select("cell").collect().map(_.getLong(0)).toSet
     assert(wmCells.nonEmpty)
@@ -511,7 +511,7 @@ class PipelineSpec extends AnyFunSuite {
     // cell as canonical "SJ5050" but fails the canonical-id IN predicate
     val cfg = VegPipeline.Config(tileSize = ts, kernelNames = Seq("greenleaf"))
     val norm = VegPipeline.normalizeImageIds(
-      Seq("SI5050", "SJ5050", "SU0401", "garbage").toDF("image_id"), cfg)
+      Seq("SI5050", "SJ5050", "SU0401", "garbage").toDF("image_id"))
       .collect().map(_.getString(0))
     assert(norm.toSeq == Seq("SJ5050", "SJ5050", "SU0401", "garbage"))
 
@@ -532,7 +532,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     val canonical = frac(Seq(("SJ5050", bytes)).toDF("image_id", "bytes"))
     val prunedRaw = frac(tiles)
-    val prunedNorm = frac(VegPipeline.normalizeImageIds(tiles, cfg))
+    val prunedNorm = frac(VegPipeline.normalizeImageIds(tiles))
     assert(canonical._1 > 0 && canonical._2 > 0.0)
     assert(prunedNorm == canonical, "normalized ids must score as the canonical tile")
     // documented precondition: without normalization the non-canonical
@@ -829,21 +829,27 @@ class PipelineSpec extends AnyFunSuite {
       val tiles = (for (x <- x0 until x0 + 3; y <- y0 until y0 + 3; r <- tileFor(x, y)) yield
         Synthetic.TileRow(s"$zoom/$x/$y", graft.img.Codec.encodePNG(r), ts, ts, "png", "wm tile", 0L)
       ).toDF()
-      val res = VegPipeline.run(spark, gardens, tiles,
-        VegPipeline.Config(tileSize = ts, kernelNames = names,
-          webMercatorZoom = Some(zoom), handleMissingTiles = dropped.nonEmpty)).collect()
-      assert(res.length == 12)
-      res.foreach { row =>
-        val o = oracle(row.getAs[String]("id"))
-        assert(row.getAs[Long]("npix") == o.npix, s"npix for ${row.getAs[String]("id")} ($dropped)")
-        names.zipWithIndex.foreach { case (nm, i) =>
-          assert(row.getAs[Double](s"frac_$nm") == o.fracs(i),
-            s"$nm for ${row.getAs[String]("id")} ($dropped)")
+      // broadcast lookup, then the shuffled join; a fresh index per path,
+      // so the shuffled run takes its covering cells from cellPolys
+      val cfg = VegPipeline.Config(tileSize = ts, kernelNames = names,
+        handleMissingTiles = dropped.nonEmpty)
+      Seq(cfg, cfg.copy(broadcastMaxBytes = 0)).foreach { c =>
+        val path = s"$dropped, broadcastMaxBytes=${c.broadcastMaxBytes}"
+        val res = VegPipeline.scoreAgainst(spark,
+          VegPipeline.buildIndex(spark, gardens, ts, Some(zoom)), tiles, c).collect()
+        assert(res.length == 12)
+        res.foreach { row =>
+          val o = oracle(row.getAs[String]("id"))
+          assert(row.getAs[Long]("npix") == o.npix, s"npix for ${row.getAs[String]("id")} ($path)")
+          names.zipWithIndex.foreach { case (nm, i) =>
+            assert(row.getAs[Double](s"frac_$nm") == o.fracs(i),
+              s"$nm for ${row.getAs[String]("id")} ($path)")
+          }
+          assert(math.abs(row.getAs[Double]("area_m2") - o.areaM2) < 1e-12) // tile² units
         }
-        assert(math.abs(row.getAs[Double]("area_m2") - o.areaM2) < 1e-12) // tile² units
+        val withPix = res.filter(_.getAs[Long]("npix") > 100)
+        assert(withPix.nonEmpty && withPix.exists(r => r.getAs[Double]("frac_greenleaf") > 0.1))
       }
-      val withPix = res.filter(_.getAs[Long]("npix") > 100)
-      assert(withPix.nonEmpty && withPix.exists(r => r.getAs[Double]("frac_greenleaf") > 0.1))
       oracle
     }
     assert(gardenRows.exists(g => oracles(0)(g.id).fracs != oracles(1)(g.id).fracs),
@@ -882,26 +888,25 @@ class PipelineSpec extends AnyFunSuite {
     val (gardens, allTiles) = webMercFixture()
     // one covered tile missing, so the final pass zero-fills slippy cells too
     val tiles = allTiles.where(org.apache.spark.sql.functions.col("image_id") =!= "15/16151/10901")
-    val cfg = VegPipeline.Config(tileSize = 64, kernelNames = Seq("greenleaf", "hsv"),
-      webMercatorZoom = Some(15))
+    val cfg = VegPipeline.Config(tileSize = 64, kernelNames = Seq("greenleaf", "hsv"))
     val dir = java.nio.file.Files.createTempDirectory("ckpt_wm").toString
     val idx = VegPipeline.buildIndex(spark, gardens, 64, Some(15))
     assert(Checkpoint.runGroups(spark, idx, tiles, cfg, dir, buckets = 4, groupSize = 2) == 2)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "npix", "frac_greenleaf", "frac_hsv").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).sortBy(_._1).toSeq
-    val batch = rows(VegPipeline.run(spark, gardens, tiles, cfg))
+    val batch = rows(VegPipeline.scoreAgainst(spark,
+      VegPipeline.buildIndex(spark, gardens, 64, Some(15)), tiles, cfg))
     assert(batch.size == 12 && batch.count(_._2 > 0) >= 10)
     assert(rows(Checkpoint.fractions(spark, idx, cfg, dir)) == batch)
   }
 
-  test("scoring an index under a config for another tile naming fails loudly") {
+  test("scoring an index under a config for another tile size fails loudly") {
     val gardens = Synthetic.gardens(spark, 10, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
-    val squareIdx = VegPipeline.buildIndex(spark, gardens, ts)
-    val cfg = VegPipeline.Config(tileSize = ts, handleMissingTiles = false)
+    val idx = VegPipeline.buildIndex(spark, gardens, ts)
     intercept[IllegalArgumentException] {
-      VegPipeline.scoreAgainst(spark, squareIdx, tiles, cfg.copy(webMercatorZoom = Some(15))).collect()
+      VegPipeline.scoreAgainst(spark, idx, tiles, VegPipeline.Config(tileSize = 2 * ts)).collect()
     }
   }
 
