@@ -200,7 +200,7 @@ object Bench {
     * in production, amortized over the full tile-table scan). */
   private def buildIndex(spark: SparkSession, gardensPath: String, ts: Int): VegPipeline.PolyIndex = {
     val idx = VegPipeline.buildIndex(spark, spark.read.parquet(gardensPath), ts)
-    idx.cellPolys.count() // materialize both persisted sides
+    idx.prepared.count() // materialize the persisted prepared side
     idx
   }
 
@@ -315,7 +315,7 @@ object Bench {
       g
     }
     val idxG = VegPipeline.buildIndex(tileS, gardensFromLines, ts)
-    idxG.cellPolys.count()
+    idxG.prepared.count()
     tuneSplits(tileS, tilesPath, cpus)
     val (tFlagGeo, fpGeo) = time(runFlagship(tileS, idxG, tilesPath, ts))
     require(fpGeo == ((nRows, nPix)),

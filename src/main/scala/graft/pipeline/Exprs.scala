@@ -74,8 +74,9 @@ case class PrepareGarden(gid: Expression, geometry: Expression, crs: Expression,
                            * tiles of the bbox (reference semantics). A hex
                            * grid (H3-style) covers every tile whose center
                            * shares a hex with a square-cover tile's center
-                           * — a superset whose extra fragments score zero
-                           * pixels, so sums are bit-identical. Either way
+                           * — a superset whose extra blobs scoring skips
+                           * ([[PolyBlob.meetsTile]]), so sums are
+                           * bit-identical. Either way
                            * `cells` are tile cells. */
                          grid: graft.index.GridSystem = graft.index.GridSystem.Square,
                          webMercatorZoom: Option[Int] = None)
@@ -199,16 +200,16 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
         if (blobsV == null) null
         else Array.tabulate(blobsV.numElements())(i => blobsV.getBinary(i))
     }
-    if (blobArr == null || blobArr.length == 0) return new GenericArrayData(Array.empty[Any])
-    val bytesV = bytes.eval(input).asInstanceOf[Array[Byte]]
-    val cirV = cirBytes.eval(input).asInstanceOf[Array[Byte]]
-
+    if (blobArr == null) return new GenericArrayData(Array.empty[Any])
     val ts = tileSize
     val e = ZIndex.cellE(cellV)
     val n = ZIndex.cellN(cellV)
-    val pps = new Array[PolyBlob.Prepared](blobArr.length)
-    var i = 0
-    while (i < blobArr.length) { pps(i) = PolyBlob.deserialize(blobArr(i)); i += 1 }
+    // a hex cover keys gardens by tiles their crop box may miss: such a
+    // blob scores zero pixels, so it is neither deserialized nor counted
+    val pps = blobArr.filter(PolyBlob.meetsTile(_, e, n, ts)).map(PolyBlob.deserialize)
+    if (pps.isEmpty) return new GenericArrayData(Array.empty[Any])
+    val bytesV = bytes.eval(input).asInstanceOf[Array[Byte]]
+    val cirV = cirBytes.eval(input).asInstanceOf[Array[Byte]]
 
     // decode only the union of the fragment windows — the only pixels
     // scoreFragment reads — and nothing when no window meets the tile
@@ -242,11 +243,11 @@ case class ScoreFragments(cell: Expression, bytes: Expression,
     }
 
     metrics.foreach { m =>
-      if (!present) m.missingTileFragments.add(blobArr.length)
-      m.fragmentsScored.add(blobArr.length)
+      if (!present) m.missingTileFragments.add(pps.length)
+      m.fragmentsScored.add(pps.length)
     }
     val out = new Array[Any](pps.length)
-    i = 0
+    var i = 0
     while (i < pps.length) {
       val pp = pps(i)
       val (npix, veg) = PolyBlob.scoreFragment(pp, e, n, ts, raster, kernels, yDown)

@@ -57,15 +57,23 @@ object PolyBlob {
     Prepared(gid, cx0, cx1, cy0, cy1, new MPoly(polys))
   }
 
+  /** Whether a serialized blob's crop box (header: gid, cropX0, cropX1,
+    * cropY0, cropY1) meets tile (cellE, cellN): [[scoreFragment]]'s test,
+    * without deserializing the polygon. A blob that misses scores 0. */
+  def meetsTile(bytes: Array[Byte], cellE: Int, cellN: Int, ts: Int): Boolean = {
+    val h = java.nio.ByteBuffer.wrap(bytes) // big-endian, as DataOutputStream writes
+    val tileX0 = cellE * ts; val tileY0 = cellN * ts
+    math.max(h.getInt(8), tileX0) <= math.min(h.getInt(12), tileX0 + ts - 1) &&
+      math.max(h.getInt(16), tileY0) <= math.min(h.getInt(20), tileY0 + ts - 1)
+  }
+
   /** A window of one tile's raster: columns x0..x1 and rows y0..y1,
     * inclusive, counted from the raster's top-left pixel. */
   final case class Window(x0: Int, y0: Int, x1: Int, y1: Int)
 
   /** Bounding box of the raster windows of every fragment of tile
     * (cellE, cellN) — the only pixels [[scoreFragment]] reads — or None
-    * when no fragment window meets the tile (e.g. the extra fragments of
-    * a hex-grid superset match, which score zero pixels). `yDown` as in
-    * [[scoreFragment]]. */
+    * when no fragment window meets the tile. `yDown` as in [[scoreFragment]]. */
   def windowUnion(pps: Array[Prepared], cellE: Int, cellN: Int, ts: Int,
                   yDown: Boolean = false): Option[Window] = {
     val tileX0 = cellE * ts; val tileY0 = cellN * ts

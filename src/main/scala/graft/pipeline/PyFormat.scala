@@ -61,8 +61,10 @@ object PyFormat {
   /** CPython '{:.1f}'. */
   def fixed1(d: Double): String = fixed(d, 1)
 
+  /** CPython '{:.<places>f}', also for nan, inf and -inf (a summary's 0/0). */
   def fixed(d: Double, places: Int): String =
-    new JBigDecimal(d).setScale(places, RoundingMode.HALF_EVEN).toPlainString
+    if (!java.lang.Double.isFinite(d)) repr(d)
+    else new JBigDecimal(d).setScale(places, RoundingMode.HALF_EVEN).toPlainString
 
   def fixedGrouped(d: Double, places: Int): String = {
     val plain = fixed(math.abs(d), places)

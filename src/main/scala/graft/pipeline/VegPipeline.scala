@@ -17,10 +17,11 @@ import graft.kernel.Kernels
   * Plan shape (designed for a 100 TB tile table):
   *   1. prepare gardens (tiny side): CRS transform, centroid, area, cover
   *      cells, pixel-space blob, mask pixel total — one narrow projection.
-  *   2. index blobs by cell: within broadcastMaxBytes the index is the
+  *   2. index blobs by cell: an index within a fixed size ceiling is the
   *      lookup, a driver-built cell→blobs map broadcast once, whose keys
-  *      also give the pruning ids without a Spark job; cellPolys (blobs
-  *      grouped by cell) serves only the shuffled join.
+  *      also give the pruning ids without a Spark job; a larger one is
+  *      cellPolys (blobs grouped by cell) for the shuffled join — a choice
+  *      the index makes once (PolyIndex.usesLookup).
   *   3. score tiles through the lookup (or join cellPolys on cell) — the
   *      tile table streams once; each matched tile is decoded exactly once
   *      and scored against all covering polygons (ScoreFragments).
@@ -33,7 +34,7 @@ import graft.kernel.Kernels
   * Skew: dense cells cost per-tile work proportional to covering polygons;
   * no shuffle key carries image bytes, so AQE's skew-join handling plus the
   * small fragment rows keep hot cells bounded. When the polygon side's
-  * estimated size exceeds broadcastMaxBytes, the same plan runs as a
+  * estimated size exceeds the lookup ceiling, the same plan runs as a
   * shuffled join co-partitioned on cell (tiles shuffle once; pre-bucket
   * the tile table by cell to eliminate even that at scale).
   */
@@ -43,15 +44,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       tileSize: Int = 256,
       kernelNames: Seq[String] = Seq("greenleaf"),
       handleMissingTiles: Boolean = true,
-      /** Ceiling on the estimated broadcast-lookup size: when the
-        * prepared polygon side exceeds it, the broadcast path is
-        * auto-disabled and the same plan runs as the shuffled cell join
-        * (the reference user never picks an execution strategy — the
-        * cache self-sizes, analyse_polygons.py:203-206 — so the engine
-        * must not OOM the driver on an oversized garden set). 2 GiB
-        * default: well under driver/executor headroom and Spark's 8 GiB
-        * broadcast hard cap. */
-      broadcastMaxBytes: Long = 2L << 30,
       /** decoded-tile / fragment accumulators (C3 statistics). */
       metrics: Option[PipelineMetrics] = None)
 
@@ -104,31 +96,39 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     naming(webMercatorZoom).toCell(imageId)
 
   /** The reusable cell→polygon "interval index" artifact: prepared garden
-    * metadata (persisted) + per-tile-cell packed polygon blobs. Build once,
-    * score any number of tile batches/streams against it — under a
-    * config with the same tile size. `webMercatorZoom` is the run's tile
-    * naming, the one copy scoring, pruning and checkpoint bucketing read. */
-  final case class PolyIndex(prepared: DataFrame, cellPolys: DataFrame, tileSize: Int,
-                             webMercatorZoom: Option[Int] = None) {
-    /** [[VegPipeline.covering]]'s memo: one slot with no key, since both
-      * sources of the covering cells yield the same set. */
-    @transient private var coveringSet: Covering = _
-    private[pipeline] def coveringMemo(compute: => Covering): Covering = synchronized {
-      if (coveringSet == null) coveringSet = compute
-      coveringSet
-    }
+    * metadata (persisted), built once and scored against any number of
+    * tile batches/streams — under a config with the same tile size. The
+    * index fixes the run's choices once, and every later step reads them
+    * here: `webMercatorZoom` is the tile naming, [[usesLookup]] the lookup
+    * formulation, and [[covering]] the covering cells pruning reads. */
+  final class PolyIndex private[graft] (val prepared: DataFrame, val tileSize: Int,
+      val webMercatorZoom: Option[Int], lookupMaxBytes: Long) extends Serializable {
 
     /** Estimated in-memory size of [[broadcastLookup]]: each garden's
       * blob bytes once (blobs are reference-shared across covering cells)
       * plus, per covering cell, an 8-byte array ref and a 64-byte
       * map-entry overhead bound. One narrow pass over the persisted
       * `prepared` frame sends one sum per partition to the driver (one
-      * job, no exchange). Drives the automatic broadcast↔shuffle path
-      * choice — computed lazily and memoized. */
+      * job, no exchange). Computed lazily and memoized. */
     @transient lazy val broadcastEstimateBytes: Long =
       prepared.select(coalesce(length(col("blob")), lit(0)).cast("long") +
           coalesce(size(col("cells")), lit(0)).cast("long") * 72L)
         .rdd.mapPartitions(rows => Iterator(rows.map(_.getLong(0)).sum)).collect().sum
+
+    /** This index over the same `prepared` frame under another lookup
+      * ceiling: how specs reach the shuffled cell join on small fixtures. */
+    private[graft] def underCeiling(bytes: Long): PolyIndex =
+      new PolyIndex(prepared, tileSize, webMercatorZoom, bytes)
+
+    /** Scoring's formulation, decided once: the [[broadcastLookup]] if the
+      * estimate fits the ceiling (outside specs [[LookupMaxBytes]]), else
+      * the cell join against [[cellPolys]]. */
+    @transient private[graft] lazy val usesLookup: Boolean = {
+      val fits = broadcastEstimateBytes <= lookupMaxBytes
+      if (!fits) logWarning(s"polygon index estimated at $broadcastEstimateBytes bytes exceeds " +
+        s"the $lookupMaxBytes-byte lookup ceiling; using the shuffled cell join")
+      fits
+    }
 
     /** The cell→blobs lookup as an executor-shared Broadcast variable,
       * materialized ONCE per index lifetime. A BroadcastHashJoin would
@@ -155,27 +155,64 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       buf.forEach((k, v) => m.put(k, v.toArray))
       prepared.sparkSession.sparkContext.broadcast(m)
     }
+
+    /** Blobs grouped by tile cell (cell, blobs): the shuffled cell join's
+      * side, persisted only once that join or its [[covering]] reads it. */
+    @transient lazy val cellPolys: DataFrame = prepared
+      .select(explode(col("cells")).as("cell"), col("blob"))
+      .groupBy("cell").agg(collect_list("blob").as("blobs"))
+    @transient private[VegPipeline] lazy val joinSide = cellPolys.persist(StorageLevel.MEMORY_AND_DISK)
+
+    /** The covering tile cells (of any cover grid) as pruning reads them,
+      * an image_id predicate and a box: the lookup's keys, with no Spark
+      * job, when [[usesLookup]]; else at most 8,193 of the join side's
+      * cells, and above 8,192 one aggregation, so the driver never holds a
+      * large covering set. */
+    @transient private[graft] lazy val covering: Covering = {
+      val name = naming(webMercatorZoom)
+      val cells =
+        if (usesLookup) broadcastLookup.value.keySet.asScala.toArray
+        else joinSide.select("cell").limit(MaxInSetIds + 1).collect().map(_.getLong(0))
+      val inHand = usesLookup || cells.length <= MaxInSetIds
+      lazy val ids = cells.map(name.cellKey).filter(_ != null).sorted
+      val (es, ns) = (cells.map(_ >> 31), cells.map(_ & 0x7fffffffL))
+      val (lo, hi, bbox) =
+        if (inHand) (ids.headOption.orNull, ids.lastOption.orNull,
+          Option.when(cells.nonEmpty)((es.min, es.max, ns.min, ns.max)))
+        else {
+          val (tid, e, n) = (name.toKey(col("cell")), shiftright(col("cell"), 31),
+            col("cell").bitwiseAND(lit(0x7fffffffL)))
+          val r = joinSide.agg(min(tid), max(tid), min(e), max(e), min(n), max(n)).head()
+          (r.getString(0), r.getString(1), Some((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
+        }
+      Covering(
+        if (lo == null) lit(false)
+        else if (inHand && ids.length <= MaxInSetIds) col("image_id").isInCollection(ids)
+        else col("image_id") >= lo && col("image_id") <= hi, bbox)
+    }
   }
 
+  /** Lookup ceiling on [[PolyIndex.broadcastEstimateBytes]]. The reference
+    * user never picks a strategy (its cache sizes itself,
+    * analyse_polygons.py:203-206), and the driver must not OOM: 2 GiB is
+    * well under driver headroom and Spark's 8 GiB broadcast cap. */
+  private val LookupMaxBytes = 2L << 30
+
   /** Prepares the gardens and keys their blobs by tile cell. The index
-    * fixes two choices once ([[PrepareGarden]]); every later step
-    * (lookup, pruning, zero-fill, checkpoint buckets) reads them from it:
+    * fixes its choices once ([[PrepareGarden]], [[PolyIndex.usesLookup]]);
+    * every later step (lookup, pruning, zero-fill, checkpoint buckets)
+    * reads them from it:
     *  - `webMercatorZoom` is the tile naming: None for OSGB km tile codes,
     *    Some(zoom) for the web-mercator loader path (slippy "z/x/y" tiles,
     *    y-down raster, area in tile² units, image_loaders.py:32-158);
     *  - `grid` is the cover: a hex cover keys each garden by a superset of
-    *    its square cover's tiles, so the later steps are grid-blind. */
+    *    its square cover's tiles, so the later steps are grid-blind.
+    * Only `prepared` is persisted here. */
   def buildIndex(spark: SparkSession, gardens: DataFrame, tileSize: Int,
                  webMercatorZoom: Option[Int] = None,
-                 grid: graft.index.GridSystem = graft.index.GridSystem.Square): PolyIndex = {
-    val prepared = prepareGardens(gardens, tileSize, webMercatorZoom, grid)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cellPolys = prepared
-      .select(explode(col("cells")).as("cell"), col("blob"))
-      .groupBy("cell").agg(collect_list("blob").as("blobs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    PolyIndex(prepared, cellPolys, tileSize, webMercatorZoom)
-  }
+                 grid: graft.index.GridSystem = graft.index.GridSystem.Square): PolyIndex =
+    new PolyIndex(prepareGardens(gardens, tileSize, webMercatorZoom, grid)
+      .persist(StorageLevel.MEMORY_AND_DISK), tileSize, webMercatorZoom, LookupMaxBytes)
 
   /** Per-garden result over OSGB-named tiles: gid, id, uprn, cx, cy,
     * area_m2, sort_key, npix, frac_<kernel>... Other tile namings build
@@ -187,9 +224,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
   def scoreAgainst(spark: SparkSession, index: PolyIndex, tiles: DataFrame,
                    cfg: Config, cirTiles: Option[DataFrame] = None): DataFrame =
     fractionsFromSums(index, fragmentSums(spark, index, tiles, cfg, cirTiles), cfg)
-
-  private def fitsBroadcast(index: PolyIndex, cfg: Config): Boolean =
-    index.broadcastEstimateBytes <= cfg.broadcastMaxBytes
 
   /** What pruning reads of an index's covering tile cells: the image_id
     * predicate and the cells' (eMin, eMax, nMin, nMax), None if empty. */
@@ -205,40 +239,10 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     * stats) plus the exact cell match capture nearly all the benefit. */
   private val MaxInSetIds = 8192
 
-  /** The one source of covering-range pruning, for [[tileIdPredicate]]
-    * and [[graft.sources.SnapshotTiles.coveringRanges]], on any cover
-    * grid (an index's cells are tile cells). The cells are the broadcast
-    * lookup's keys (no Spark job) when the index fits it, otherwise at
-    * most 8,193 of `cellPolys`' cells; above 8,192 one aggregation gives
-    * the id range and the box, so the driver never holds a large
-    * covering set. */
-  private[graft] def covering(index: PolyIndex, cfg: Config): Covering = index.coveringMemo {
-    val name = naming(index.webMercatorZoom)
-    val lookup = fitsBroadcast(index, cfg)
-    val cells =
-      if (lookup) index.broadcastLookup.value.keySet.asScala.toArray
-      else index.cellPolys.select("cell").limit(MaxInSetIds + 1).collect().map(_.getLong(0))
-    val inHand = lookup || cells.length <= MaxInSetIds
-    lazy val ids = cells.map(name.cellKey).filter(_ != null).sorted
-    val (es, ns) = (cells.map(_ >> 31), cells.map(_ & 0x7fffffffL))
-    val (lo, hi, bbox) =
-      if (inHand) (ids.headOption.orNull, ids.lastOption.orNull,
-        Option.when(cells.nonEmpty)((es.min, es.max, ns.min, ns.max)))
-      else {
-        val (tid, e, n) = (name.toKey(col("cell")), shiftright(col("cell"), 31),
-          col("cell").bitwiseAND(lit(0x7fffffffL)))
-        val r = index.cellPolys.agg(min(tid), max(tid), min(e), max(e), min(n), max(n)).head()
-        (r.getString(0), r.getString(1), Some((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-      }
-    Covering(
-      if (lo == null) lit(false)
-      else if (inHand && ids.length <= MaxInSetIds) col("image_id").isInCollection(ids)
-      else col("image_id") >= lo && col("image_id") <= hi, bbox)
-  }
-
   /** Covering-range scan pruning (the reference never reads a tile outside
     * the covering range, image_loaders.py:266-269): a parquet-pushable
-    * image_id predicate from [[covering]].
+    * image_id predicate from [[PolyIndex.covering]]. `cfg` is unused: the
+    * index alone decides.
     *
     * PRECONDITION: image_ids are canonical (the id [[normalizeImageIds]]
     * round-trips to itself; the reference builds paths FROM coordinates,
@@ -246,7 +250,7 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     * OSGB code with the skipped letter 'I') decodes to the same cell yet
     * fails the IN set, so its tile is treated as missing (zero-filled). */
   def tileIdPredicate(index: PolyIndex, cfg: Config): Column =
-    covering(index, cfg).idPredicate
+    index.covering.idPredicate
 
   /** Rewrite image_id to canonical form under the `webMercatorZoom` tile
     * naming (id -> cell -> canonical id); unparseable ids pass through
@@ -263,7 +267,8 @@ object VegPipeline extends org.apache.spark.internal.Logging {
 
   /** The tile frame with [[tileIdPredicate]] applied — the exact pruning
     * [[fragmentSums]] performs internally. A tile it drops is not scored,
-    * so zero-fill counts its pixels as missing. */
+    * so zero-fill counts its pixels as missing. `cfg` is unused, as in
+    * [[tileIdPredicate]]. */
   def pruneTiles(tiles: DataFrame, index: PolyIndex, cfg: Config): DataFrame =
     tiles.where(tileIdPredicate(index, cfg))
 
@@ -321,15 +326,6 @@ object VegPipeline extends org.apache.spark.internal.Logging {
     require(fmts.head != "IRGB" || cirTiles.nonEmpty,
       "IRGB kernels need the CIR tile table for Ir fusion (S3)")
 
-    // automatic path selection: the broadcast-lookup formulation only when
-    // the estimated lookup size fits the configured ceiling; otherwise the
-    // shuffled cell join, without the caller having to know (What a user
-    // of the reference never configures, the engine must not OOM over).
-    val useBroadcast = fitsBroadcast(index, cfg)
-    if (!useBroadcast)
-      logWarning(s"polygon index estimated at ${index.broadcastEstimateBytes} bytes exceeds " +
-        s"broadcastMaxBytes=${cfg.broadcastMaxBytes}; using the shuffled cell join")
-
     // a pre-materialized `cell` column (the bucketed tile-table write
     // path, TileBuckets.write, or a Checkpoint group's bucket key) is used
     // as-is: deriving it again through the key expression would discard
@@ -360,25 +356,17 @@ object VegPipeline extends org.apache.spark.internal.Logging {
       case None => rgbWithCell.withColumn("cir_bytes", lit(null).cast("binary"))
     }
 
-    val (matched, scoreCol) =
-      if (useBroadcast) {
-        // map-side-join formulation: the cell→blobs lookup is an
-        // executor-shared Broadcast built ONCE per index lifetime
-        // (index.broadcastLookup) — a BroadcastHashJoin would rebuild its
-        // HashedRelation per query / per streaming micro-batch. Uncovered
-        // cells yield an empty fragment array, i.e. inner-join semantics.
-        (tilesWithCell, ec(ScoreFragments(
-          ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")),
-          ee(lit(null).cast("array<binary>")),
-          cfg.tileSize, cfg.kernelNames, yDown = index.webMercatorZoom.nonEmpty,
-          metrics = cfg.metrics, lookup = Some(index.broadcastLookup))))
-      } else {
-        (tilesWithCell.join(index.cellPolys, Seq("cell")), ec(ScoreFragments(
-          ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")), ee(col("blobs")),
-          cfg.tileSize, cfg.kernelNames, yDown = index.webMercatorZoom.nonEmpty,
-          metrics = cfg.metrics)))
-      }
-    matched.select(explode(scoreCol).as("s"))
+    // the formulation the index chose. The map-side lookup is an
+    // executor-shared Broadcast built ONCE per index lifetime
+    // (index.broadcastLookup) — a BroadcastHashJoin would rebuild its
+    // HashedRelation per query / per streaming micro-batch; an uncovered
+    // cell yields an empty fragment array, i.e. inner-join semantics.
+    val lookup = index.usesLookup
+    val matched = if (lookup) tilesWithCell else tilesWithCell.join(index.joinSide, Seq("cell"))
+    matched.select(explode(ec(ScoreFragments(ee(col("cell")), ee(col("bytes")), ee(col("cir_bytes")),
+        ee(if (lookup) lit(null).cast("array<binary>") else col("blobs")),
+        cfg.tileSize, cfg.kernelNames, yDown = index.webMercatorZoom.nonEmpty,
+        metrics = cfg.metrics, lookup = Option.when(lookup)(index.broadcastLookup)))).as("s"))
       .select(col("s.gid").as("gid"), col("s.npix").as("npix"), col("s.veg").as("veg"))
   }
 

@@ -7,7 +7,7 @@ import graft.pipeline.VegPipeline
 
 /** Bucketed/sorted tile-table write path: at scale, the tile table is
   * written ONCE bucketed by its join cell, so every subsequent
-  * shuffle-join run (the polygon side over broadcastMaxBytes, too big to
+  * shuffle-join run (a polygon index over the lookup ceiling, too big to
   * broadcast) streams the 100 TB side with NO Exchange: the bucketed
   * scan already carries HashPartitioning(cell, nBuckets) and only the
   * small polygon side shuffles to match. The reference's analogue is
@@ -105,12 +105,12 @@ object SnapshotTiles {
 
   /** The polygon index's covering-cell bounding box as manifest-prune
     * ranges: the `cell_e` and `cell_n` bounds of the same covering cells
-    * the image_id predicate is built from, sharing the index's one memo
-    * (no Spark job when the index fits the default broadcast ceiling).
-    * An empty index yields an impossible range, so the scan plans no real
-    * work. */
+    * the image_id predicate is built from (`PolyIndex.covering`, read
+    * once per index; no Spark job when the index uses the broadcast
+    * lookup). An empty index yields an impossible range, so the scan
+    * plans no real work. */
   def coveringRanges(index: VegPipeline.PolyIndex): Seq[SnapshotTable.Range] =
-    VegPipeline.covering(index, VegPipeline.Config()).bbox match {
+    index.covering.bbox match {
       // The empty sentinel must prune EVERY file's [min,max] stats — a
       // (lo=1, hi=0) range fails to prune files whose stats straddle 0,
       // so they would be planned and scanned for nothing. (MaxValue,

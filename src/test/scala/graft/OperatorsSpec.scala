@@ -445,6 +445,28 @@ class OperatorsSpec extends AnyFunSuite {
       Seq("g5, u6", "g6, u7", "g6, u8", "g7, u9", "g2, u2", "g2, u3", "g2, u4", "g4, u5", "g1, u1"))
   }
 
+  test("writeAll over zero gardens writes every file; non-finite values format as CPython's") {
+    import spark.implicits._
+    // format(nan, '.1f'), format(inf, ',.2f'), format(-inf, ',.2f')
+    assert(PyFormat.fixed1(Double.NaN) == "nan")
+    assert(PyFormat.commaFixed2(Double.PositiveInfinity) == "inf")
+    assert(PyFormat.commaFixed2(Double.NegativeInfinity) == "-inf")
+    val perGarden = Seq((1L, "g1", Seq("u1"), 1.5, 2.5, 10.0, 7L, 100L, 0.25))
+      .toDF("gid", "id", "uprn", "cx", "cy", "area_m2", "sort_key", "npix", "frac_greenleaf").limit(0)
+    val dir = java.nio.file.Files.createTempDirectory("report_empty").toString
+    Reports.writeAll(perGarden, Seq("greenleaf"), "t", s"$dir/run-", "EPSG:27700", warnings = Seq("w1"))
+    def read(file: String) =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/run-t-greenleaf-$file"))
+    assert(read("summary.txt").linesIterator.toSeq == Seq(
+      "Total surface area: 0.00m²",
+      "Total vegetation surface area from greenleaf: 0.00m² (nan%)",
+      "Garden centroid output with co-ordinate reference system [EPSG:27700]"))
+    assert(read("vegetation.csv") == "feature id, garden centroid x, garden centroid y, " +
+      "surface area m², fraction classed as vegetation by greenleaf\n")
+    assert(read("toid2uprn.csv") == "feature id, feature uprn\n")
+    assert(read("warnings.txt") == "w1\n")
+  }
+
   test("debug PNG sink writes garden/mask/overlay images (S11)") {
     val dir = java.nio.file.Files.createTempDirectory("dbg").toString
     val gardens = Synthetic.gardens(spark, 10, 4, 4)

@@ -149,8 +149,9 @@ class PipelineSpec extends AnyFunSuite {
       names.indices.foreach(i => assert(fracs(i) == o.fracs(i), s"${names(i)} for ${g.id}"))
     }
     // and a hex run over the shuffle-join path agrees too
-    val hxShuffle = keyed(VegPipeline.scoreAgainst(spark, hexIdx, tiles,
-      cfg.copy(broadcastMaxBytes = 0)).collect())
+    val hexJoinIdx =
+      VegPipeline.buildIndex(spark, gardens, ts, grid = graft.index.GridSystem.Hex(1.7)).underCeiling(0L)
+    val hxShuffle = keyed(VegPipeline.scoreAgainst(spark, hexJoinIdx, tiles, cfg).collect())
     assert(hxShuffle == hx, "hex shuffle-join path diverged from broadcast path")
 
     // zero-fill on, with a block of tiles dropped: hex equals square and
@@ -159,11 +160,11 @@ class PipelineSpec extends AnyFunSuite {
                         n <- Synthetic.BaseN + 1 to Synthetic.BaseN + 2) yield (e, n)).toSet
     val holed = tiles.where(!org.apache.spark.sql.functions.col("image_id").isin(
       missing.toSeq.map { case (e, n) => graft.geo.TileCode.fromEastingsNorthings(e, n) }: _*))
-    def filled(c: VegPipeline.Config) =
-      keyed(VegPipeline.scoreAgainst(spark, hexIdx, holed, c.copy(handleMissingTiles = true)).collect())
+    def filled(idx: VegPipeline.PolyIndex) =
+      keyed(VegPipeline.scoreAgainst(spark, idx, holed, cfg.copy(handleMissingTiles = true)).collect())
     val sqFill = keyed(VegPipeline.run(spark, gardens, holed, cfg.copy(handleMissingTiles = true)).collect())
-    assert(filled(cfg) == sqFill, "hex zero-fill diverged")
-    assert(filled(cfg.copy(broadcastMaxBytes = 0)) == sqFill,
+    assert(filled(hexIdx) == sqFill, "hex zero-fill diverged")
+    assert(filled(hexJoinIdx) == sqFill,
       "hex shuffle-join zero-fill diverged")
     val oracleFill = oracleResults(gardenRows, names, missing)
     assert(gardenRows.exists(g => oracleFill(g.id).fracs != oracle(g.id).fracs),
@@ -177,21 +178,24 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("hex-grid superset matches decode exactly the square grid's tiles") {
-    // a tile whose hex-matched polygons all miss it has an empty window
-    // union and is not decoded: both grids decode exactly the tiles some
-    // polygon window meets
+    // a hex index keys gardens by extra tiles their crop boxes miss;
+    // scoring skips those blobs, so both grids decode exactly the tiles
+    // some polygon window meets and score the same fragments
     val gardens = Synthetic.gardens(spark, 40, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
-    def decoded(grid: graft.index.GridSystem): (Long, Long) = {
+    def decoded(grid: graft.index.GridSystem): (Long, Long, Long) = {
       val m = PipelineMetrics.create(spark)
-      VegPipeline.scoreAgainst(spark, VegPipeline.buildIndex(spark, gardens, ts, grid = grid), tiles,
+      val idx = VegPipeline.buildIndex(spark, gardens, ts, grid = grid)
+      VegPipeline.scoreAgainst(spark, idx, tiles,
         VegPipeline.Config(tileSize = ts, handleMissingTiles = false, metrics = Some(m))).collect()
-      (m.tilesDecoded.value, m.fragmentsScored.value)
+      val keyed = idx.prepared.selectExpr("sum(size(cells))").head().getLong(0)
+      (m.tilesDecoded.value, m.fragmentsScored.value, keyed)
     }
-    val (sqTiles, sqFrags) = decoded(graft.index.GridSystem.Square)
-    val (hxTiles, hxFrags) = decoded(graft.index.GridSystem.Hex(1.7))
-    assert(hxFrags > sqFrags, "fixture should produce extra hex fragments")
+    val (sqTiles, sqFrags, sqKeyed) = decoded(graft.index.GridSystem.Square)
+    val (hxTiles, hxFrags, hxKeyed) = decoded(graft.index.GridSystem.Hex(1.7))
+    assert(hxKeyed > sqKeyed, "fixture should key extra hex (garden, tile) pairs")
     assert(sqTiles > 0 && hxTiles == sqTiles)
+    assert(hxFrags == sqFrags, "hex scoring scored blobs that miss their tile")
   }
 
   test("windowUnion bounds every fragment window in both row orientations") {
@@ -276,8 +280,8 @@ class PipelineSpec extends AnyFunSuite {
     // on the shuffled path the bounded collect finds more than 8,192
     // cells, so one aggregation gives the same range and the same box
     import graft.sources.{SnapshotTable, SnapshotTiles}
-    val aggIdx = VegPipeline.buildIndex(spark, Seq(big).toDF(), bigTs)
-    assert(VegPipeline.tileIdPredicate(aggIdx, bigCfg.copy(broadcastMaxBytes = 0)).toString ==
+    val aggIdx = VegPipeline.buildIndex(spark, Seq(big).toDF(), bigTs).underCeiling(0L)
+    assert(VegPipeline.tileIdPredicate(aggIdx, bigCfg).toString ==
       rangePred.toString)
     assert(SnapshotTiles.coveringRanges(aggIdx) == Seq(SnapshotTable.Range("cell_e", e0, e0 + side - 1),
       SnapshotTable.Range("cell_n", n0, n0 + side - 1)))
@@ -331,14 +335,14 @@ class PipelineSpec extends AnyFunSuite {
       s"unexpected per-query broadcast exchange:\n$plan")
   }
 
-  test("shuffle-join path (broadcastMaxBytes=0) produces identical results") {
+  test("shuffle-join path produces identical results") {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     val a = VegPipeline.run(spark, gardens, tiles,
       VegPipeline.Config(tileSize = ts))
       .select("id", "npix", "frac_greenleaf").collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    val b = VegPipeline.run(spark, gardens, tiles,
-      VegPipeline.Config(tileSize = ts, broadcastMaxBytes = 0))
+    val b = VegPipeline.scoreAgainst(spark, VegPipeline.buildIndex(spark, gardens, ts).underCeiling(0L),
+      tiles, VegPipeline.Config(tileSize = ts))
       .select("id", "npix", "frac_greenleaf").collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(a.sameElements(b))
   }
@@ -346,7 +350,7 @@ class PipelineSpec extends AnyFunSuite {
   test("broadcast and shuffled paths zero-fill the same missing tiles") {
     import org.apache.spark.sql.functions.col
     // the broadcast path takes the covered cells from the lookup's keys,
-    // the shuffled one (broadcastMaxBytes = 0) from cellPolys
+    // the shuffled one (an index built under a 0-byte ceiling) from cellPolys
     def rows(df: org.apache.spark.sql.DataFrame, names: Seq[String]) =
       df.select(col("id") +: col("npix") +: names.map(n => col(s"frac_$n")): _*).collect()
         .map(r => (r.getString(0), r.getLong(1), names.indices.map(i => r.getDouble(2 + i))))
@@ -362,7 +366,8 @@ class PipelineSpec extends AnyFunSuite {
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts).where(!col("image_id").isin(dropped: _*))
     def rgb(cfg: VegPipeline.Config) = rows(VegPipeline.run(spark, gardens, tiles, cfg), rgbNames)
     val filled = rgb(rgbCfg)
-    assert(filled == rgb(rgbCfg.copy(broadcastMaxBytes = 0)))
+    val joinIdx = VegPipeline.buildIndex(spark, gardens, ts).underCeiling(0L)
+    assert(filled == rows(VegPipeline.scoreAgainst(spark, joinIdx, tiles, rgbCfg), rgbNames))
     assert(filled.map(_._2).sum > rgb(rgbCfg.copy(handleMissingTiles = false)).map(_._2).sum,
       "fixture should zero-fill some pixels")
 
@@ -371,17 +376,20 @@ class PipelineSpec extends AnyFunSuite {
     val irgbCfg = VegPipeline.Config(tileSize = ts, kernelNames = irgbNames)
     val rgb3 = Synthetic.tiles(spark, 3, 3, ts)
       .where(col("image_id") =!= code(Synthetic.BaseE + 1, Synthetic.BaseN + 1))
-    def irgb(cfg: VegPipeline.Config) = rows(VegPipeline.run(spark, Synthetic.gardens(spark, 12, 3, 3),
-      rgb3, cfg, cirTiles = Some(Synthetic.tilesCir(spark, 3, 3, ts))), irgbNames)
-    assert(irgb(irgbCfg) == irgb(irgbCfg.copy(broadcastMaxBytes = 0)))
+    val gardens3 = Synthetic.gardens(spark, 12, 3, 3)
+    def irgb(idx: VegPipeline.PolyIndex) = rows(VegPipeline.scoreAgainst(spark, idx,
+      rgb3, irgbCfg, cirTiles = Some(Synthetic.tilesCir(spark, 3, 3, ts))), irgbNames)
+    assert(irgb(VegPipeline.buildIndex(spark, gardens3, ts)) ==
+      irgb(VegPipeline.buildIndex(spark, gardens3, ts).underCeiling(0L)))
 
-    // Checkpoint.fractions over the same partials
-    val dir = java.nio.file.Files.createTempDirectory("ckpt_paths").toString
-    val idx = VegPipeline.buildIndex(spark, gardens, ts)
-    Checkpoint.runGroups(spark, idx, tiles, rgbCfg, dir, buckets = 4, groupSize = 2)
-    def ckpt(cfg: VegPipeline.Config) = rows(Checkpoint.fractions(spark, idx, cfg, dir), rgbNames)
-    assert(ckpt(rgbCfg) == filled)
-    assert(ckpt(rgbCfg.copy(broadcastMaxBytes = 0)) == filled)
+    // Checkpoint groups scored through either formulation
+    def ckpt(idx: VegPipeline.PolyIndex) = {
+      val dir = java.nio.file.Files.createTempDirectory("ckpt_paths").toString
+      Checkpoint.runGroups(spark, idx, tiles, rgbCfg, dir, buckets = 4, groupSize = 2)
+      rows(Checkpoint.fractions(spark, idx, rgbCfg, dir), rgbNames)
+    }
+    assert(ckpt(VegPipeline.buildIndex(spark, gardens, ts)) == filled)
+    assert(ckpt(VegPipeline.buildIndex(spark, gardens, ts).underCeiling(0L)) == filled)
   }
 
   test("zero-fill scans each tile table once") {
@@ -399,9 +407,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(cfg.handleMissingTiles, "test must exercise the batch default")
     val gardens = Synthetic.gardens(spark, 12, 3, 3)
     for (grid <- Seq(graft.index.GridSystem.Square, graft.index.GridSystem.Hex(1.7));
-         idx = VegPipeline.buildIndex(spark, gardens, ts, grid = grid);
-         c <- Seq(cfg, cfg.copy(broadcastMaxBytes = 0))) {
-      val res = VegPipeline.scoreAgainst(spark, idx, spark.read.parquet(s"$dir/rgb"), c,
+         (path, idx) <- Seq("lookup" -> VegPipeline.buildIndex(spark, gardens, ts, grid = grid),
+           "cell join" -> VegPipeline.buildIndex(spark, gardens, ts, grid = grid).underCeiling(0L))) {
+      val res = VegPipeline.scoreAgainst(spark, idx, spark.read.parquet(s"$dir/rgb"), cfg,
         Some(spark.read.parquet(s"$dir/cir")))
       res.collect()
       val helper = new AdaptiveSparkPlanHelper {}
@@ -409,7 +417,7 @@ class PipelineSpec extends AnyFunSuite {
       val scans = helper.collect(plan) {
         case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName).mkString(",")
       }
-      val where = s"$grid, broadcastMaxBytes=${c.broadcastMaxBytes}"
+      val where = s"$grid, $path"
       assert(scans.sorted == Seq("cir", "rgb"), s"tile scans ($where)")
       // the tiles are looked up by their own cell, whatever the grid
       assert(helper.flatMap(plan)(_.expressions.flatMap(_.collect { case p: PointCell => p })).isEmpty,
@@ -474,9 +482,7 @@ class PipelineSpec extends AnyFunSuite {
       while (!groups.contains("marker")) Thread.sleep(5)
       val cached = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState
         .cacheManager.lookupCachedData(idx.cellPolys.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      assert(cached.nonEmpty, "cellPolys stays registered as persisted")
-      assert(!cached.get.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded,
-        "the broadcast path computed cellPolys")
+      assert(cached.isEmpty, "a lookup index registered cellPolys as persisted")
       val jobs = groups.toArray.count(_ == "op")
       assert(jobs <= 8, s"$jobs Spark jobs for one dense-like job")
     } finally sc.removeSparkListener(listener)
@@ -485,10 +491,9 @@ class PipelineSpec extends AnyFunSuite {
   test("oversized polygon index auto-falls-back to the shuffled cell join") {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
-    val idx = VegPipeline.buildIndex(spark, gardens, ts)
+    val idx = VegPipeline.buildIndex(spark, gardens, ts).underCeiling(64L)
     assert(idx.broadcastEstimateBytes > 64, "estimate should exceed the tiny test ceiling")
-    val small = VegPipeline.Config(tileSize = ts, handleMissingTiles = false,
-      broadcastMaxBytes = 64)
+    val small = VegPipeline.Config(tileSize = ts, handleMissingTiles = false)
     val sums = VegPipeline.fragmentSums(spark, idx, tiles, small)
     val plan = sums.queryExecution.executedPlan.toString
     // the broadcast-lookup formulation is join-free; over-ceiling must
@@ -498,8 +503,8 @@ class PipelineSpec extends AnyFunSuite {
     val a = VegPipeline.scoreAgainst(spark, idx, tiles, small)
       .select("gid", "npix", "frac_greenleaf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    val b = VegPipeline.scoreAgainst(spark, idx, tiles,
-        small.copy(broadcastMaxBytes = Long.MaxValue))
+    val b = VegPipeline.scoreAgainst(spark,
+        VegPipeline.buildIndex(spark, gardens, ts).underCeiling(Long.MaxValue), tiles, small)
       .select("gid", "npix", "frac_greenleaf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(a.sameElements(b))
@@ -555,9 +560,8 @@ class PipelineSpec extends AnyFunSuite {
         Synthetic.tiles(spark, gridW, gridH, ts), table, nBuckets = 8)
       val bucketed = graft.sources.TileBuckets.read(spark, table)
       val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
-      val idx = VegPipeline.buildIndex(spark, gardens, ts)
-      val cfg = VegPipeline.Config(tileSize = ts, broadcastMaxBytes = 0,
-        handleMissingTiles = false)
+      val idx = VegPipeline.buildIndex(spark, gardens, ts).underCeiling(0L)
+      val cfg = VegPipeline.Config(tileSize = ts, handleMissingTiles = false)
       val sums = VegPipeline.fragmentSums(spark, idx, bucketed, cfg)
 
       val plan = sums.queryExecution.executedPlan
@@ -582,7 +586,7 @@ class PipelineSpec extends AnyFunSuite {
       val viaBuckets = VegPipeline.fractionsFromSums(idx, sums, cfg)
         .select("id", "npix", "frac_greenleaf").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-      val viaBroadcast = VegPipeline.scoreAgainst(spark, idx,
+      val viaBroadcast = VegPipeline.scoreAgainst(spark, VegPipeline.buildIndex(spark, gardens, ts),
           Synthetic.tiles(spark, gridW, gridH, ts),
           VegPipeline.Config(tileSize = ts, handleMissingTiles = false))
         .select("id", "npix", "frac_greenleaf").collect()
@@ -718,11 +722,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(ranges == Seq(SnapshotTable.Range("cell_e", es.min, es.max),
       SnapshotTable.Range("cell_n", ns.min, ns.max)))
     // the shuffled path collects cellPolys' cells: the same set; and
-    // coveringRanges reads the memo that source filled, with no job
+    // coveringRanges reads the covering the index kept, with no job
     // (building the broadcast lookup instead would collect `prepared`)
-    val shuffled = cfg.copy(broadcastMaxBytes = 0)
-    val idx2 = VegPipeline.buildIndex(spark, gardens, ts)
-    assert(VegPipeline.tileIdPredicate(idx2, shuffled).toString == pred.toString)
+    val idx2 = VegPipeline.buildIndex(spark, gardens, ts).underCeiling(0L)
+    assert(VegPipeline.tileIdPredicate(idx2, cfg).toString == pred.toString)
     assert(jobsIn(SnapshotTiles.coveringRanges(idx2)) == ((ranges, 0)))
     // and an index covering nothing plans an impossible range
     val none = VegPipeline.buildIndex(spark, gardens.limit(0), ts)
@@ -833,10 +836,11 @@ class PipelineSpec extends AnyFunSuite {
       // so the shuffled run takes its covering cells from cellPolys
       val cfg = VegPipeline.Config(tileSize = ts, kernelNames = names,
         handleMissingTiles = dropped.nonEmpty)
-      Seq(cfg, cfg.copy(broadcastMaxBytes = 0)).foreach { c =>
-        val path = s"$dropped, broadcastMaxBytes=${c.broadcastMaxBytes}"
-        val res = VegPipeline.scoreAgainst(spark,
-          VegPipeline.buildIndex(spark, gardens, ts, Some(zoom)), tiles, c).collect()
+      Seq("lookup" -> VegPipeline.buildIndex(spark, gardens, ts, Some(zoom)),
+          "cell join" -> VegPipeline.buildIndex(spark, gardens, ts, Some(zoom)).underCeiling(0L)
+      ).foreach { case (p, idx) =>
+        val path = s"$dropped, $p"
+        val res = VegPipeline.scoreAgainst(spark, idx, tiles, cfg).collect()
         assert(res.length == 12)
         res.foreach { row =>
           val o = oracle(row.getAs[String]("id"))
@@ -914,9 +918,8 @@ class PipelineSpec extends AnyFunSuite {
     val gardens = Synthetic.gardens(spark, 20, gridW, gridH)
     val tiles = Synthetic.tiles(spark, gridW, gridH, ts)
     val m = graft.pipeline.PipelineMetrics.create(spark)
-    val shuffled = VegPipeline.run(spark, gardens, tiles,
-      VegPipeline.Config(tileSize = ts, broadcastMaxBytes = 0,
-        handleMissingTiles = false, metrics = Some(m)))
+    val shuffled = VegPipeline.scoreAgainst(spark, VegPipeline.buildIndex(spark, gardens, ts).underCeiling(0L),
+      tiles, VegPipeline.Config(tileSize = ts, handleMissingTiles = false, metrics = Some(m)))
       .select("id", "npix", "frac_greenleaf").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     val plain = VegPipeline.run(spark, gardens, tiles,
